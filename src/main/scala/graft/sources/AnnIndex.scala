@@ -36,6 +36,15 @@ import graft.queries.Similarity
   * `Similarity.lshTopK` at the same banding. */
 object AnnIndex {
 
+  private val TablesProp = "graft.lsh.tables"
+  private val BitsProp = "graft.lsh.bits"
+
+  /** The ANN family: rows keyed by vec_id, bucketed by `sig`, identity =
+    * the recorded banding. No derived state — a purge IS the whole
+    * delete. */
+  private[sources] val Family = StoreFamily("AnnIndex", "vec_id",
+    "sig", Seq(TablesProp, BitsProp), "embeddings", _ => "ann")
+
   /** Compute signatures for every corpus vector and persist them
     * bucketed by `sig` in the session catalog (the [[Bucketing]]
     * warehouse rules apply: one write, every later probe prunes). The
@@ -47,22 +56,16 @@ object AnnIndex {
     Bucketing.writeBucketed(
       Similarity.signatureRows(spark, dir, tables, bits),
       table, "sig", buckets)
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-      s"'graft.lsh.tables' = '$tables', 'graft.lsh.bits' = '$bits')")
+    Bucketing.setProps(spark, table, Family.identityOf((tables, bits)))
   }
 
   /** Build-once memo for dir-derived indexes — the deployment shape the
-    * registered q135 runs through (PostingsIndex.ensureFor's rule on the
-    * vector side): first call builds, later calls return the table name
-    * for free; keyed on the embeddings listing signature so an
-    * in-process corpus rewrite rebuilds instead of probing stale
-    * signatures, with (tables, bits, buckets) folded into the memo key
-    * AND the table name ([[IndexMemo]]) so a different banding can
-    * never be served a table built at another. */
+    * registered q135 runs through ([[StoreFamily.ensureFor]]), with
+    * (tables, bits, buckets) in the memo key AND the table name, so a
+    * different banding can never be served a table built at another. */
   def ensureFor(spark: SparkSession, dir: String, tag: String,
       tables: Int = 4, bits: Int = 8, buckets: Int = 16): String =
-    IndexMemo.ensure(s"ann|$tag|$dir|$tables|$bits|$buckets",
-      graft.Tables.listingSignature(dir, "embeddings"), s"ann_$tag")(
+    StoreFamily.ensureFor(Family, "ann", tag, dir, Seq(tables, bits, buckets))(
       t => build(spark, dir, t, tables, bits, buckets))
 
   /** The banding the table was built at — PUBLIC so a serving-path
@@ -73,7 +76,7 @@ object AnnIndex {
     * recall loss the append require() guards, closed on the query side
     * by reading the truth from the catalog. */
   def recordedBanding(spark: SparkSession, table: String): (Int, Int) =
-    banding(spark, table)
+    bandingOf(StoreFamily.recorded(Family, spark, table))
 
   /** RE-BAND maintenance — the ANN analog of IvfIndex.refit, for the
     * banding-transition rule instead of fit drift:
@@ -82,123 +85,59 @@ object AnnIndex {
     * transition, SCALING.md round 15), so a store that grew past its
     * built banding probes at the wrong occupancy. Every store row
     * carries `v` (the self-contained-scan trade), so rebanding needs NO
-    * corpus re-read: one pass re-signs the store's distinct vectors at
-    * the new banding and the staged swap replaces rows AND the recorded
-    * banding properties in the same table — unlike the IVF pair there
-    * is no torn-state window at all (one table, one swap instant; the
-    * banding props land on the staging table before the swap). User
-    * properties (the streaming loop's batch marker) carry through.
-    * Single-writer; probes may retry across the swap instant. Spec:
-    * reband == fresh build at the new banding, bit-for-bit. */
+    * corpus re-read: one [[StoreFamily.rewrite]] re-signs the store's
+    * live vectors at the new banding and swaps rows AND the recorded
+    * banding in the same table — no torn-state window. Spec: reband ==
+    * fresh build at the new banding, bit-for-bit, with rows another
+    * session committed included. */
   def reband(spark: SparkSession, table: String,
       tables: Int, bits: Int): Unit = {
-    banding(spark, table) // refuse a table this object did not build
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val buckets = meta.bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(
-        s"$table carries no bucket spec — not built by AnnIndex.build"))
-    val carried = meta.properties.filterNot { case (k, _) =>
-      k.startsWith("spark.") || k.startsWith("transient_") ||
-        k == "comment" || k == "owner"
+    StoreFamily.open(Family, spark, table)
+    // one row per vector: every vector owns a row in table 0
+    StoreFamily.rewrite(spark, table,
+        props = Family.identityOf((tables, bits))) { live =>
+      Similarity.signatureRowsOf(live.filter(col("tbl") === 0)
+        .select("vec_id", "label", "v", "nrm"), tables, bits)
     }
-    // one row per vector: every vector owns a row in table 0; LIVE rows
-    // only — a full rewrite re-signs the store's logical membership and
-    // folds the pending tombstones (cleared after the swap)
-    val vecs = Bucketing.liveRows(spark, table, "vec_id")
-      .filter(col("tbl") === 0)
-      .select("vec_id", "label", "v", "nrm")
-    val resigned = Similarity.signatureRowsOf(vecs, tables, bits)
-      .localCheckpoint(true)
-    Bucketing.stagedSwapIn(spark, table, resigned, "sig", buckets,
-      carried ++ Map("graft.lsh.tables" -> tables.toString,
-        "graft.lsh.bits" -> bits.toString))
-    Bucketing.clearTombstones(spark, table)
   }
 
-  /** DELETE vectors from the store — the retroactive-removal verb
-    * ([[graft.sources.Bucketing.deleteByKey]]'s contract: anti-join
-    * staged rewrite, idempotent on absent ids, user properties — the
-    * recorded banding, the streaming loop's batch marker — carried, swap-
-    * instant reader outage). The signature-row layout keeps no derived
-    * statistics, so the purge IS the whole operation: after the swap a
-    * probe's candidate stream simply never collides with the removed
-    * vectors, row-identical to a store rebuilt over the survivors
-    * (DeleteSpec pins it). `vecIds` is any one-column frame of vec ids. */
-  def delete(spark: SparkSession, table: String, vecIds: DataFrame): Unit = {
-    banding(spark, table) // refuse a table this object did not build
-    spark.catalog.refreshTable(table)
-    Bucketing.deleteByKey(spark, table, "vec_id", vecIds)
-  }
+  /** DELETE vectors from the store — [[StoreFamily.delete]]; the
+    * signature-row layout keeps no derived statistics, so the purge is
+    * the whole operation. `vecIds` is any one-column frame of vec ids. */
+  def delete(spark: SparkSession, table: String, vecIds: DataFrame): Unit =
+    StoreFamily.delete(Family, spark, table, vecIds)
 
-  /** DEFERRED delete — [[graft.sources.PostingsIndex.deleteDeferred]]'s
-    * O(condemned) economics on the vector family: the condemned vec_ids
-    * append to the tombstone side-table; probes subtract them as a
-    * broadcast anti-join; the physical purge rides the next full
-    * rewrite ([[graft.sources.Bucketing.compact]], eager [[delete]],
-    * [[reband]], [[reindexVectors]]). No derived statistics here, so
-    * the append IS the whole operation; probes after are row-identical
-    * to the eager verb's (DeleteSpec). Idempotent: only ids with live
-    * rows tombstone. */
+  /** DEFERRED delete — [[StoreFamily.deleteDeferred]] on the vector
+    * family; the tombstone append is the whole operation. */
   def deleteDeferred(spark: SparkSession, table: String,
-      vecIds: DataFrame): Unit = {
-    banding(spark, table) // refuse a table this object did not build
-    spark.catalog.refreshTable(table)
-    val ids = vecIds
-      .select(vecIds(vecIds.columns.head).cast("long").as("vec_id"))
-      .distinct().localCheckpoint(true)
-    val doomed = Bucketing.liveRows(spark, table, "vec_id")
-      .join(ids, Seq("vec_id"), "left_semi")
-      .select("vec_id").distinct().localCheckpoint(true)
-    if (!doomed.isEmpty)
-      Bucketing.tombstone(spark, table, "vec_id", doomed)
-  }
+      vecIds: DataFrame): Unit =
+    StoreFamily.deleteDeferred(Family, spark, table, vecIds)
 
-  /** UPSERT/re-crawl ([[graft.sources.PostingsIndex.reindex]]'s rule on
-    * the vector family): the SAME vec_id arrives with a CHANGED
-    * embedding (the source re-crawled and re-embedded) — the append
-    * contract's disjoint-ids rule excludes it, and a caller-composed
-    * delete+append pays two rewrites with a neither-version window. One
-    * staged rewrite ([[Bucketing.upsertByKey]]): the batch re-signs at
-    * the RECORDED banding, old signature rows for its ids drop, pending
-    * tombstones fold. Probes after equal a fresh build over the updated
-    * corpus (ReindexSpec). */
+  /** UPSERT/re-crawl — [[StoreFamily.reindex]]: the SAME vec_ids arrive
+    * with CHANGED embeddings; the batch re-signs at the RECORDED banding
+    * and replaces the old signature rows in one staged rewrite. */
   def reindexVectors(table: String, embeddings: DataFrame): Unit = {
     val spark = embeddings.sparkSession
-    val (tables, bits) = banding(spark, table)
-    spark.catalog.refreshTable(table)
+    val (tables, bits) = bandingOf(StoreFamily.open(Family, spark, table))
     val normed = Similarity.normedVectorsOf(spark, embeddings)
       .localCheckpoint(true)
-    require(normed.groupBy("vec_id").count().filter(col("count") > 1).isEmpty,
-      "reindex batch carries duplicate vec_ids — one embedding per vector " +
-        "is the re-crawl contract (dedupe the batch first)")
-    Bucketing.upsertByKey(spark, table, "vec_id",
-      Similarity.signatureRowsOf(normed, tables, bits),
-      replacedKeys = Some(normed.select("vec_id")))
+    StoreFamily.reindex(Family, spark, table, normed.select("vec_id"),
+      Similarity.signatureRowsOf(normed, tables, bits))
   }
 
-  private def banding(spark: SparkSession, table: String): (Int, Int) = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    (props.get("graft.lsh.tables"), props.get("graft.lsh.bits")) match {
-      case (Some(t), Some(b)) => (t.toInt, b.toInt)
-      case _ => throw new IllegalStateException(
-        s"$table carries no graft.lsh.* banding properties — not built by AnnIndex.build")
-    }
-  }
+  private def bandingOf(p: Map[String, String]): (Int, Int) =
+    (p(TablesProp).toInt, p(BitsProp).toInt)
 
   /** Incremental maintenance — the ingest path: compute signatures for a
-    * NEW batch of vectors and append them honoring the table's bucket
-    * spec (datasource bucketed tables bucket on insert, so probes keep
-    * pruning over the union with no rebuild). The batch's (tables, bits)
-    * are CHECKED against the build's recorded properties — signatures
-    * from a different banding would silently never collide, a recall
-    * loss with no error, so a mismatch fails here instead. Remaining
-    * caller contract: the new vec_ids are disjoint from the indexed set
-    * (the q81/q126 ingest gate runs upstream of indexing — pinned
-    * end-to-end by IngestIndexSpec). insertInto is POSITIONAL; [[build]]
-    * and this method both emit [[Similarity.signatureRows]]'s column
-    * order. */
+    * NEW batch of vectors and append them bucket-aligned
+    * ([[Bucketing.insertAligned]]; datasource bucketed tables bucket on
+    * insert, so probes keep pruning over the union with no rebuild). The
+    * batch's (tables, bits) are CHECKED against the build's recorded
+    * properties — signatures from a different banding would silently
+    * never collide, a recall loss with no error, so a mismatch fails
+    * here instead. Remaining caller contract: the new vec_ids are
+    * disjoint from the indexed set (the q81/q126 ingest gate runs
+    * upstream of indexing — pinned end-to-end by IngestIndexSpec). */
   def append(spark: SparkSession, dir: String, table: String,
       tables: Int = 4, bits: Int = 8): Unit =
     appendVectors(table, graft.Tables.embeddings(spark, dir), tables, bits)
@@ -212,20 +151,12 @@ object AnnIndex {
   def appendVectors(table: String, embeddings: DataFrame,
       tables: Int = 4, bits: Int = 8): Unit = {
     val spark = embeddings.sparkSession
-    val built = banding(spark, table)
+    val built = recordedBanding(spark, table)
     require(built == ((tables, bits)),
       s"$table was built at banding $built but append was asked for " +
         s"(${tables}, ${bits}) — mismatched signatures never collide")
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(throw new IllegalStateException(
-        s"$table carries no bucket spec — not built by AnnIndex.build"))
-    // bucket-aligned insert (the PostingsIndex.appendDocs rule): one
-    // file per touched bucket per append, not tasks × buckets
-    Similarity.signatureRowsOf(
-        Similarity.normedVectorsOf(spark, embeddings), tables, bits)
-      .repartition(buckets, col("sig"))
-      .write.mode("append").insertInto(table)
+    Bucketing.insertAligned(spark, table, Similarity.signatureRowsOf(
+      Similarity.normedVectorsOf(spark, embeddings), tables, bits))
   }
 
   /** Top-k nearest (exact re-rank over bucket-pruned candidates) for the
@@ -241,11 +172,11 @@ object AnnIndex {
     * index exactly once, pruned. */
   def topK(spark: SparkSession, table: String, nAnchors: Int,
       k: Int): DataFrame = {
-    // refresh BEFORE resolving the anchor scan: topKFor's own refresh
-    // runs after this spark.table call has captured a file listing, and
-    // a stale anchor side against a fresh candidate side would make the
-    // self-probe internally inconsistent under concurrent appends
-    spark.catalog.refreshTable(table)
+    // guard + refresh BEFORE resolving the anchor scan: topKFor's own
+    // refresh runs after this spark.table call has captured a file
+    // listing, and a stale anchor side against a fresh candidate side
+    // would make the self-probe inconsistent under concurrent appends
+    StoreFamily.open(Family, spark, table)
     // LIVE anchors only: a tombstoned vector must not probe on behalf
     // of the more-like-this batch (the candidate side subtracts in
     // probeCore; the anchor side subtracts here)
@@ -262,15 +193,10 @@ object AnnIndex {
     * by the anchors' signature literals.
     * `signedAt` is the banding the caller signed `anchorRows` at (the
     * [[recordedBanding]] it read): when passed, the probe RE-CHECKS it
-    * against the catalog after the anchor side executes — a [[reband]]
-    * landing between the caller's banding read and the probe (the
-    * signing job is seconds of Spark work — the live window) would make
-    * the old-banding signatures collide with NOTHING, a silently-empty
-    * result where the family's contract promises loud-retry (the
-    * BandIndex.requireBandingStable rule on the serving path). The
-    * residual window — a reband after this check, before the lazy scan
-    * executes — fails LOUD by construction: the swap's DROP deletes the
-    * old table's files, so a stale captured listing dies on read. */
+    * against the catalog after the anchor side executes
+    * ([[StoreFamily.requireStable]]): a [[reband]] landing between the
+    * caller's banding read and the probe would otherwise make the
+    * old-banding signatures collide with NOTHING. */
   def topKFor(spark: SparkSession, table: String, anchorRows: DataFrame,
       k: Int, signedAt: Option[(Int, Int)] = None,
       sorted: Boolean = true): DataFrame =
@@ -319,10 +245,7 @@ object AnnIndex {
       anchorRows: DataFrame, k: Int, crossLabel: Boolean,
       signedAt: Option[(Int, Int)] = None,
       sorted: Boolean = true): DataFrame = {
-    // read-your-committed-appends: a writer in another session (the
-    // streaming ingestion pattern) cannot invalidate this session's
-    // cached file listing — refresh before probing (PostingsIndex rule)
-    spark.catalog.refreshTable(table)
+    StoreFamily.open(Family, spark, table)
     // materialize the anchor rows ONCE (they are query-scale by the
     // q122/q125 contract): the consumers below — the driver-side
     // signature collect, the slim broadcast, the payload broadcast —
@@ -362,14 +285,8 @@ object AnnIndex {
     // signatures would collide with nothing (silent-empty, where the
     // contract promises loud-retry). The residual window past this
     // check fails loud on its own (the swap deletes the old files).
-    signedAt.foreach { sa =>
-      val now = banding(spark, table)
-      if (now != sa)
-        throw new IllegalStateException(
-          s"$table was rebanded mid-probe ($sa -> $now) — the anchors " +
-            "signed at the old banding and their collisions are void; " +
-            "retry the probe (sign at the new recordedBanding)")
-    }
+    signedAt.foreach(StoreFamily.requireStable(table, _,
+      recordedBanding(spark, table)))
     val baseCond = col("tbl") === col("qtbl") && col("sig") === col("qsig") &&
       col("vec_id") =!= col("query_id")
     val cond =
@@ -396,9 +313,9 @@ object AnnIndex {
     val cos = Similarity.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id"))
-    Bucketing.subtractTombstones(spark, table, "vec_id",
-        spark.table(table)
-          .filter(col("sig").isin(probeSigs: _*))) // bucket pruning HERE
+    // bucket pruning HERE: anchors are query-scale by contract, so the
+    // signatures always ship as the literal
+    StoreFamily.probeScan(Family, spark, table, Some(probeSigs))
       .join(broadcast(slim), cond)
       .select(outKeys :+ col("v") :+ col("nrm"): _*)
       .join(broadcast(payload), Seq("query_id"))

@@ -54,6 +54,11 @@ object BandIndex {
     * change cannot silently append incomparable rows. */
   private val Banding = (3, 12, 4)
 
+  /** The band family: rows keyed by doc_id, bucketed by `sig`, identity
+    * = the recorded banding. No derived state. */
+  private[sources] val Family = StoreFamily("BandIndex", "doc_id", "sig",
+    Seq(ShingleProp, HashesProp, BandsProp), "documents", _ => "band")
+
   /** Compute band rows for the corpus docs of `dir` (restricted to
     * `corpusPred`) and persist them bucketed by `sig`. One
     * shingle+minhash pass over the corpus — the one-time cost every
@@ -71,9 +76,7 @@ object BandIndex {
       buckets: Int = 16): Unit = {
     Bucketing.writeBucketed(bandRows(docs.select("doc_id", "text")),
       table, "sig", buckets)
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-      s"'$ShingleProp' = '${Banding._1}', '$HashesProp' = '${Banding._2}', " +
-      s"'$BandsProp' = '${Banding._3}')")
+    Bucketing.setProps(spark, table, Family.identityOf(Banding))
   }
 
   /** The banding the store was built (or last rebanded) at — PUBLIC for
@@ -82,16 +85,16 @@ object BandIndex {
     * engine default, or their rows silently stop colliding with the
     * store's. */
   def recordedBanding(spark: SparkSession, table: String): (Int, Int, Int) =
-    banding(spark, table)
+    bandingOf(StoreFamily.recorded(Family, spark, table))
 
   /** Incremental maintenance — the ingest path: band a NEW batch of
     * documents AT THE STORE'S RECORDED BANDING and append bucket-aligned
-    * (one file per touched bucket, the PostingsIndex.appendDocs rule).
+    * ([[Bucketing.insertAligned]]).
     * Caller contract: new doc_ids disjoint from the indexed set (the
     * ingest gate runs upstream); single-writer like every append path. */
   def appendDocs(table: String, docs: DataFrame): Unit = {
     val spark = docs.sparkSession
-    val b = banding(spark, table)
+    val b = recordedBanding(spark, table)
     appendBandRowsAt(table,
       Dedup.bandRowsOn(spark, docs.select("doc_id", "text"), b), b)
   }
@@ -109,14 +112,12 @@ object BandIndex {
   private[graft] def appendBandRowsAt(table: String, rows: DataFrame,
       rowsBanding: (Int, Int, Int)): Unit = {
     val spark = rows.sparkSession
-    val built = banding(spark, table)
+    val built = recordedBanding(spark, table)
     require(built == rowsBanding,
       s"$table is recorded at banding $built but these rows were banded " +
         s"at $rowsBanding — mismatched band rows never collide (after a " +
         "reband, band the batch at recordedBanding)")
-    val buckets = bucketCount(spark, table)
-    rows.select("sig", "band", "doc_id").repartition(buckets, col("sig"))
-      .write.mode("append").insertInto(table)
+    Bucketing.insertAligned(spark, table, rows.select("sig", "band", "doc_id"))
   }
 
   /** RE-BAND maintenance — [[AnnIndex.reband]]'s rule applied to the
@@ -132,51 +133,20 @@ object BandIndex {
     * shingle width drop out, exactly as a fresh build at the new
     * banding would drop them — RebandSpec pins reband == fresh build
     * bit-for-bit. Rows and the recorded banding properties swap
-    * atomically in one staged rewrite (user properties — the batch
-    * marker — carried); single-writer, probes may retry across the
-    * swap instant and must sign at [[recordedBanding]] after. */
+    * atomically in one [[StoreFamily.rewrite]]; probes must sign at
+    * [[recordedBanding]] after. */
   def reband(spark: SparkSession, table: String, docs: DataFrame,
       shingle: Int, hashes: Int, bands: Int): Unit = {
-    banding(spark, table) // refuse a table this object did not build
+    StoreFamily.open(Family, spark, table)
     require(hashes % bands == 0,
       s"hashes ($hashes) must divide evenly into bands ($bands)")
-    spark.catalog.refreshTable(table)
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val buckets = meta.bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(
-        s"$table carries no bucket spec — not built by BandIndex.build"))
-    val carried = meta.properties.filterNot { case (k, _) =>
-      k.startsWith("spark.") || k.startsWith("transient_") ||
-        k == "comment" || k == "owner"
-    }
-    // membership is the store's LIVE truth: tombstoned docs are already
-    // logically deleted, so the re-sign excludes them and the rewrite
-    // folds their tombstones (cleared after the swap, like every full
-    // rewrite)
-    val ids = Bucketing.liveRows(spark, table, "doc_id")
-      .select("doc_id").distinct()
-      .localCheckpoint(true)
-    // completeness guard (the rebuildSq rule, same hazard): store ids the
-    // handed corpus lacks entirely would silently mass-delete through the
-    // swap — refuse loudly. Docs PRESENT but shorter than the NEW shingle
-    // width still drop, which is correct (a fresh build at the new
-    // banding drops them identically).
-    val missing = ids
-      .join(docs.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-      .count()
-    require(missing == 0L,
-      s"$table holds $missing doc_ids the handed corpus lacks — a reband " +
-        "over this corpus would silently delete them; hand the full " +
-        "source corpus (or delete the ids first if removal is intended)")
-    val member = docs.select("doc_id", "text")
-      .join(ids, Seq("doc_id"), "left_semi")
-    val rows = Dedup.bandRowsOn(spark, member, (shingle, hashes, bands))
-      .select("sig", "band", "doc_id").localCheckpoint(true)
-    Bucketing.stagedSwapIn(spark, table, rows, "sig", buckets,
-      carried ++ Map(ShingleProp -> shingle.toString,
-        HashesProp -> hashes.toString, BandsProp -> bands.toString))
-    Bucketing.clearTombstones(spark, table)
+    // docs PRESENT but shorter than the NEW shingle width drop, which is
+    // correct (a fresh build at the new banding drops them identically)
+    val member = StoreFamily.liveMembers(Family, spark, table,
+      docs.select("doc_id", "text"))
+    StoreFamily.rewrite(spark, table,
+      props = Family.identityOf((shingle, hashes, bands)))(_ =>
+      Dedup.bandRowsOn(spark, member, (shingle, hashes, bands)))
   }
 
   /** RECONCILE the store's live set to exactly `keepDocs` — the
@@ -202,8 +172,7 @@ object BandIndex {
     * every maintenance path. */
   def reconcile(spark: SparkSession, table: String,
       keepDocs: DataFrame): Unit = {
-    banding(spark, table) // refuse a table this object did not build
-    spark.catalog.refreshTable(table)
+    StoreFamily.open(Family, spark, table)
     // LAZY checkpoints (round 21, guide §1.2 step 1): the common
     // reconcile is the RECURRING-run no-op (unchanged corpus — the q149
     // deployment's every pass after the first), and each eager barrier
@@ -254,38 +223,24 @@ object BandIndex {
     * (broadcast side); pruning is size-routed per [[PruneSigLimit]]. */
   private[graft] def collidingIds(spark: SparkSession, table: String,
       bandRows: DataFrame): DataFrame = {
-    spark.catalog.refreshTable(table)
-    prunedStore(spark, table, bandRows).as("y")
-      .join(broadcast(bandRows.as("x")),
-        col("x.band") === col("y.band") && col("x.sig") === col("y.sig"))
-      .select(col("x.doc_id"))
-      .distinct()
+    StoreFamily.open(Family, spark, table)
+    collisions(spark, table, bandRows).select(col("x.doc_id")).distinct()
   }
 
-  /** The store scan for a probe over `bandRows` — size-routed per
-    * [[PruneSigLimit]]: a point-query-scale row set collects its
-    * signatures as the bucket-pruning literal; anything larger scans
-    * the store whole (the correctness rendezvous is the caller's join).
-    * `bandRows` must be materialized (checkpointed) — the count and the
-    * collect are metadata-cheap reads of it. */
-  private def prunedStore(spark: SparkSession, table: String,
+  /** The (band, sig) collisions of `bandRows` (aliased `x`) with the
+    * store (aliased `y`): the store scan is size-routed per
+    * [[PruneSigLimit]] ([[Bucketing.pruneLiterals]]) — a
+    * point-query-scale signature set ships as the bucket-pruning
+    * literal, anything larger scans the store whole — with tombstones
+    * subtracted above the sig filter ([[StoreFamily.probeScan]]); the
+    * broadcast (band, sig) join is the rendezvous either way.
+    * `bandRows` must be materialized (checkpointed). */
+  private def collisions(spark: SparkSession, table: String,
       bandRows: DataFrame): DataFrame =
-    subtractTombstones(spark, table,
-      if (bandRows.count() <= PruneSigLimit) {
-        val sigs = bandRows.select("sig").distinct()
-          .collect().map(_.getString(0)).toSeq
-        spark.table(table)
-          .filter(col("sig").isin(sigs: _*)) // bucket pruning happens HERE
-      } else spark.table(table))
-
-  /** The DEFERRED-delete subtraction ([[Bucketing.subtractTombstones]]
-    * on this family's doc_id key): applied ABOVE the sig filter so the
-    * bucket pruning stays on the scan node; with nothing pending the
-    * frame comes back unchanged (the no-Exchange sweep pin is untouched
-    * on tombstone-free stores). */
-  private def subtractTombstones(spark: SparkSession, table: String,
-      frame: DataFrame): DataFrame =
-    Bucketing.subtractTombstones(spark, table, "doc_id", frame)
+    StoreFamily.probeScan(Family, spark, table,
+        Bucketing.pruneLiterals(bandRows.select("sig").distinct())).as("y")
+      .join(broadcast(bandRows.as("x")),
+        col("x.band") === col("y.band") && col("x.sig") === col("y.sig"))
 
   /** [[appendDocs]] over the documents of `dir` restricted to `pred` —
     * the dir-based epoch-append convenience. */
@@ -313,14 +268,11 @@ object BandIndex {
   def nearDupsFor(spark: SparkSession, table: String,
       corpusDocs: DataFrame, queryDocs: DataFrame): DataFrame = {
     import spark.implicits._
-    // read-your-committed-appends: a writer in another session (the
-    // streaming ingestion path) cannot invalidate this session's cached
-    // file listing — refresh before probing (the PostingsIndex rule)
-    spark.catalog.refreshTable(table)
     // the query side bands — and the verify re-shingles — at the STORE'S
     // recorded banding (after a reband the engine default would produce
     // signatures that never collide; the recordedBanding rule)
-    val (shingle, hashes, bands) = banding(spark, table)
+    val (shingle, hashes, bands) =
+      bandingOf(StoreFamily.open(Family, spark, table))
     val shq = Dedup.shingleOn(spark, queryDocs, shingle)
       .localCheckpoint(true)
     val qbands = Dedup.bandRowsOf(
@@ -340,7 +292,8 @@ object BandIndex {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     // the collect above is where the store scan executed — refuse a
     // reband that landed after the banding read (silent-empty guard)
-    requireBandingStable(spark, table, (shingle, hashes, bands))
+    StoreFamily.requireStable(table, (shingle, hashes, bands),
+      recordedBanding(spark, table))
     val cand = candPairs.toDF("bench_id", "doc_id")
     val candIds = candPairs.map(_._2).distinct
     // candidate-bounded verify: only candidate corpus docs re-shingle;
@@ -377,8 +330,7 @@ object BandIndex {
   private[graft] def nearDupPairsRouted(spark: SparkSession, table: String,
       corpusDocs: DataFrame, routeLimit: Int): DataFrame = {
     import spark.implicits._
-    spark.catalog.refreshTable(table)
-    val bandingAtStart = banding(spark, table)
+    val bandingAtStart = bandingOf(StoreFamily.open(Family, spark, table))
     // the candidate stage EXECUTES inside the relaxed-co-partition
     // scope (count + collect/checkpoint below) — the returned verify
     // frame carries no self-join, so the conf never leaks into the
@@ -402,7 +354,8 @@ object BandIndex {
     // the candidate self-join executed above (count + collect /
     // checkpoint) — refuse a reband that landed mid-sweep, and verify
     // at the banding the candidates actually collided at
-    requireBandingStable(spark, table, bandingAtStart)
+    StoreFamily.requireStable(table, bandingAtStart,
+      recordedBanding(spark, table))
     val sh = Dedup.shingleOn(spark, candDocs, bandingAtStart._1)
     Dedup.crossVerify(
       pairs.select(col("doc_a").as("bench_id"), col("doc_b").as("doc_id")),
@@ -438,7 +391,7 @@ object BandIndex {
       table: String): DataFrame = {
     // tombstones subtract on BOTH legs of the self-join: a deferred-
     // deleted doc must neither anchor nor complete a candidate pair
-    val live = subtractTombstones(spark, table, spark.table(table))
+    val live = Bucketing.liveRows(spark, table, "doc_id")
     live.as("x")
       .join(live.as("y"),
         col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
@@ -447,99 +400,51 @@ object BandIndex {
   }
 
   /** The lazy candidate frame (bench_id, doc_id) for a probe over
-    * materialized `qbands` — the store side size-routed per
-    * [[PruneSigLimit]] ([[prunedStore]]), the (band, sig) broadcast
-    * join the rendezvous. Exposed for the plan pin: the pruned route's
-    * `SelectedBucketsCount` lives in THIS frame's scan
-    * (BandIndexSpec); [[nearDupsFor]] collects it. */
+    * materialized `qbands` ([[collisions]]). Exposed for the plan pin:
+    * the pruned route's `SelectedBucketsCount` lives in THIS frame's
+    * scan (BandIndexSpec); [[nearDupsFor]] collects it. */
   private[graft] def candidatesFor(spark: SparkSession, table: String,
       qbands: DataFrame): DataFrame =
-    prunedStore(spark, table, qbands).as("y")
-      .join(broadcast(qbands.as("x")),
-        col("x.band") === col("y.band") && col("x.sig") === col("y.sig"))
+    collisions(spark, table, qbands)
       .select(col("x.doc_id").as("bench_id"), col("y.doc_id").as("doc_id"))
       .distinct()
 
   /** Build-once memo for dir-derived stores — the registered q139 runs
-    * through it (the PostingsIndex.ensureFor rule: keyed on the
-    * documents listing signature, with `buckets` AND the corpus
-    * predicate's structural fingerprint folded into the key and table
-    * name so two callers reusing a tag with different predicates can
-    * never share one store). */
+    * through it ([[StoreFamily.ensureFor]]: `buckets` AND the corpus
+    * predicate's fingerprint in the key and table name). */
   def ensureFor(spark: SparkSession, dir: String, tag: String,
-      corpusPred: Column = lit(true), buckets: Int = 16): String = {
-    val predFp = java.security.MessageDigest.getInstance("MD5")
-      .digest(corpusPred.toString().getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(8)
-    IndexMemo.ensure(s"bands|$tag|$predFp|$dir|$buckets",
-      graft.Tables.listingSignature(dir, "documents"), s"bands_$tag")(
-      t => build(spark, dir, t, corpusPred, buckets))
-  }
+      corpusPred: Column = lit(true), buckets: Int = 16): String =
+    StoreFamily.ensureFor(Family, "bands", tag, dir, Seq(buckets),
+      Some(corpusPred))(t => build(spark, dir, t, corpusPred, buckets))
 
   /** DELETE documents from the band store — the verb the sweep's own
     * verdicts feed back: [[nearDupPairs]]/q141 name near-dup losers and
     * [[nearDupsFor]]/q139 names contaminated docs, and purging them here
     * is what makes the NEXT sweep's candidate stage not re-derive the
-    * same pairs forever. [[Bucketing.deleteByKey]]'s contract (anti-join
-    * staged rewrite, idempotent on absent ids, banding properties and
-    * batch marker carried, swap-instant outage); no derived statistics
-    * in this family, so the purge is the whole operation — probes after
-    * equal a store rebuilt over the survivors (DeleteSpec). */
-  def delete(spark: SparkSession, table: String, docIds: DataFrame): Unit = {
-    banding(spark, table) // refuse a table this object did not build
-    spark.catalog.refreshTable(table)
-    Bucketing.deleteByKey(spark, table, "doc_id", docIds)
-  }
+    * same pairs forever. [[StoreFamily.delete]]; no derived statistics
+    * in this family, so the purge is the whole operation. */
+  def delete(spark: SparkSession, table: String, docIds: DataFrame): Unit =
+    StoreFamily.delete(Family, spark, table, docIds)
 
-  /** DEFERRED delete — the O(condemned) verb
-    * ([[PostingsIndex.deleteDeferred]]'s twin on the other recurring-
-    * sweep family): the condemned doc ids append to the tombstone
-    * side-table and every probe subtracts them as a broadcast anti-join
-    * ([[Bucketing.tombstone]]'s contract) — no store rewrite until the
-    * maintenance cadence folds them ([[Bucketing.compact]], [[reband]],
-    * or any eager [[delete]]/[[reindex]] rewrite). No derived statistics
-    * in this family, so the tombstone append IS the whole operation;
-    * probes after are row-identical to the eager verb's (DeleteSpec).
-    * Idempotent: only ids with live rows tombstone, so a re-fed
-    * condemned set appends nothing. */
+  /** DEFERRED delete — [[StoreFamily.deleteDeferred]] on the other
+    * recurring-sweep family; the tombstone append is the whole
+    * operation. */
   def deleteDeferred(spark: SparkSession, table: String,
-      docIds: DataFrame): Unit = {
-    banding(spark, table) // refuse a table this object did not build
-    spark.catalog.refreshTable(table)
-    val ids = docIds
-      .select(docIds(docIds.columns.head).cast("long").as("doc_id"))
-      .distinct().localCheckpoint(true)
-    val doomed = Bucketing.liveRows(spark, table, "doc_id")
-      .join(ids, Seq("doc_id"), "left_semi")
-      .select("doc_id").distinct().localCheckpoint(true)
-    if (!doomed.isEmpty)
-      Bucketing.tombstone(spark, table, "doc_id", doomed)
-  }
+      docIds: DataFrame): Unit =
+    StoreFamily.deleteDeferred(Family, spark, table, docIds)
 
-  /** UPSERT/re-crawl ([[PostingsIndex.reindex]]'s twin): the SAME doc_id
-    * arrives with CHANGED text — an append would violate the
-    * disjoint-ids contract and leave the old text's band rows silently
-    * coexisting with the new (phantom collisions forever). One staged
-    * rewrite ([[Bucketing.upsertByKey]]): old rows for the batch's ids
-    * drop, the batch's rows — banded at the RECORDED banding — land,
-    * pending tombstones fold (a re-crawled id that was tombstoned is
-    * alive again). The purge keys are the BATCH ids, not the new rows'
-    * ids: a re-crawled doc now shorter than the shingle width yields
-    * zero band rows and must still lose its old ones, exactly as a
-    * fresh build over the updated corpus would have none. Probes after
-    * equal that fresh build (ReindexSpec). */
+  /** UPSERT/re-crawl — [[StoreFamily.reindex]]: the SAME doc_id arrives
+    * with CHANGED text — an append would violate the disjoint-ids
+    * contract and leave the old text's band rows silently coexisting
+    * with the new (phantom collisions forever). The batch bands at the
+    * RECORDED banding; a re-crawled doc now shorter than the shingle
+    * width yields zero band rows and still loses its old ones. */
   def reindex(spark: SparkSession, table: String, docs: DataFrame): Unit = {
-    val b = banding(spark, table) // refuse a table this object did not build
-    spark.catalog.refreshTable(table)
+    val b = bandingOf(StoreFamily.open(Family, spark, table))
     val batch = docs.select(col("doc_id").cast("long").as("doc_id"),
       col("text")).localCheckpoint(true)
-    require(batch.groupBy("doc_id").count().filter(col("count") > 1).isEmpty,
-      "reindex batch carries duplicate doc_ids — one text per doc is the " +
-        "re-crawl contract (dedupe the batch first)")
-    val rows = Dedup.bandRowsOn(spark, batch, b)
-      .select("sig", "band", "doc_id")
-    Bucketing.upsertByKey(spark, table, "doc_id", rows,
-      replacedKeys = Some(batch.select("doc_id")))
+    StoreFamily.reindex(Family, spark, table, batch.select("doc_id"),
+      Dedup.bandRowsOn(spark, batch, b).select("sig", "band", "doc_id"))
   }
 
   /** The store's row pipeline — exactly the recompute path's band
@@ -553,41 +458,6 @@ object BandIndex {
     Dedup.bandRowsOn(docs.sparkSession, docs, Banding)
       .select("sig", "band", "doc_id")
 
-  /** Re-read the recorded banding AFTER a probe's store scan executed
-    * and refuse a mid-probe change LOUDLY — the non-atomic window a
-    * serving-path probe otherwise has: it reads the banding, spends a
-    * job signing its query side, and scans; a [[reband]] swap landing
-    * in between makes the old-banding signatures collide with NOTHING
-    * (md5 strings of identical shape), i.e. a silently-EMPTY result
-    * where the family's contract promises loud-retry. The store's rows
-    * and banding swap atomically in one table, so if the banding reads
-    * equal before AND after the scan, the scan saw a store consistent
-    * with the signatures probed (a reband round-tripping A→B→A between
-    * the reads is the one theoretical escape; maintenance is
-    * single-writer and compaction-cadence, so it is not a live case). */
-  private def requireBandingStable(spark: SparkSession, table: String,
-      before: (Int, Int, Int)): Unit = {
-    val now = banding(spark, table)
-    if (now != before)
-      throw new IllegalStateException(
-        s"$table was rebanded mid-probe ($before -> $now) — the query side " +
-          "signed at the old banding and its collisions are void; retry " +
-          "the probe (it will sign at the new recorded banding)")
-  }
-
-  private def banding(spark: SparkSession, table: String): (Int, Int, Int) = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    (props.get(ShingleProp), props.get(HashesProp), props.get(BandsProp)) match {
-      case (Some(s), Some(h), Some(b)) => (s.toInt, h.toInt, b.toInt)
-      case _ => throw new IllegalStateException(
-        s"$table carries no graft.minhash.* banding properties — not built by BandIndex.build")
-    }
-  }
-
-  private def bucketCount(spark: SparkSession, table: String): Int =
-    spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(throw new IllegalStateException(
-        s"$table carries no bucket spec — not built by BandIndex.build"))
+  private def bandingOf(p: Map[String, String]): (Int, Int, Int) =
+    (p(ShingleProp).toInt, p(HashesProp).toInt, p(BandsProp).toInt)
 }

@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.{BucketSpec, CatalogTable}
 import org.apache.spark.sql.functions.{broadcast, col}
 
 /** Bucketed-table layout for co-located joins: writing both sides of a
@@ -9,7 +11,12 @@ import org.apache.spark.sql.functions.{broadcast, col}
   * decision for a 100 TB fact⋈fact join that runs daily — pay one write,
   * skip the exchange on every read. Bucketing requires a saveAsTable
   * warehouse (bucket metadata lives in the catalog, not the files).
-  */
+  *
+  * It is also the physical layer under the four persisted index
+  * families: catalog metadata and property reads/writes, the
+  * bucket-aligned insert, the deferred-delete (tombstone) side-table and
+  * the probe-literal size routing. Their shared lifecycle — the one
+  * staged rewrite included — is [[StoreFamily]]. */
 object Bucketing {
 
   /** Write `df` bucketed by `key` into the session catalog. Drops any
@@ -60,171 +67,86 @@ object Bucketing {
       spark.table(left)(leftKey) === spark.table(right)(rightKey))
 
   /** Compact a bucketed table — the maintenance pass every append-heavy
-    * bucketed layout eventually needs: each bucketed INSERT
-    * (AnnIndex.appendVectors, PostingsIndex.appendDocs, the streaming
-    * curatedIndexed loop) adds its own file per touched bucket, so a
-    * long-lived index accumulates files linear in the append count —
-    * the classic small-files pathology (per-file open cost and task
-    * overhead on every probe, even pruned ones). The rewrite is STAGED:
-    * it lands in `<table>__compact` first — properties restored there,
-    * outside any reader-visible window — then swaps in as two catalog
-    * metadata operations (DROP old, RENAME staging). Readers see either
-    * the old table or the new one for the entire rewrite duration; the
-    * RESIDUAL outage is the instant between the two metadata ops, where
-    * a concurrent probe gets table-not-found — still SINGLE-WRITER,
-    * probes-may-retry by contract (the append paths' single-writer rule
-    * extended to maintenance), but the window no longer spans the full
-    * rewrite the pre-staged spelling paid (drop → minutes of rewriting
-    * → property restore, with stats()/banding() throwing throughout).
-    * ALL user-level table properties carry through (everything not in
-    * Spark's own namespaces), not only the engine's `graft.*` — a
-    * caller's annotations must survive maintenance too. Probes before
-    * and after are row-identical (spec-pinned on both index families)
-    * and append contracts keep holding.
-    *
-    * Mechanics worth stating: the snapshot is eagerly checkpointed
-    * BEFORE the staging write (a rename-swap cannot re-read lazily
-    * through the dropped name — the saveIngestState rule), and the
-    * rewrite repartitions on the bucket key with numBuckets partitions:
-    * repartition's Murmur3 `pmod` IS the bucketing hash, so every
-    * bucket's rows land in exactly one task and each task emits exactly
-    * one bucket file. At 100 TB this is the standard compaction trade —
-    * one full rewrite buys every subsequent probe a files-per-bucket
-    * floor of 1. */
-  def compact(spark: SparkSession, table: String): Unit = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalStateException(
-      s"$table is not bucketed — nothing to compact against"))
-    val key = spec.bucketColumnNames.head
-    // user-level properties: everything outside Spark's own bookkeeping
-    // namespaces (provider/bucket metadata rides the catalog entry, not
-    // the property bag, but the in-memory catalog stows a few internals)
-    val props = meta.properties.filterNot { case (k, _) =>
-      k.startsWith("spark.") || k.startsWith("transient_") ||
-        k == "comment" || k == "owner"
-    }
-    // the physical tombstone fold rides the compaction it was deferred
-    // TO (the LSM shape): pending condemned keys drop out of the rewrite
-    // for free — the side-table's single column names the delete key,
-    // which need not be the bucket key (postings tombstone by doc_id,
-    // bucket by term)
-    val base = pendingTombstones(spark, table) match {
-      case Some(tomb) =>
-        val cols = spark.table(table).columns
-        spark.table(table)
-          .join(broadcast(tomb), Seq(tomb.columns.head), "left_anti")
-          .select(cols.head, cols.tail: _*)
-      case None => spark.table(table)
-    }
-    val snapshot = base.localCheckpoint(true)
-    // bucket alignment (one task per bucket, one file per bucket)
-    // happens inside writeBucketed
-    stagedSwapIn(spark, table, snapshot, key, spec.numBuckets, props)
-    clearTombstones(spark, table)
-  }
+    * bucketed layout eventually needs: each bucketed INSERT adds its own
+    * file per touched bucket, so a long-lived index accumulates files
+    * linear in the append count — the classic small-files pathology
+    * (per-file open cost and task overhead on every probe, even pruned
+    * ones). One [[StoreFamily.rewrite]] of the live rows: one file per
+    * bucket, pending tombstones folded, every user property carried,
+    * staged swap. Probes before and after are row-identical
+    * (CompactionSpec) and append contracts keep holding. */
+  def compact(spark: SparkSession, table: String): Unit =
+    StoreFamily.rewrite(spark, table)(identity)
 
-  /** The staged rewrite-and-swap both compaction paths share
-    * ([[compact]] and PostingsIndex.compact's df merge): land `df` in
-    * `<table>__compact` at one file per bucket, restore `props` there,
-    * then swap in as two catalog metadata operations. `df` must already
-    * be materialized (checkpointed) — a rename-swap cannot re-read
-    * lazily through the dropped name. Crash recovery, stated: a failure
-    * BEFORE the drop leaves the original untouched (the staging table
-    * is garbage to clean); a crash BETWEEN the drop and the rename
-    * leaves the fully-built staging table intact under
-    * `<table>__compact` — recover by re-running the rename, losing
-    * nothing (the compacted rows and properties are all there). */
-  private[sources] def stagedSwapIn(spark: SparkSession, table: String,
-      df: DataFrame, key: String, buckets: Int,
-      props: Map[String, String]): Unit = {
-    val staging = s"${table}__compact"
-    writeBucketed(df, staging, key, buckets) // writeBucketed bucket-aligns
-    if (props.nonEmpty)
-      spark.sql(s"ALTER TABLE $staging SET TBLPROPERTIES (" +
-        props.map { case (k, v) => s"'$k' = '$v'" }.mkString(", ") + ")")
-    // the swap: the only reader-visible window is between these two
-    // metadata operations (managed-table RENAME moves the data dir)
-    spark.sql(s"DROP TABLE $table")
-    spark.sql(s"ALTER TABLE $staging RENAME TO $table")
-  }
-
-  /** DELETE rows whose `keyCol` appears in `ids` — the retroactive-removal
-    * verb every index family shares: an anti-join rewrite of the whole
-    * store through [[stagedSwapIn]] (bucketed tables have no partition-
-    * level overwrite — buckets are not partitions — so the physical purge
-    * is compaction-class: one full rewrite, readers see old store → swap
-    * instant → purged store, ALL user properties carried). `ids` may hold
-    * keys that were never indexed or were already deleted — the anti-join
-    * makes the purge IDEMPOTENT by construction, which is what lets a
-    * recurring sweep re-feed its whole condemned set without tracking
-    * what a previous run already removed. Deployments batch deletes on
-    * the compaction cadence (the cost IS a compaction; a per-document
-    * delete would pay a store rewrite per document). Single-writer like
-    * every maintenance path; probes may retry across the swap instant.
-    * Returns the surviving snapshot's row frame count change indirectly
-    * via the swap — callers needing the removed rows (stats folds) read
-    * them BEFORE calling this. */
+  /** DELETE rows whose `keyCol` appears in `ids` from any bucketed store —
+    * [[StoreFamily.purge]] with no derived state: idempotent (absent or
+    * already-deleted keys are a no-op, and a purge with nothing live to
+    * remove pays no rewrite), otherwise one staged rewrite that also
+    * folds the pending tombstones. */
   private[graft] def deleteByKey(spark: SparkSession, table: String,
-      keyCol: String, ids: DataFrame,
-      extraProps: Map[String, String] = Map.empty): Unit = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalStateException(
-      s"$table is not bucketed — not one of the engine's index stores"))
-    val props = meta.properties.filterNot { case (k, _) =>
+      keyCol: String, ids: DataFrame): Unit =
+    StoreFamily.purge(spark, table, keyCol, ids)
+
+  // ---- Catalog metadata ------------------------------------------------
+
+  private[sources] def metadata(spark: SparkSession,
+      table: String): CatalogTable =
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(table))
+
+  /** The table's properties, read as catalog metadata — no SQL command
+    * is parsed or executed. */
+  private[sources] def props(spark: SparkSession,
+      table: String): Map[String, String] =
+    metadata(spark, table).properties
+
+  /** Merge `props` into the table's properties: the ONE property writer
+    * (identities, stats folds, batch markers, staged-swap carry-through).
+    * The catalog entry is altered directly — values never become SQL
+    * text, so any character in a user's property survives — and the
+    * session's cached relation is invalidated, as ALTER TABLE … SET
+    * TBLPROPERTIES does. */
+  private[sources] def setProps(spark: SparkSession, table: String,
+      props: Map[String, String]): Unit = {
+    val cat = spark.sessionState.catalog
+    val id = TableIdentifier(table)
+    val t = cat.getTableRawMetadata(id)
+    cat.alterTable(t.copy(properties = t.properties ++ props))
+    cat.invalidateCachedTable(id)
+  }
+
+  /** User-level properties: everything outside Spark's own bookkeeping
+    * namespaces (provider/bucket metadata rides the catalog entry, not
+    * the property bag, but the in-memory catalog stows a few internals).
+    * A rewrite carries exactly these through its swap. */
+  private[sources] def userProps(
+      props: Map[String, String]): Map[String, String] =
+    props.filterNot { case (k, _) =>
       k.startsWith("spark.") || k.startsWith("transient_") ||
         k == "comment" || k == "owner"
-    } ++ extraProps
-    val idFrame = ids
-      .select(ids(ids.columns.head).as(keyCol)).distinct()
-      .localCheckpoint(true)
-    // no-op short-circuit: the advertised idempotent usage RE-FEEDS a
-    // sweep's whole condemned set, and a purge with nothing left to
-    // remove must not pay the compaction-class rewrite (or the swap
-    // instant's reader outage) — one semi-join existence check, far
-    // cheaper than the rewrite it skips (the PostingsIndex.delete
-    // nDel > 0 rule, hoisted into the shared core for the stat-less
-    // families)
-    if (spark.table(table)
-        .join(idFrame, Seq(keyCol), "left_semi").isEmpty) return
-    // left_anti: survivors only. The ids side is sweep-verdict-scale
-    // (bounded by true contamination/duplication, never corpus-scale),
-    // so Spark broadcasts it under the threshold; past it the anti-join
-    // shuffles once — either way the rewrite itself dominates.
-    // COLUMN ORDER IS PART OF THE TABLE'S CONTRACT: a USING join moves
-    // the key to the front, and the swapped-in table would then break —
-    // or, where the displaced neighbor shares the key's type, SILENTLY
-    // CORRUPT — every later positional insertInto append (found by
-    // SoakProbe's delete-under-serving leg: the postings stream died on
-    // a STRING→BIGINT cast the first batch after the purge; the IVF
-    // store's long-beside-long layout would have corrupted without an
-    // error). Re-select the original order before the swap.
-    val cols = spark.table(table).columns
-    // any FULL-STORE REWRITE folds the pending tombstone set and clears
-    // it (the one invariant that keeps the eager and deferred verbs
-    // composable): rows already logically deleted via [[tombstone]] are
-    // physically purged here for free — the rewrite is happening anyway
-    // — and the side-table drops, so probes stop paying the anti-join.
-    val purgeKeys = pendingTombstones(spark, table) match {
-      case Some(tomb) => idFrame.union(tomb).distinct()
-      case None => idFrame
     }
-    val survivors = spark.table(table)
-      .join(purgeKeys, Seq(keyCol), "left_anti")
-      .select(cols.head, cols.tail: _*)
-      .localCheckpoint(true)
-    stagedSwapIn(spark, table, survivors,
-      spec.bucketColumnNames.head, spec.numBuckets, props)
-    // clear AFTER the swap: a crash in between leaves tombstones naming
-    // already-purged keys — the anti-join of an absent key is a no-op,
-    // so the recovery is simply the next rewrite (idempotent, stated)
-    clearTombstones(spark, table)
+
+  private[sources] def bucketSpec(meta: CatalogTable): BucketSpec =
+    meta.bucketSpec.getOrElse(throw new IllegalStateException(
+      s"${meta.identifier.table} is not bucketed — not one of the " +
+        "engine's index stores"))
+
+  /** The bucket-aligned append every insert path shares: repartitioned
+    * to numBuckets partitions on the bucket key (repartition's Murmur3
+    * pmod IS the bucketing hash), so an append writes one file per
+    * touched bucket instead of tasks × buckets — measured 841 files per
+    * epoch vs ~110 aligned on the 20-epoch stream probe (SCALING.md
+    * round 18). insertInto is POSITIONAL: `rows` must be in the table's
+    * column order. */
+  private[sources] def insertAligned(spark: SparkSession, table: String,
+      rows: DataFrame): Unit = {
+    val spec = bucketSpec(metadata(spark, table))
+    rows.repartition(spec.numBuckets, col(spec.bucketColumnNames.head))
+      .write.mode("append").insertInto(table)
   }
 
   // ---- Deferred (tombstone) deletes -----------------------------------
   //
-  // The LSM answer to delete economics: [[deleteByKey]] is a full-store
+  // The LSM answer to delete economics: an eager delete is a full-store
   // rewrite per purge batch — correct and honestly priced (compaction-
   // class), but the FREQUENT-delete deployment (a recurring decontam
   // sweep against a growing benchmark suite) pays O(store) for every
@@ -233,12 +155,12 @@ object Bucketing {
   // probes subtract it as a BROADCAST anti-join (condemned sets are
   // verdict-scale by the sweep contract — bounded by true contamination
   // or duplication, never corpus-scale); and the physical purge rides
-  // the maintenance the store already schedules ([[compact]] and every
-  // other full rewrite fold the set and drop the side-table). The
-  // side-table's EXISTENCE is the pending signal: it is created with its
-  // first condemned keys and dropped at every fold, so the probe hot
-  // path pays one driver-side catalog lookup when there is nothing
-  // pending — never a count job.
+  // the maintenance the store already schedules (every full rewrite
+  // folds the set and drops the side-table). The side-table's EXISTENCE
+  // is the pending signal: it is created with its first condemned keys
+  // and dropped at every fold, so the probe hot path pays one
+  // driver-side catalog lookup when there is nothing pending — never a
+  // count job.
 
   private[graft] def tombTableOf(table: String): String =
     s"${table}__tombstones"
@@ -250,8 +172,7 @@ object Bucketing {
   private[graft] def pendingTombstones(spark: SparkSession,
       table: String): Option[DataFrame] = {
     val t = tombTableOf(table)
-    if (spark.sessionState.catalog.tableExists(
-        org.apache.spark.sql.catalyst.TableIdentifier(t))) {
+    if (spark.sessionState.catalog.tableExists(TableIdentifier(t))) {
       // read-your-committed-deletes: another session's deferred delete
       // appends to the side-table without invalidating THIS session's
       // cached listing (the probe refresh rule, applied to the one
@@ -262,24 +183,20 @@ object Bucketing {
   }
 
   /** Append `ids` to the table's tombstone set — O(condemned), never a
-    * store rewrite. `ids` must already be deduplicated against the
-    * pending set AND restricted to keys the store actually holds (the
-    * family's deferred-delete verb does both off its doomed-slice read,
-    * which it needs anyway) — this keeps the side-table's size bounded
-    * by live condemnations, not by how many times a sweep re-feeds its
-    * verdicts. Bucketed by the key at ONE bucket: the set is
-    * verdict-scale by contract and is consumed whole as a broadcast
-    * side, so more buckets would only fragment files; the bucketed
-    * layout still makes the side-table a first-class catalog citizen
-    * (inspectable, droppable, appendable via the same insert path). */
+    * store rewrite. `ids` must already be restricted to distinct keys
+    * the store still serves ([[StoreFamily.deleteDeferred]] derives them
+    * from its doomed-slice read) — this keeps the side-table's size
+    * bounded by live condemnations, not by how many times a sweep
+    * re-feeds its verdicts. Bucketed by the key at ONE bucket: the set
+    * is verdict-scale by contract and is consumed whole as a broadcast
+    * side, so more buckets would only fragment files. */
   private[graft] def tombstone(spark: SparkSession, table: String,
       keyCol: String, ids: DataFrame): Unit = {
-    val t = tombTableOf(table)
     val frame = ids.select(ids(ids.columns.head).as(keyCol))
     if (pendingTombstones(spark, table).isDefined)
-      frame.repartition(1, col(keyCol)).write.mode("append").insertInto(t)
+      insertAligned(spark, tombTableOf(table), frame)
     else
-      writeBucketed(frame, t, keyCol, buckets = 1)
+      writeBucketed(frame, tombTableOf(table), keyCol, buckets = 1)
   }
 
   private[graft] def clearTombstones(spark: SparkSession,
@@ -287,30 +204,21 @@ object Bucketing {
     dropTableAndDir(spark, tombTableOf(table))
 
   /** The store's LIVE rows: everything minus the pending tombstones —
-    * the frame every probe (and every doomed-slice read) consumes.
-    * Column order re-selected (the USING-join fronting hazard); the
-    * tombstone side broadcasts explicitly, so a caller that disables
-    * auto-broadcast for its own join shaping cannot accidentally shuffle
-    * the store against a verdict-scale set. With nothing pending this IS
-    * `spark.table(table)` — same object, same plan, zero overhead. */
+    * the frame every rewrite and every doomed-slice read consumes. With
+    * nothing pending this IS `spark.table(table)`. */
   private[graft] def liveRows(spark: SparkSession, table: String,
-      keyCol: String): DataFrame = {
-    val full = spark.table(table)
-    pendingTombstones(spark, table) match {
-      case Some(tomb) =>
-        val cols = full.columns
-        full.join(broadcast(tomb), Seq(keyCol), "left_anti")
-          .select(cols.head, cols.tail: _*)
-      case None => full
-    }
-  }
+      keyCol: String): DataFrame =
+    subtractTombstones(spark, table, keyCol, spark.table(table))
 
-  /** The DEFERRED-delete subtraction on any store-side frame: pending
-    * tombstones anti-join it (broadcast — verdict-scale by contract),
+  /** The ONE deferred-delete subtraction, on any store-side frame:
+    * pending tombstones anti-join it as a BROADCAST (verdict-scale by
+    * contract — and explicit, so a caller that disables auto-broadcast
+    * for its own join shaping cannot shuffle the store against them),
     * ABOVE whatever pruning filter the frame carries, so the bucket
     * pruning stays on the scan node and the plan is unchanged when
-    * nothing is pending (same object back). Column order re-selected
-    * (the USING-join fronting hazard). */
+    * nothing is pending (same object back). Column order re-selected:
+    * a USING join fronts the key, and positional inserts into a table
+    * rewritten from such a frame would break or silently corrupt. */
   private[sources] def subtractTombstones(spark: SparkSession,
       table: String, keyCol: String, frame: DataFrame): DataFrame =
     pendingTombstones(spark, table) match {
@@ -321,52 +229,7 @@ object Bucketing {
       case None => frame
     }
 
-  /** UPSERT: replace/insert `newRows` by key in ONE staged rewrite — the
-    * re-crawl verb (same doc_id, changed content) every append path's
-    * disjoint-ids contract excludes and the delete verb only half
-    * handles: a caller-composed delete+append pays TWO full rewrites and
-    * leaves a window where neither version serves. Here the swap is
-    * atomic: old rows for the new keys drop, new rows land, pending
-    * tombstones fold (an upserted key that was tombstoned is ALIVE again
-    * — the new content is a fresh observation, and leaving its tombstone
-    * would hide the new rows from every probe), all in the same
-    * compaction-class rewrite. `newRows` must be in the table's exact
-    * column order (insert-path contract) and materialized by the caller
-    * if derived from the table itself. `replacedKeys` overrides the
-    * purge set when it is WIDER than newRows' own keys — the band
-    * family's re-crawl of a doc now shorter than the shingle width
-    * yields zero new rows but must still drop the old ones (a fresh
-    * build over the updated corpus has no rows for it either). */
-  private[graft] def upsertByKey(spark: SparkSession, table: String,
-      keyCol: String, newRows: DataFrame,
-      extraProps: Map[String, String] = Map.empty,
-      replacedKeys: Option[DataFrame] = None): Unit = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalStateException(
-      s"$table is not bucketed — not one of the engine's index stores"))
-    val props = meta.properties.filterNot { case (k, _) =>
-      k.startsWith("spark.") || k.startsWith("transient_") ||
-        k == "comment" || k == "owner"
-    } ++ extraProps
-    val cols = spark.table(table).columns
-    val rows = newRows.select(cols.head, cols.tail: _*).localCheckpoint(true)
-    val replaced = replacedKeys
-      .map(f => f.select(f(f.columns.head).as(keyCol)).distinct())
-      .getOrElse(rows.select(keyCol).distinct())
-    val purgeKeys = pendingTombstones(spark, table) match {
-      case Some(tomb) => replaced.union(tomb).distinct()
-      case None => replaced
-    }
-    val snapshot = spark.table(table)
-      .join(purgeKeys, Seq(keyCol), "left_anti")
-      .select(cols.head, cols.tail: _*)
-      .unionByName(rows)
-      .localCheckpoint(true)
-    stagedSwapIn(spark, table, snapshot,
-      spec.bucketColumnNames.head, spec.numBuckets, props)
-    clearTombstones(spark, table)
-  }
+  // ---- Probe literals ---------------------------------------------------
 
   /** Shared size-routing limit for probe literals over bucketed stores:
     * at or under this many distinct key values a probe ships them as
@@ -378,6 +241,29 @@ object Bucketing {
     * a few hundred values the literal hits nearly every bucket anyway —
     * pruning pays exactly for point-query-scale key sets. */
   private[sources] val PruneLiteralLimit = 256
+
+  /** `keys` (one column of DISTINCT values) as a pruning literal, or
+    * None past [[PruneLiteralLimit]]. ONE job decides the route AND
+    * fetches the literal: a limit+1 sample exceeds the limit exactly
+    * when the count does, and under it the sample IS the whole set
+    * (driver payload capped at limit+1 values either way). */
+  private[sources] def pruneLiterals(keys: DataFrame): Option[Seq[Any]] = {
+    val sample = keys.limit(PruneLiteralLimit + 1).collect()
+    if (sample.length <= PruneLiteralLimit) Some(sample.map(_.get(0)).toSeq)
+    else None
+  }
+
+  /** `table` restricted to `literals` of `key` — the bucket-pruning
+    * `isin` (`SelectedBucketsCount` in the scan) — or, with no literal,
+    * to whatever `wide` narrows it to (the whole table by default). */
+  private[sources] def restrict(spark: SparkSession, table: String,
+      key: String, literals: Option[Seq[Any]],
+      wide: DataFrame => DataFrame = identity): DataFrame = {
+    val t = spark.table(table)
+    literals.fold(wide(t))(ls => t.filter(col(key).isin(ls: _*)))
+  }
+
+  // ---- Streaming batch marker -------------------------------------------
 
   private[sources] val LastBatchProp = "graft.ingest.last_batch"
 
@@ -391,8 +277,8 @@ object Bucketing {
     * at or under it. Here "transactionally" is approximated the same way
     * the stats fold is: the marker is a table property written right
     * after the insert (PostingsIndex folds it into the SAME property
-    * statement as its stats), so the residual window is a crash BETWEEN
-    * the insert and the property write — replaying that batch
+    * write as its stats), so the residual window is a crash BETWEEN the
+    * insert and the property write — replaying that batch
     * double-appends, exactly the window the append scaladocs already
     * name, now shrunk from "any retry" to "retry of a mid-append crash".
     *
@@ -404,17 +290,13 @@ object Bucketing {
     * at 0) over an existing table requires [[resetBatchMarker]] first,
     * or every batch up to the old high-water mark silently skips. */
   def lastCommittedBatch(spark: SparkSession, table: String): Long =
-    spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .collectFirst { case r if r.getString(0) == LastBatchProp =>
-        r.getString(1).toLong }
-      .getOrElse(-1L)
+    props(spark, table).get(LastBatchProp).map(_.toLong).getOrElse(-1L)
 
   /** Record `batchId` as the table's committed high-water mark — called
     * by the streaming index loops after a batch's appends land. Survives
-    * [[compact]] (the `graft.*` property carry-through). */
+    * [[compact]] (the user-property carry-through). */
   def recordBatch(spark: SparkSession, table: String, batchId: Long): Unit =
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-      s"'$LastBatchProp' = '$batchId')")
+    setProps(spark, table, Map(LastBatchProp -> batchId.toString))
 
   /** Reset the marker for a NEW stream lineage over an existing table
     * (fresh checkpoint ⇒ batchIds restart at 0 — see
@@ -422,20 +304,12 @@ object Bucketing {
   def resetBatchMarker(spark: SparkSession, table: String): Unit =
     recordBatch(spark, table, -1L)
 
-  /** The property statement fragment PostingsIndex folds into its stats
-    * write so the marker and the stats fold commit in ONE catalog
-    * operation. */
-  private[sources] def batchMarkerClause(batchId: Long): String =
-    s", '$LastBatchProp' = '$batchId'"
-
   /** Data-file count of a catalog table — the small-files health metric
     * the streaming ingest loop's compaction trigger reads between
     * batches (CurationChain.curatedIndexed). Driver-side listing, no
     * Spark job (the listingSignature rule). */
   def dataFileCount(spark: SparkSession, table: String): Int = {
-    val loc = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table)).location
-    val dir = java.nio.file.Paths.get(loc)
+    val dir = java.nio.file.Paths.get(metadata(spark, table).location)
     if (!java.nio.file.Files.exists(dir)) 0
     else scala.util.Using.resource(java.nio.file.Files.walk(dir)) { st =>
       import scala.jdk.CollectionConverters._

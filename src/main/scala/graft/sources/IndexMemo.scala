@@ -55,9 +55,7 @@ private[sources] object IndexMemo {
           }
         }
       if (won) {
-        val table = tablePrefix + "_" + java.security.MessageDigest
-          .getInstance("MD5").digest(key.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(8)
+        val table = tablePrefix + "_" + StoreFamily.md5(key).take(8)
         try {
           build(table) // the expensive part — no map lock held here
           fresh.cell.complete(table)

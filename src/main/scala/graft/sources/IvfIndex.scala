@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -67,24 +67,66 @@ object IvfIndex {
 
   private[sources] def centTableOf(table: String): String = s"${table}_cent"
 
-  private def isSqStore(spark: SparkSession, table: String): Boolean =
-    spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .collectFirst { case r if r.getString(0) == StorageProp =>
-        r.getString(1) }
-      .contains("sq")
+  /** The IVF family: rows keyed by vec_id, bucketed by `cell`, identity =
+    * the recorded fit version, which must match the centroid
+    * companion's ([[requireFitMatch]]). Both storages share it. */
+  private[sources] val Family = StoreFamily("IvfIndex", "vec_id", "cell",
+    Seq(FitProp), "embeddings", p => if (isSq(p)) "ivf_sq" else "ivf_float",
+    companions = t => Seq(centTableOf(t)), check = requireFitMatch)
 
-  private def requireStorage(spark: SparkSession, table: String,
-      wantSq: Boolean): Unit = {
-    val isSq = isSqStore(spark, table)
-    if (wantSq) require(isSq,
+  private def isSq(p: Map[String, String]): Boolean =
+    p.get(StorageProp).contains("sq")
+
+  /** The one axis the float and SQ entry points differ on: the stored
+    * row payload (`carry`), the query's payload in the probe, and the
+    * in-cell score. Cell layout, fit identity, guards and maintenance
+    * are shared. */
+  private sealed abstract class Storage(val sq: Boolean,
+      val carry: Seq[String], val probeCols: Seq[String], val score: String) {
+    def payload(normed: DataFrame): DataFrame
+    /** (query_id, qv, qnrm) full-precision queries + the probe payload */
+    def query(q: DataFrame): DataFrame
+    def scoreOf: Column
+  }
+
+  private object Full extends Storage(false, Seq("v", "nrm"),
+      Seq("qv", "qnrm"), "cosine") {
+    def payload(normed: DataFrame): DataFrame = normed
+    def query(q: DataFrame): DataFrame = q
+    def scoreOf: Column = Similarity.dot(col("pr.qv"), col("ix.v")) /
+      (col("pr.qnrm") * col("ix.nrm"))
+  }
+
+  /** The SQ payload: ranking inside the probed cells is the quantized
+    * cosine — the query quantizes with the shared quantizer and the
+    * compiled int8 fold reads the stored codes IN PLACE (DotFoldI8: each
+    * byte widens to the exact double it quantized from, bit-identical to
+    * cast-then-DotFold; the first spelling's interpreted `transform`
+    * cast materialized a fresh 64-element array per scanned row and cost
+    * more than the 7x byte saving bought — SCALING.md round 18). */
+  private object Sq extends Storage(true, Seq("qv", "qnrm"),
+      Seq("aqv", "aqnrm"), "qcosine") {
+    def payload(normed: DataFrame): DataFrame = sqPayload(normed)
+    def query(q: DataFrame): DataFrame = q
+      .withColumn("aqv", Similarity.int8Of(col("qv"),
+        Similarity.int8Scale(col("qv"))))
+      .withColumn("aqnrm", sqrt(Similarity.dot(col("aqv"), col("aqv"))))
+    def scoreOf: Column =
+      call_function("dot_fold_i8", col("ix.qv"), col("pr.aqv")) /
+        (col("pr.aqnrm") * col("ix.qnrm"))
+  }
+
+  /** The storage routing check, run after [[StoreFamily.open]]. */
+  private def requireStorage(st: Storage, table: String,
+      p: Map[String, String]): Unit =
+    if (st.sq) require(isSq(p),
       s"$table stores full-precision vectors (built by build) — probe it " +
         "with topKFor / grow it with appendVectors; the *Sq entries serve " +
         "stores built by buildSq")
-    else require(!isSq,
+    else require(!isSq(p),
       s"$table is an int8 SQ store (built by buildSq) — probe it with " +
         "topKForSq / grow it with appendVectorsSq; its rows carry codes, " +
         "not float vectors")
-  }
 
   /** Content fingerprint of a centroid fit — md5 over the rows in c_id
     * order, doubles rendered via their IEEE bit pattern (formatting-free,
@@ -98,8 +140,8 @@ object IvfIndex {
     * require() closes on the other families, here made loud. The fit rows
     * are fit-sized (nCentroids), so the driver collect is bounded by
     * construction. */
-  private def fitVersionOf(cent: DataFrame): String = {
-    val rendered = cent.select(col("c_id"), col("cv"))
+  private def fitVersionOf(cent: DataFrame): String =
+    StoreFamily.md5(cent.select(col("c_id"), col("cv"))
       .collect()
       .sortBy(_.getLong(0))
       .map { r =>
@@ -107,26 +149,25 @@ object IvfIndex {
           .map(d => java.lang.Double.doubleToLongBits(d).toString)
         s"${r.getLong(0)}:${bits.mkString(",")}"
       }
-      .mkString(";")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(rendered.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-  }
+      .mkString(";"))
 
-  private def writeFitVersion(spark: SparkSession, table: String,
-      version: String): Unit =
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-      s"'$FitProp' = '$version')")
+  /** A missing companion fails loudly: assignment against anything but
+    * the recorded centroids would silently mis-cell a batch. */
+  private def requireCompanion(spark: SparkSession, table: String): Unit =
+    require(spark.catalog.tableExists(centTableOf(table)),
+      s"$table carries no centroid companion (${centTableOf(table)}) — " +
+        "not built by IvfIndex.build")
 
-  private def fitVersion(spark: SparkSession, table: String): String =
-    spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .collectFirst { case r if r.getString(0) == FitProp => r.getString(1) }
-      .getOrElse(throw new IllegalStateException(
-        s"$table carries no $FitProp property — not built by IvfIndex.build"))
-
-  private def requireFitMatch(spark: SparkSession, table: String): Unit = {
-    val (vc, vx) = (fitVersion(spark, table),
-      fitVersion(spark, centTableOf(table)))
+  /** The family's identity check past the recorded fit: the companion
+    * exists and carries the SAME fit version. Rank-against-one-fit /
+    * scan-another is a silent recall loss, so a torn pair (mid-refit, an
+    * out-of-band rewrite) fails loudly; probes may retry after the refit
+    * completes. */
+  private def requireFitMatch(spark: SparkSession, table: String,
+      p: Map[String, String]): Unit = {
+    requireCompanion(spark, table)
+    val (vc, vx) = (p(FitProp),
+      Bucketing.props(spark, centTableOf(table)).getOrElse(FitProp, "none"))
     require(vc == vx,
       s"$table's cells were assigned under fit $vc but its centroid " +
         s"companion carries fit $vx — a half-completed refit or an " +
@@ -143,7 +184,7 @@ object IvfIndex {
     * standard: the coarse quantizer is float; only the stored lists are
     * codes). */
   private def assignOf(vectors: DataFrame, cent: DataFrame,
-      carry: Seq[String] = Seq("v", "nrm")): DataFrame = {
+      carry: Seq[String]): DataFrame = {
     val simToCent = Similarity.dot(col("v"), col("cv")) /
       (col("nrm") * col("cnrm"))
     val w = Window.partitionBy("vec_id")
@@ -163,72 +204,55 @@ object IvfIndex {
     * passes its √n-sized fit here and every append/probe inherits it
     * through the companion). */
   def build(spark: SparkSession, dir: String, table: String,
-      buckets: Int = 8, nCentroids: Int = NCentroids): Unit = {
-    val e = Similarity.normedVectors(spark, dir)
+      buckets: Int = 8, nCentroids: Int = NCentroids): Unit =
+    buildAs(Full, spark, dir, table, buckets, nCentroids)
+
+  private def buildAs(st: Storage, spark: SparkSession, dir: String,
+      table: String, buckets: Int, nCentroids: Int): Unit = {
+    val e = st.payload(Similarity.normedVectors(spark, dir))
     val cent = e.filter(col("vec_id") < nCentroids)
       .select(col("vec_id").as("c_id"), col("v").as("cv"),
         col("nrm").as("cnrm"))
       .localCheckpoint(true)
-    val version = fitVersionOf(cent)
-    Bucketing.writeBucketed(assignOf(e, cent), table, "cell", buckets)
+    val fit = Map(FitProp -> fitVersionOf(cent))
+    Bucketing.writeBucketed(assignOf(e, cent, st.carry), table, "cell", buckets)
     Bucketing.writeBucketed(cent, centTableOf(table), "c_id", 1)
-    writeFitVersion(spark, table, version)
-    writeFitVersion(spark, centTableOf(table), version)
+    Bucketing.setProps(spark, table,
+      fit ++ Option.when(st.sq)(StorageProp -> "sq"))
+    Bucketing.setProps(spark, centTableOf(table), fit)
   }
 
   /** Incremental maintenance: assign a new batch against the RECORDED
-    * centroids and insert bucket-aligned. A missing companion fails
-    * loudly (the centroid-identity guard — assignment against anything
-    * else would silently mis-cell the batch). Caller contract: new
-    * vec_ids disjoint from the indexed set (the ingest-gate rule). */
-  def appendVectors(table: String, embeddings: DataFrame): Unit = {
+    * centroids and insert bucket-aligned. Fit-version guarded (an
+    * append against a companion the cells were not assigned under would
+    * mis-cell the whole batch). Caller contract: new vec_ids disjoint
+    * from the indexed set (the ingest-gate rule). */
+  def appendVectors(table: String, embeddings: DataFrame): Unit =
+    appendAs(Full, table, embeddings)
+
+  private def appendAs(st: Storage, table: String,
+      embeddings: DataFrame): Unit = {
     val spark = embeddings.sparkSession
-    val centTable = centTableOf(table)
-    require(spark.catalog.tableExists(centTable),
-      s"$table carries no centroid companion ($centTable) — not built by IvfIndex.build")
-    // an append that assigns against a companion the cells were not
-    // assigned under would mis-cell the whole batch — the fit-version
-    // guard fails it loudly (a half-completed refit is the live case)
-    requireFitMatch(spark, table)
-    requireStorage(spark, table, wantSq = false)
-    val cent = spark.table(centTable).localCheckpoint(true)
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(throw new IllegalStateException(
-        s"$table carries no bucket spec — not built by IvfIndex.build"))
-    val e = Similarity.normedVectorsOf(spark, embeddings)
-    assignOf(e, cent).repartition(buckets, col("cell"))
-      .write.mode("append").insertInto(table)
+    requireCompanion(spark, table)
+    requireStorage(st, table, StoreFamily.open(Family, spark, table))
+    val cent = spark.table(centTableOf(table)).localCheckpoint(true)
+    val e = st.payload(Similarity.normedVectorsOf(spark, embeddings))
+    Bucketing.insertAligned(spark, table, assignOf(e, cent, st.carry))
   }
 
   /** UPSERT/re-crawl on the cell store, storage-routed (one verb for
-    * both the float and SQ layouts, like [[delete]]): the batch
-    * re-assigns against the CURRENT fit (fit-version guard — a
-    * half-completed refit must not mis-cell the batch), old rows for
-    * its vec_ids drop, new rows land, pending tombstones fold — one
-    * staged rewrite ([[Bucketing.upsertByKey]]). The centroid companion
-    * is untouched: a re-crawl changes observations, never the fit
-    * (fit drift is [[refit]]/[[rebuildSq]]'s job). Probes after equal a
-    * fresh build over the updated corpus (ReindexSpec). */
+    * both layouts, like [[delete]]) — [[StoreFamily.reindex]]: the batch
+    * re-assigns against the CURRENT fit and replaces its vec_ids' rows in
+    * one staged rewrite. The centroid companion is untouched: a re-crawl
+    * changes observations, never the fit. */
   def reindexVectors(table: String, embeddings: DataFrame): Unit = {
     val spark = embeddings.sparkSession
-    val centTable = centTableOf(table)
-    require(spark.catalog.tableExists(centTable),
-      s"$table carries no centroid companion ($centTable) — not built by IvfIndex")
-    requireFitMatch(spark, table)
-    spark.catalog.refreshTable(table)
-    val cent = spark.table(centTable).localCheckpoint(true)
+    val st = if (isSq(StoreFamily.open(Family, spark, table))) Sq else Full
+    val cent = spark.table(centTableOf(table)).localCheckpoint(true)
     val normed = Similarity.normedVectorsOf(spark, embeddings)
       .localCheckpoint(true)
-    require(normed.groupBy("vec_id").count().filter(col("count") > 1).isEmpty,
-      "reindex batch carries duplicate vec_ids — one embedding per vector " +
-        "is the re-crawl contract (dedupe the batch first)")
-    val rows =
-      if (isSqStore(spark, table))
-        assignOf(sqPayload(normed), cent, carry = Seq("qv", "qnrm"))
-      else assignOf(normed, cent)
-    Bucketing.upsertByKey(spark, table, "vec_id", rows,
-      replacedKeys = Some(normed.select("vec_id")))
+    StoreFamily.reindex(Family, spark, table, normed.select("vec_id"),
+      assignOf(st.payload(normed), cent, st.carry))
   }
 
   /** Self-probe convenience (the AnnIndex.topK rule): anchors are the
@@ -238,7 +262,7 @@ object IvfIndex {
     * [[topKFor]], which scans the index exactly once, pruned. */
   def topK(spark: SparkSession, table: String, nAnchors: Int,
       k: Int, nProbe: Int = NProbe): DataFrame = {
-    spark.catalog.refreshTable(table)
+    StoreFamily.open(Family, spark, table)
     // LIVE anchors only (the AnnIndex.topK rule): a tombstoned vector
     // must not probe on behalf of the more-like-this batch
     topKFor(spark, table,
@@ -257,103 +281,72 @@ object IvfIndex {
     * per-query recall-for-scan-volume dial (probe cost tracks
     * n/nlist × nProbe); the default is q37's 2. */
   def topKFor(spark: SparkSession, table: String, anchors: DataFrame,
-      k: Int, nProbe: Int = NProbe): DataFrame = {
-    spark.catalog.refreshTable(table)
-    spark.catalog.refreshTable(centTableOf(table))
-    // rank-against-one-fit/scan-another is a silent recall loss — the
-    // version guard turns a torn pair (mid-refit, out-of-band rewrite)
-    // into a loud failure; probes may retry after the refit completes
-    requireFitMatch(spark, table)
-    requireStorage(spark, table, wantSq = false)
-    val cent = spark.table(centTableOf(table))
+      k: Int, nProbe: Int = NProbe): DataFrame =
+    probe(Full, spark, table, anchors, k, nProbe)
+
+  private def probe(st: Storage, spark: SparkSession, table: String,
+      anchors: DataFrame, k: Int, nProbe: Int): DataFrame = {
+    if (st.sq) graft.plans.GraftExtensions.install(spark)
+    requireStorage(st, table, StoreFamily.open(Family, spark, table))
     val simToCent = Similarity.dot(col("qv"), col("cv")) /
       (col("qnrm") * col("cnrm"))
     val wProbe = Window.partitionBy("query_id")
       .orderBy(col("c_sim").desc, col("c_id"))
-    // (query_id, cell, qv, qnrm): each anchor's NProbe nearest cells,
-    // query vector riding along for the single-pass re-rank
-    val probes = anchors
-      .select(col("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-      .crossJoin(broadcast(cent))
-      .select(col("query_id"), col("qv"), col("qnrm"), col("c_id"),
-        simToCent.as("c_sim"))
+    // (query_id, cell, query payload): each anchor's nProbe nearest
+    // cells, ranked full-precision (the coarse quantizer never sees
+    // codes), the query payload riding along for the single-pass re-rank
+    val probes = st.query(anchors
+        .select(col("query_id"), col("v").as("qv"), col("nrm").as("qnrm")))
+      .crossJoin(broadcast(spark.table(centTableOf(table))))
+      .select(col("query_id") +: st.probeCols.map(col) :+ col("c_id") :+
+        simToCent.as("c_sim"): _*)
       .withColumn("rn", row_number().over(wProbe))
       .filter(col("rn") <= nProbe)
-      .select(col("query_id"), col("c_id").as("cell"), col("qv"),
-        col("qnrm"))
+      .select(col("query_id") +: col("c_id").as("cell") +:
+        st.probeCols.map(col): _*)
       .localCheckpoint(true)
     val probeCells = probes.select("cell").distinct()
       .collect().map(_.getLong(0)).toSeq
-    val cos = Similarity.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))
     val wRank = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    Bucketing.subtractTombstones(spark, table, "vec_id",
-        spark.table(table)
-          .filter(col("cell").isin(probeCells: _*))) // bucket pruning HERE
-      .as("ix")
+      .orderBy(col(st.score).desc, col("neighbor_id"))
+    // bucket pruning HERE — the probed cells always ship as the literal
+    StoreFamily.probeScan(Family, spark, table, Some(probeCells)).as("ix")
       .join(broadcast(probes.as("pr")),
         col("ix.cell") === col("pr.cell") &&
           col("ix.vec_id") =!= col("pr.query_id"))
       .select(col("pr.query_id"), col("ix.vec_id").as("neighbor_id"),
-        cos.as("cosine"))
+        st.scoreOf.as(st.score))
       .withColumn("rank", row_number().over(wRank))
       .filter(col("rank") <= k)
       .orderBy("query_id", "rank")
   }
 
-  /** DELETE vectors from the cell store — works UNCHANGED on both
-    * storage formats (the anti-join keys on vec_id and never touches
-    * the payload, float or codes — the one maintenance verb the SQ
-    * store gets at full parity). [[Bucketing.deleteByKey]]'s contract:
-    * anti-join staged rewrite, idempotent on absent ids, fit/storage
-    * properties and batch marker carried, swap-instant outage. The
-    * centroid companion is untouched — centroids are FIT state, not
-    * row state; deleting rows can skew occupancy ([[cellStats]] is the
-    * watch metric) but never invalidates the assignment of the rows
-    * that remain. Refuses a torn pair (the [[refit]] rule): a delete
-    * mid-refit would carry the stale fit property forward and mask the
-    * tear. */
-  def delete(spark: SparkSession, table: String, vecIds: DataFrame): Unit = {
-    spark.catalog.refreshTable(table)
-    spark.catalog.refreshTable(centTableOf(table))
-    requireFitMatch(spark, table)
-    Bucketing.deleteByKey(spark, table, "vec_id", vecIds)
-  }
+  /** DELETE vectors from the cell store — [[StoreFamily.delete]], on
+    * both storage formats unchanged (the anti-join keys on vec_id and
+    * never touches the payload). The centroid companion is untouched —
+    * centroids are FIT state, not row state; deleting rows can skew
+    * occupancy ([[cellStats]] is the watch metric) but never invalidates
+    * the assignment of the rows that remain. Refuses a torn pair: a
+    * delete mid-refit would carry the stale fit property forward and
+    * mask the tear. */
+  def delete(spark: SparkSession, table: String, vecIds: DataFrame): Unit =
+    StoreFamily.delete(Family, spark, table, vecIds)
 
-  /** DEFERRED delete — the O(condemned) verb on the cell store, both
-    * storages (the tombstone keys on vec_id and never touches the
-    * payload, like [[delete]]): condemned ids append to the side-table,
-    * probes subtract them broadcast, the physical purge rides the next
-    * full rewrite (compact / eager delete / [[refit]] / [[rebuildSq]] /
-    * [[reindexVectors]]). One stated asymmetry: [[cellStats]] keeps
-    * reading PHYSICAL occupancy until the fold — the refit trigger's
-    * skew metric tracks what probes actually scan (tombstoned rows
-    * still occupy the cell files), which is the honest cost signal.
-    * Idempotent: only ids with live rows tombstone (DeleteSpec). */
+  /** DEFERRED delete — [[StoreFamily.deleteDeferred]], both storages.
+    * One stated asymmetry: [[cellStats]] keeps reading PHYSICAL occupancy
+    * until the fold — the refit trigger's skew metric tracks what probes
+    * actually scan (tombstoned rows still occupy the cell files). */
   def deleteDeferred(spark: SparkSession, table: String,
-      vecIds: DataFrame): Unit = {
-    spark.catalog.refreshTable(table)
-    spark.catalog.refreshTable(centTableOf(table))
-    requireFitMatch(spark, table)
-    val ids = vecIds
-      .select(vecIds(vecIds.columns.head).cast("long").as("vec_id"))
-      .distinct().localCheckpoint(true)
-    val doomed = Bucketing.liveRows(spark, table, "vec_id")
-      .join(ids, Seq("vec_id"), "left_semi")
-      .select("vec_id").distinct().localCheckpoint(true)
-    if (!doomed.isEmpty)
-      Bucketing.tombstone(spark, table, "vec_id", doomed)
-  }
+      vecIds: DataFrame): Unit =
+    StoreFamily.deleteDeferred(Family, spark, table, vecIds)
 
   /** The recorded fit's size (row count of the centroid companion) —
     * what a maintenance refit sizes its replacement fit at (the
     * curatedCellIndexed trigger's k). */
   def fitSize(spark: SparkSession, table: String): Int = {
-    val centTable = centTableOf(table)
-    require(spark.catalog.tableExists(centTable),
-      s"$table carries no centroid companion ($centTable) — not built by IvfIndex.build")
-    spark.catalog.refreshTable(centTable)
-    spark.table(centTable).count().toInt
+    requireCompanion(spark, table)
+    spark.catalog.refreshTable(centTableOf(table))
+    spark.table(centTableOf(table)).count().toInt
   }
 
   /** Per-cell occupancy of the store — the IVF family's health metric,
@@ -372,24 +365,38 @@ object IvfIndex {
       .orderBy("cell")
   }
 
+  private def refitSqMessage(table: String): String =
+    s"$table is an int8 SQ store — its rows carry codes, not the float " +
+      "vectors reassignment ranks; fit maintenance for an SQ store is a " +
+      "rebuild from the source corpus (buildSq at the new fit)"
+
+  /** The fit's full rewrite, shared by [[refit]] and [[rebuildSq]]: the
+    * cells are re-assigned against `cent` (materialized) from
+    * `payload(live rows)`, then the companion swaps to `cent` — two
+    * [[StoreFamily.rewrite]]s, each recording the new fit version. */
+  private def swapFit(st: Storage, spark: SparkSession, table: String,
+      cent: DataFrame)(payload: DataFrame => DataFrame): Unit = {
+    val fit = Map(FitProp -> fitVersionOf(cent))
+    StoreFamily.rewrite(spark, table, props = fit)(
+      live => assignOf(payload(live), cent, st.carry))
+    StoreFamily.rewrite(spark, centTableOf(table), props = fit)(_ => cent)
+  }
+
   /** RE-FIT maintenance — the IVF analog of [[Bucketing.compact]], for
     * fit drift instead of file fragmentation: the centroids are frozen
     * at build (training-time state), so a stream whose distribution
     * drifts from the fit piles vectors into few hot cells and probe
     * cost degrades toward a full scan ([[cellStats]] is the trigger
-    * metric). `refit` REASSIGNS every stored vector against `newCent`
-    * (c_id, cv, cnrm — the caller's new fit: a k-means pass in
-    * production, any deterministic rule in specs) and swaps BOTH tables
-    * via the staged rewrite ([[Bucketing.stagedSwapIn]]): readers see
-    * old pair → (swap instant) → new pair per table.
+    * metric). `refit` REASSIGNS every live stored vector against
+    * `newCent` (c_id, cv, cnrm — the caller's new fit: a k-means pass in
+    * production, any deterministic rule in specs) and swaps BOTH tables,
+    * each through the staged [[StoreFamily.rewrite]].
     *
     * Torn-pair honesty: the two swaps are two catalog operations, not
     * one transaction. Between them the pair is INCONSISTENT — cells
     * assigned under the new fit, companion still carrying the old — and
-    * a probe in that window must not silently miss, so every probe and
-    * append checks the recorded fit versions match and FAILS LOUDLY on
-    * the torn state (the `graft.ivf.fit` guard; single-writer,
-    * probes-may-retry — the compact contract extended to refit). Crash
+    * every probe and append FAILS LOUDLY on the torn state (the
+    * `graft.ivf.fit` guard; single-writer, probes-may-retry). Crash
     * recovery: cells swapped + companion not ⇒ re-run just the
     * companion swap (the staged table is intact under
     * `<cent>__compact`) or re-run refit; nothing is lost either way.
@@ -397,39 +404,14 @@ object IvfIndex {
     * one-rewrite-buys-every-probe trade as compaction, measured in
     * SCALING.md round 18's drift probe. */
   def refit(spark: SparkSession, table: String, newCent: DataFrame): Unit = {
-    requireFitMatch(spark, table) // refuse to stack a refit on a torn pair
-    // refit REASSIGNS, and assignment ranks full-precision vectors — an
-    // SQ store kept only the codes, so the information refit needs is
-    // gone by design (the 7x compression's stated price: FAISS's SQ
-    // indexes can't re-train from codes either).
-    require(!isSqStore(spark, table),
-      s"$table is an int8 SQ store — its rows carry codes, not the float " +
-        "vectors reassignment ranks; fit maintenance for an SQ store is a " +
-        "rebuild from the source corpus (buildSq at the new fit)")
-    val cent = newCent.select(col("c_id"), col("cv"), col("cnrm"))
-      .localCheckpoint(true)
-    val version = fitVersionOf(cent)
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val buckets = meta.bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(
-        s"$table carries no bucket spec — not built by IvfIndex.build"))
-    // carry user-level properties through the swap (the compact rule) —
-    // dropping them would, e.g., reset the streaming loop's batch marker
-    // and re-open the replay window mid-refit
-    val carried = meta.properties.filterNot { case (k, _) =>
-      k.startsWith("spark.") || k.startsWith("transient_") ||
-        k == "comment" || k == "owner"
-    }
-    // LIVE membership: a full rewrite reassigns the store's logical
-    // contents and folds the pending tombstones (cleared after the swap)
-    val snapshot = Bucketing.liveRows(spark, table, "vec_id")
-      .select(col("vec_id"), col("v"), col("nrm")).localCheckpoint(true)
-    Bucketing.stagedSwapIn(spark, table, assignOf(snapshot, cent),
-      "cell", buckets, carried + (FitProp -> version))
-    Bucketing.stagedSwapIn(spark, centTableOf(table), cent,
-      "c_id", 1, Map(FitProp -> version))
-    Bucketing.clearTombstones(spark, table)
+    // refuse to stack a refit on a torn pair; refit REASSIGNS, and
+    // assignment ranks full-precision vectors — an SQ store kept only
+    // the codes (the 7x compression's stated price: FAISS's SQ indexes
+    // can't re-train from codes either)
+    require(!isSq(StoreFamily.open(Family, spark, table)),
+      refitSqMessage(table))
+    swapFit(Full, spark, table, newCent.select(col("c_id"), col("cv"),
+      col("cnrm")).localCheckpoint(true))(_.select("vec_id", "v", "nrm"))
   }
 
   /** [[refit]] with the engine's deterministic fit rule applied to the
@@ -440,31 +422,29 @@ object IvfIndex {
   def refit(spark: SparkSession, table: String, nCentroids: Int): Unit = {
     spark.catalog.refreshTable(table)
     // guard BEFORE the select below analyzes — an SQ store has no `v`
-    // column and the unresolved-column error would mask the real
-    // contract (same message as the frame-based entry's guard)
-    require(!isSqStore(spark, table),
-      s"$table is an int8 SQ store — its rows carry codes, not the float " +
-        "vectors reassignment ranks; fit maintenance for an SQ store is a " +
-        "rebuild from the source corpus (buildSq at the new fit)")
-    // orderBy+limit plans as TakeOrderedAndProject (per-partition top-n,
-    // driver merge of nCentroids rows) — never a global sort. LIVE rows:
-    // a tombstoned vector must not define the replacement fit.
-    refit(spark, table,
-      Bucketing.liveRows(spark, table, "vec_id")
-        .select(col("vec_id"), col("v"), col("nrm"))
-        .orderBy("vec_id").limit(nCentroids)
-        .select(col("vec_id").as("c_id"), col("v").as("cv"),
-          col("nrm").as("cnrm")))
+    // column and the unresolved-column error would mask the real contract
+    require(!isSq(Bucketing.props(spark, table)), refitSqMessage(table))
+    // LIVE rows: a tombstoned vector must not define the replacement fit
+    refit(spark, table, firstCentroids(nCentroids,
+      Bucketing.liveRows(spark, table, "vec_id")))
   }
 
+  /** The `n` smallest vec_ids' vectors as a fit (c_id, cv, cnrm) — the
+    * deterministic rule the Int overloads re-run over the grown store.
+    * orderBy+limit plans as TakeOrderedAndProject (per-partition top-n,
+    * driver merge of n rows) — never a global sort. */
+  private def firstCentroids(n: Int, vectors: DataFrame): DataFrame =
+    vectors.select(col("vec_id"), col("v"), col("nrm"))
+      .orderBy("vec_id").limit(n)
+      .select(col("vec_id").as("c_id"), col("v").as("cv"),
+        col("nrm").as("cnrm"))
+
   /** Build-once memo for dir-derived indexes — the registered q137 runs
-    * through it (the AnnIndex/PostingsIndex ensureFor rule: keyed on the
-    * embeddings listing signature with the layout parameters folded into
+    * through it ([[StoreFamily.ensureFor]], with the layout parameters in
     * the key and table name). */
   def ensureFor(spark: SparkSession, dir: String, tag: String,
       buckets: Int = 8, nCentroids: Int = NCentroids): String =
-    IndexMemo.ensure(s"ivf|$tag|$dir|$buckets|$nCentroids",
-      graft.Tables.listingSignature(dir, "embeddings"), s"ivf_$tag")(
+    StoreFamily.ensureFor(Family, "ivf", tag, dir, Seq(buckets, nCentroids))(
       t => build(spark, dir, t, buckets, nCentroids))
 
   // ---------------------------------------------------------------------
@@ -472,14 +452,14 @@ object IvfIndex {
   // scaladoc names ("composed with q37's IVF cells this is the standard
   // IVF-SQ index"), realized on the persisted family. The cell layout,
   // fit identity, guards, and maintenance triggers are IDENTICAL to the
-  // float store; what changes is the ROW PAYLOAD: 64 signed bytes + one
-  // double norm (~72 B) instead of 64 doubles + a norm (~520 B), a ~7x
-  // reduction in the bytes every probed cell scans — the memory-
-  // bandwidth lever that turns a 100 TB embedding store into ~14 TB of
-  // codes executors can hold in page cache. Ranking inside the probed
-  // cells is the quantized cosine (exact small-integer arithmetic, so
-  // the q143 oracle hash-matches DuckDB bit-for-bit, the q38
-  // precedent); the coarse quantizer stays full-precision (float
+  // float store; what changes is the ROW PAYLOAD ([[Storage]]): 64 signed
+  // bytes + one double norm (~72 B) instead of 64 doubles + a norm
+  // (~520 B), a ~7x reduction in the bytes every probed cell scans — the
+  // memory-bandwidth lever that turns a 100 TB embedding store into
+  // ~14 TB of codes executors can hold in page cache. Ranking inside the
+  // probed cells is the quantized cosine (exact small-integer
+  // arithmetic, so the q143 oracle hash-matches DuckDB bit-for-bit, the
+  // q38 precedent); the coarse quantizer stays full-precision (float
   // centroids, float query), the FAISS IVF-SQ split. The stated price:
   // (a) ranking error bounded by the per-vector scale grid — measured
   // against the float ranking in IvfSqSpec, with the all-cells endpoint
@@ -506,104 +486,25 @@ object IvfIndex {
     * — int8 codes + quantized norm — and records `graft.ivf.storage=sq`
     * so every entry point routes loudly. */
   def buildSq(spark: SparkSession, dir: String, table: String,
-      buckets: Int = 8, nCentroids: Int = NCentroids): Unit = {
-    val e = sqPayload(Similarity.normedVectors(spark, dir))
-    val cent = e.filter(col("vec_id") < nCentroids)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"),
-        col("nrm").as("cnrm"))
-      .localCheckpoint(true)
-    val version = fitVersionOf(cent)
-    Bucketing.writeBucketed(assignOf(e, cent, carry = Seq("qv", "qnrm")),
-      table, "cell", buckets)
-    Bucketing.writeBucketed(cent, centTableOf(table), "c_id", 1)
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-      s"'$FitProp' = '$version', '$StorageProp' = 'sq')")
-    writeFitVersion(spark, centTableOf(table), version)
-  }
+      buckets: Int = 8, nCentroids: Int = NCentroids): Unit =
+    buildAs(Sq, spark, dir, table, buckets, nCentroids)
 
   /** [[appendVectors]]'s SQ twin: quantize the batch with the shared
     * quantizer, assign its FLOAT vectors against the recorded centroids
-    * (the coarse quantizer never sees codes), insert bucket-aligned.
-    * Same fit-version guard, same single-writer/disjoint-ids
-    * contract. */
-  def appendVectorsSq(table: String, embeddings: DataFrame): Unit = {
-    val spark = embeddings.sparkSession
-    val centTable = centTableOf(table)
-    require(spark.catalog.tableExists(centTable),
-      s"$table carries no centroid companion ($centTable) — not built by IvfIndex.buildSq")
-    requireFitMatch(spark, table)
-    requireStorage(spark, table, wantSq = true)
-    val cent = spark.table(centTable).localCheckpoint(true)
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(throw new IllegalStateException(
-        s"$table carries no bucket spec — not built by IvfIndex.buildSq"))
-    val e = sqPayload(Similarity.normedVectorsOf(spark, embeddings))
-    assignOf(e, cent, carry = Seq("qv", "qnrm"))
-      .repartition(buckets, col("cell"))
-      .write.mode("append").insertInto(table)
-  }
+    * (the coarse quantizer never sees codes), insert bucket-aligned. */
+  def appendVectorsSq(table: String, embeddings: DataFrame): Unit =
+    appendAs(Sq, table, embeddings)
 
   /** [[topKFor]]'s SQ twin: `anchors` = (query_id, v, nrm) — queries
     * arrive FULL-PRECISION (the serving reality; the store alone is
     * quantized). Coarse ranking against the float centroid companion is
     * identical to the float probe — so the probed CELLS are exactly the
-    * float probe's — and the in-cell re-rank is the quantized cosine:
-    * the query quantizes with the shared quantizer, the stored codes
-    * cast back to exact doubles, and `rank` orders by (qcosine DESC,
-    * neighbor_id), q38's tie rule. Output column is `qcosine`, matching
-    * the q143 oracle. */
+    * float probe's — and the in-cell re-rank is the quantized cosine,
+    * `rank` ordered by (qcosine DESC, neighbor_id), q38's tie rule.
+    * Output column is `qcosine`, matching the q143 oracle. */
   def topKForSq(spark: SparkSession, table: String, anchors: DataFrame,
-      k: Int, nProbe: Int = NProbe): DataFrame = {
-    graft.plans.GraftExtensions.install(spark)
-    spark.catalog.refreshTable(table)
-    spark.catalog.refreshTable(centTableOf(table))
-    requireFitMatch(spark, table)
-    requireStorage(spark, table, wantSq = true)
-    val cent = spark.table(centTableOf(table))
-    val simToCent = Similarity.dot(col("qv0"), col("cv")) /
-      (col("qnrm0") * col("cnrm"))
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("c_sim").desc, col("c_id"))
-    val ascale = Similarity.int8Scale(col("qv0"))
-    val quantized = anchors
-      .select(col("query_id"), col("v").as("qv0"), col("nrm").as("qnrm0"))
-      .withColumn("aqv", Similarity.int8Of(col("qv0"), ascale))
-      .withColumn("aqnrm", sqrt(Similarity.dot(col("aqv"), col("aqv"))))
-    val probes = quantized
-      .crossJoin(broadcast(cent))
-      .select(col("query_id"), col("aqv"), col("aqnrm"), col("c_id"),
-        simToCent.as("c_sim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe)
-      .select(col("query_id"), col("c_id").as("cell"), col("aqv"),
-        col("aqnrm"))
-      .localCheckpoint(true)
-    val probeCells = probes.select("cell").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    // the compiled int8 fold reads the codes IN PLACE (DotFoldI8: each
-    // byte widens to the exact double it quantized from, bit-identical
-    // to cast-then-DotFold) — the first spelling's interpreted
-    // `transform` cast materialized a fresh 64-element array per
-    // scanned row and cost more than the 7x byte saving bought
-    // (measured, SCALING.md round 18)
-    val qcos = call_function("dot_fold_i8", col("ix.qv"), col("pr.aqv")) /
-      (col("pr.aqnrm") * col("ix.qnrm"))
-    val wRank = Window.partitionBy("query_id")
-      .orderBy(col("qcosine").desc, col("neighbor_id"))
-    Bucketing.subtractTombstones(spark, table, "vec_id",
-        spark.table(table)
-          .filter(col("cell").isin(probeCells: _*))) // bucket pruning HERE
-      .as("ix")
-      .join(broadcast(probes.as("pr")),
-        col("ix.cell") === col("pr.cell") &&
-          col("ix.vec_id") =!= col("pr.query_id"))
-      .select(col("pr.query_id"), col("ix.vec_id").as("neighbor_id"),
-        qcos.as("qcosine"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .orderBy("query_id", "rank")
-  }
+      k: Int, nProbe: Int = NProbe): DataFrame =
+    probe(Sq, spark, table, anchors, k, nProbe)
 
   /** FIT MAINTENANCE for the SQ store — the scheduled rebuild the
     * [[refit]] guard and the streaming loop's scaladoc tell deployments
@@ -611,63 +512,31 @@ object IvfIndex {
     * new fit needs the SOURCE CORPUS back (`embeddings` — the same
     * (vec_id, label, embedding) frame the build read; at 100 TB that is
     * the cold corpus the codes were quantized from, re-read once per
-    * fit change — the stated operational price of the 7× compression,
-    * now a callable op instead of a scaladoc instruction). Re-quantizes
-    * and re-assigns every corpus vector whose vec_id the store holds
-    * (the store's membership is the truth — vectors deleted from the
-    * store stay deleted; vectors in the store but absent from the
-    * handed corpus FAIL the completeness check loudly, because
+    * fit change — the stated operational price of the 7× compression).
+    * Re-quantizes and re-assigns every corpus vector whose vec_id the
+    * store holds (the store's membership is the truth — vectors deleted
+    * from the store stay deleted; vectors in the store but absent from
+    * the handed corpus FAIL the completeness check loudly, because
     * silently dropping them would be a delete nobody asked for), then
-    * swaps BOTH tables via the staged rewrite with the new fit version
-    * — [[refit]]'s torn-pair contract verbatim, including property
-    * carry-through (batch markers survive). Single-writer; probes may
-    * retry on the fit-version guard across the two swaps. */
+    * swaps BOTH tables with the new fit version — [[refit]]'s torn-pair
+    * contract verbatim. Unlike every other verb it does not require a
+    * matching pair: it is the repair. */
   def rebuildSq(spark: SparkSession, table: String, embeddings: DataFrame,
       newCent: DataFrame): Unit = {
     spark.catalog.refreshTable(table)
-    spark.catalog.refreshTable(centTableOf(table))
-    requireStorage(spark, table, wantSq = true)
+    requireStorage(Sq, table, StoreFamily.recorded(Family, spark, table))
     val cent = newCent.select(col("c_id"), col("cv"), col("cnrm"))
       .localCheckpoint(true)
-    val version = fitVersionOf(cent)
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val buckets = meta.bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(
-        s"$table carries no bucket spec — not built by IvfIndex.buildSq"))
-    val carried = meta.properties.filterNot { case (k, _) =>
-      k.startsWith("spark.") || k.startsWith("transient_") ||
-        k == "comment" || k == "owner"
-    }
-    // LIVE membership (the refit rule): the rebuild re-quantizes the
-    // store's logical contents and folds the pending tombstones
-    val ids = Bucketing.liveRows(spark, table, "vec_id")
-      .select("vec_id").localCheckpoint(true)
-    val member = Similarity.normedVectorsOf(spark, embeddings)
-      .join(ids, Seq("vec_id"), "left_semi")
-    val payload = sqPayload(member).localCheckpoint(true)
-    // completeness guard in the ROBUST anti-join form (the reband rule):
-    // the count-difference spelling (ids.count − payload.count) lets a
-    // DUPLICATE vec_id in the handed corpus cancel a MISSING store id —
-    // the require passes, the swap silently deletes the missing vector
-    // and lands duplicate rows. Check each hazard by name instead.
-    val missing = ids
-      .join(payload.select("vec_id"), Seq("vec_id"), "left_anti").count()
-    require(missing == 0L,
-      s"$table holds $missing vec_ids the handed corpus lacks — a rebuild " +
-        "over this corpus would silently delete them; hand the full source " +
-        "corpus (or delete the ids first if removal is intended)")
+    // LIVE membership: the rebuild re-quantizes the store's logical
+    // contents (and its rewrite folds the pending tombstones)
+    val payload = sqPayload(StoreFamily.liveMembers(Family, spark, table,
+      Similarity.normedVectorsOf(spark, embeddings))).localCheckpoint(true)
     val dup = payload.count() - payload.select("vec_id").distinct().count()
     require(dup == 0L,
       s"the handed corpus carries $dup duplicate vec_ids among the store's " +
         "members — a rebuild would land duplicate rows; dedup the corpus " +
         "frame first (one embedding per vec_id is the build contract)")
-    Bucketing.stagedSwapIn(spark, table,
-      assignOf(payload, cent, carry = Seq("qv", "qnrm")),
-      "cell", buckets, carried + (FitProp -> version))
-    Bucketing.stagedSwapIn(spark, centTableOf(table), cent,
-      "c_id", 1, Map(FitProp -> version))
-    Bucketing.clearTombstones(spark, table)
+    swapFit(Sq, spark, table, cent)(_ => payload)
   }
 
   /** [[rebuildSq]] with the deterministic fit rule ([[refit]]'s Int
@@ -678,12 +547,9 @@ object IvfIndex {
       nCentroids: Int): Unit = {
     spark.catalog.refreshTable(table)
     val ids = Bucketing.liveRows(spark, table, "vec_id").select("vec_id")
-    rebuildSq(spark, table, embeddings,
+    rebuildSq(spark, table, embeddings, firstCentroids(nCentroids,
       Similarity.normedVectorsOf(spark, embeddings)
-        .join(ids, Seq("vec_id"), "left_semi")
-        .orderBy("vec_id").limit(nCentroids)
-        .select(col("vec_id").as("c_id"), col("v").as("cv"),
-          col("nrm").as("cnrm")))
+        .join(ids, Seq("vec_id"), "left_semi")))
   }
 
   /** Build-once memo for the SQ store — the registered q143 runs through
@@ -691,7 +557,6 @@ object IvfIndex {
     * over the same dir never collide). */
   def ensureForSq(spark: SparkSession, dir: String, tag: String,
       buckets: Int = 8, nCentroids: Int = NCentroids): String =
-    IndexMemo.ensure(s"ivfsq|$tag|$dir|$buckets|$nCentroids",
-      graft.Tables.listingSignature(dir, "embeddings"), s"ivfsq_$tag")(
+    StoreFamily.ensureFor(Family, "ivfsq", tag, dir, Seq(buckets, nCentroids))(
       t => buildSq(spark, dir, t, buckets, nCentroids))
 }

@@ -64,6 +64,13 @@ object PostingsIndex {
     * compact/refresh path addresses the pair through this one rule. */
   private[sources] def dfTableOf(table: String): String = s"${table}_df"
 
+  /** The postings family: rows keyed by doc_id, bucketed by `term`,
+    * identity = the recorded collection stats, derived state = the df
+    * companion and those stats ([[fold]]). */
+  private[sources] val Family = StoreFamily("PostingsIndex", "doc_id",
+    "term", Seq(NDocsProp, SumDlProp), "documents", _ => "postings",
+    companions = t => Seq(dfTableOf(t)), derived = Some(fold))
+
   /** Tokenize the corpus docs of `dir` (restricted to `corpusPred`),
     * aggregate (term, doc_id, dl, tf), persist bucketed by `term`, write
     * the (term, df) companion, and record the collection stats as table
@@ -77,7 +84,7 @@ object PostingsIndex {
     Bucketing.writeBucketed(postingsOf(toks), table, "term", buckets)
     Bucketing.writeBucketed(dfOf(spark.table(table)),
       dfTableOf(table), "term", buckets)
-    writeStats(spark, table, collectionStats(toks))
+    writeStats(spark, table, collectionStats(toks), None)
   }
 
   /** Incremental maintenance — the ingest path: tokenize a NEW batch of
@@ -125,25 +132,20 @@ object PostingsIndex {
     * writes one file per (task, bucket) pair, so an unaligned
     * batch fragments at tasks × buckets per append — measured 841
     * files/epoch vs ~110 aligned on the 20-epoch stream probe
-    * (SCALING.md round 18), a 13× slower small-files accumulation for
-    * one batch-sized shuffle. */
+    * ([[Bucketing.insertAligned]]). */
   def appendDocs(table: String, docs: DataFrame,
       committedBatch: Option[Long] = None): Unit = {
     val spark = docs.sparkSession
-    val buckets = bucketCount(spark, table)
     val toks = Retrieval.tokenizedDocsOf(docs).localCheckpoint(true)
     val post = postingsOf(toks).localCheckpoint(true)
-    post.repartition(buckets, col("term"))
-      .write.mode("append").insertInto(table)
-    dfOf(post).repartition(buckets, col("term"))
-      .write.mode("append").insertInto(dfTableOf(table))
+    Bucketing.insertAligned(spark, table, post)
+    Bucketing.insertAligned(spark, dfTableOf(table), dfOf(post))
     val (n0, s0) = stats(spark, table)
     val (n1, s1) = collectionStats(toks)
     // the streaming loop's idempotence marker rides in the SAME property
-    // statement as the stats fold — one catalog commit for both, so the
+    // write as the stats fold — one catalog commit for both, so the
     // marker can never say "committed" while the stats say otherwise
-    writeStats(spark, table, (n0 + n1, s0 + s1),
-      committedBatch.map(Bucketing.batchMarkerClause).getOrElse(""))
+    writeStats(spark, table, (n0 + n1, s0 + s1), committedBatch)
   }
 
   /** Recompute (n_docs, sum_dl) FROM the postings table, rewrite the
@@ -159,182 +161,90 @@ object PostingsIndex {
     // agree with what probes serve
     val live = Bucketing.liveRows(spark, table, "doc_id")
       .localCheckpoint(true)
-    val r = live
-      .groupBy("doc_id").agg(max(col("dl")).as("dl"))
-      .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
-    writeStats(spark, table, (r.getLong(0), r.getLong(1)))
-    Bucketing.writeBucketed(dfOf(live), dfTableOf(table),
-      "term", bucketCount(spark, table))
+    writeStats(spark, table, docStats(live), None)
+    Bucketing.writeBucketed(dfOf(live), dfTableOf(table), "term",
+      Bucketing.bucketSpec(Bucketing.metadata(spark, table)).numBuckets)
   }
 
-  /** DELETE documents from the index pair — the retroactive-removal verb
-    * the recurring sweeps imply: q133/q134's decontam names contaminated
-    * doc_ids, q140/q141's dedup names near-dup losers, and the ingest
-    * gate can only refuse NEW arrivals — purging docs already indexed
-    * took a full rebuild until this. Mechanics: the doomed rows read
-    * FROM THE STORE first (so deleting absent or already-deleted ids is
-    * a no-op by construction — the sweep re-feeds its whole condemned
-    * set without tracking prior runs), then three operations in the
-    * order that keeps the failure windows benign:
-    *   1. the postings purge ([[Bucketing.deleteByKey]] — anti-join
-    *      staged rewrite; the correctness-critical step: at the swap
-    *      instant deleted docs stop being served, unconditionally);
-    *   2. NEGATIVE df deltas appended to the companion — the append-only
-    *      delta design's payoff: a delete is O(deleted vocabulary) rows,
-    *      never a companion rewrite; probe sums stay exact integers
-    *      (totals + positive deltas − negative deltas = survivor df,
-    *      the arithmetic DeleteSpec pins against a rebuild);
-    *   3. (n_docs, sum_dl) folded DOWN in the property statement.
-    * A crash between 1 and 3 leaves stats/df overstated — probes score
-    * with slightly-damped idf until [[refreshStats]] recovers, but no
-    * deleted document is ever served (the window's one invariant, and
-    * why the purge goes first). Single-writer like every maintenance
-    * path; probes may retry across the swap instant. `docIds` is any
+  /** DELETE documents from the index pair — [[StoreFamily.delete]]: the
+    * postings purge first (the correctness-critical step: at the swap
+    * instant deleted docs stop being served, unconditionally), then
+    * [[fold]]'s NEGATIVE df deltas — the append-only delta design's
+    * payoff: a delete is O(deleted vocabulary) companion rows, never a
+    * companion rewrite, and probe sums stay exact integers (totals +
+    * positive deltas − negative deltas = survivor df, the arithmetic
+    * DeleteSpec pins against a rebuild) — and (n_docs, sum_dl) folded
+    * DOWN. A crash between purge and fold leaves stats/df overstated —
+    * probes score with slightly-damped idf until [[refreshStats]]
+    * recovers, but no deleted document is ever served. `docIds` is any
     * one-column frame of doc ids. */
-  def delete(spark: SparkSession, table: String, docIds: DataFrame): Unit = {
-    val doomed = doomedSlice(spark, table, docIds)
-    val (nDel, sDel, ids) = doomedStats(doomed)
-    if (nDel > 0L) {
-      Bucketing.deleteByKey(spark, table, "doc_id", ids)
-      foldDown(spark, table, doomed, nDel, sDel)
-    }
-  }
+  def delete(spark: SparkSession, table: String, docIds: DataFrame): Unit =
+    StoreFamily.delete(Family, spark, table, docIds)
 
-  /** DEFERRED delete — the O(condemned) verb for the frequent-delete
-    * deployment (a recurring decontam sweep whose verdict set is tiny
-    * against the store): where [[delete]] pays the compaction-class
-    * full rewrite per purge batch, this appends the condemned doc ids
-    * to the store's tombstone side-table ([[Bucketing.tombstone]]) and
-    * lets every probe subtract them as a broadcast anti-join — probe
-    * results are BIT-EQUAL to the eager verb's (DeleteSpec pins deferred
-    * ≡ eager ≡ rebuild-over-survivors), because the derived state folds
-    * identically at delete time: negative df deltas append
-    * (O(deleted vocabulary)) and (n_docs, sum_dl) fold down, exactly
-    * [[delete]]'s steps 2–3 — only the physical purge (step 1) defers to
-    * the maintenance cadence ([[compact]] and every full rewrite fold
-    * the tombstones and drop the side-table). Idempotent like the eager
-    * verb: the doomed slice reads LIVE rows only, so a re-fed condemned
-    * set finds nothing to fold. Crash windows mirror eager's: the
-    * tombstone append is the commit point (no deleted doc served past
-    * it); a crash before the deltas/stats leaves them overstated —
-    * damped idf, never inverting, recovered by [[refreshStats]]. */
+  /** DEFERRED delete — [[StoreFamily.deleteDeferred]]: the tombstone
+    * append replaces [[delete]]'s purge, the derived state folds
+    * identically at delete time, so probe results are BIT-EQUAL to the
+    * eager verb's (DeleteSpec pins deferred ≡ eager ≡
+    * rebuild-over-survivors). */
   def deleteDeferred(spark: SparkSession, table: String,
-      docIds: DataFrame): Unit = {
-    val doomed = doomedSlice(spark, table, docIds)
-    val (nDel, sDel, _) = doomedStats(doomed)
-    if (nDel > 0L) {
-      Bucketing.tombstone(spark, table, "doc_id",
-        doomed.select("doc_id").distinct())
-      foldDown(spark, table, doomed, nDel, sDel)
-    }
-  }
+      docIds: DataFrame): Unit =
+    StoreFamily.deleteDeferred(Family, spark, table, docIds)
 
-  /** UPSERT/re-crawl — the production event the append contract's
-    * disjoint-ids rule excludes: the SAME doc_id arrives with CHANGED
-    * text (a re-crawl), and appending without deleting first would leave
+  /** UPSERT/re-crawl — [[StoreFamily.reindex]]: the SAME doc_id arrives
+    * with CHANGED text, and appending without deleting first would leave
     * the old text's postings silently coexisting with the new (double
-    * df, phantom matches). One composed operation per store pair, never
-    * a caller-composed delete+append (two rewrites, plus a window where
-    * neither version serves): the postings swap is ONE staged rewrite
-    * ([[Bucketing.upsertByKey]]: survivors minus re-crawled ids, plus
-    * the fresh batch's rows, pending tombstones folded — a re-crawled
-    * id that was tombstoned is alive again with the new content), the
-    * df companion gets the old rows' negative deltas and the new rows'
-    * positive deltas in one append, and the stats fold both directions.
-    * Brand-new doc_ids ride along (they replace nothing). Probes after
-    * equal a fresh build over the UPDATED corpus (ReindexSpec). Crash
-    * windows: the swap is the commit point (old text never served past
-    * it); deltas/stats lag a crash like delete's, recovered by
-    * [[refreshStats]]. Single-writer like every maintenance path. */
+    * df, phantom matches). One staged rewrite swaps the postings; the df
+    * companion then gets the old rows' negative and the new rows'
+    * positive deltas in one append, and the stats fold both directions
+    * ([[fold]]). Brand-new doc_ids ride along (they replace nothing). */
   def reindex(spark: SparkSession, table: String, docs: DataFrame): Unit = {
+    StoreFamily.open(Family, spark, table)
     val batch = docs.select(col("doc_id").cast("long").as("doc_id"),
       col("text"))
-    require(batch.groupBy("doc_id").count().filter(col("count") > 1).isEmpty,
-      "reindex batch carries duplicate doc_ids — one text per doc is the " +
-        "re-crawl contract (dedupe the batch first)")
-    val doomed = doomedSlice(spark, table, batch.select("doc_id"))
-    val (nDel, sDel, _) = doomedStats(doomed)
-    val toks = Retrieval.tokenizedDocsOf(batch).localCheckpoint(true)
-    val post = postingsOf(toks).localCheckpoint(true)
-    val (nNew, sNew) = collectionStats(toks)
-    val buckets = bucketCount(spark, table)
-    Bucketing.upsertByKey(spark, table, "doc_id", post)
-    doomed.groupBy("term").agg((-count(lit(1))).as("df"))
-      .unionByName(dfOf(post))
-      .groupBy("term").agg(sum(col("df")).as("df"))
-      .filter(col("df") =!= 0L)
-      .repartition(buckets, col("term"))
-      .write.mode("append").insertInto(dfTableOf(table))
-    val (n0, s0) = stats(spark, table)
-    writeStats(spark, table, (n0 - nDel + nNew, s0 - sDel + sNew))
+    val post = postingsOf(Retrieval.tokenizedDocsOf(batch))
+      .localCheckpoint(true)
+    StoreFamily.reindex(Family, spark, table, batch.select("doc_id"), post)
   }
 
-  /** The LIVE doomed slice for a condemned id frame: rows the store
-    * still serves for those ids — already-tombstoned (or never-indexed,
-    * or eagerly-purged) ids contribute nothing, which is what makes
-    * every delete verb idempotent AND keeps the two verbs composable
-    * (a deferred delete followed by an eager re-feed of the same set
-    * must not fold the stats twice). Materialized BEFORE any purge or
-    * tombstone lands: it feeds the stats decrement and the negative df
-    * deltas, and after the verb commits the rows it aggregates are no
-    * longer visible. */
-  private def doomedSlice(spark: SparkSession, table: String,
-      docIds: DataFrame): DataFrame = {
-    spark.catalog.refreshTable(table)
-    spark.catalog.refreshTable(dfTableOf(table))
-    stats(spark, table) // refuse a table this object did not build
-    val ids = docIds
-      .select(docIds(docIds.columns.head).cast("long").as("doc_id"))
-      .distinct().localCheckpoint(true)
-    Bucketing.liveRows(spark, table, "doc_id")
-      .join(ids, Seq("doc_id"), "left_semi").localCheckpoint(true)
+  /** The derived-state [[StoreFamily.Fold]]: `removed` (materialized
+    * live posting rows about to go) and `added` (new posting rows)
+    * become one append of per-term df deltas — zero-sum terms dropped —
+    * and one (n_docs, sum_dl) property write. Exact because every
+    * document owns ≥ 1 posting row with a constant dl. */
+  private def fold(spark: SparkSession, table: String, removed: DataFrame,
+      added: Option[DataFrame]): Option[() => Unit] = {
+    val (nDel, sDel) = docStats(removed)
+    val (nNew, sNew) = added.fold((0L, 0L))(docStats)
+    Option.when(nDel + nNew > 0L) { () =>
+      val minus = removed.groupBy("term").agg((-count(lit(1))).as("df"))
+      Bucketing.insertAligned(spark, dfTableOf(table), added.fold(minus)(a =>
+        minus.unionByName(dfOf(a)).groupBy("term").agg(sum(col("df")).as("df"))
+          .filter(col("df") =!= 0L)))
+      val (n0, s0) = stats(spark, table)
+      writeStats(spark, table, (n0 - nDel + nNew, s0 - sDel + sNew), None)
+    }
   }
 
-  private def doomedStats(doomed: DataFrame): (Long, Long, DataFrame) = {
-    val st = doomed.groupBy("doc_id").agg(max(col("dl")).as("dl"))
+  /** (n_docs, sum_dl) of a posting-row frame. */
+  private def docStats(post: DataFrame): (Long, Long) = {
+    val r = post.groupBy("doc_id").agg(max(col("dl")).as("dl"))
       .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
-    (st.getLong(0), st.getLong(1), doomed.select("doc_id").distinct())
-  }
-
-  /** Steps 2–3 of both delete verbs: the batch's negative df deltas
-    * append to the companion and (n_docs, sum_dl) fold down. */
-  private def foldDown(spark: SparkSession, table: String,
-      doomed: DataFrame, nDel: Long, sDel: Long): Unit = {
-    doomed.groupBy("term").agg((-count(lit(1))).as("df"))
-      .repartition(bucketCount(spark, table), col("term"))
-      .write.mode("append").insertInto(dfTableOf(table))
-    val (n0, s0) = stats(spark, table)
-    writeStats(spark, table, (n0 - nDel, s0 - sDel))
+    (r.getLong(0), r.getLong(1))
   }
 
   /** Compact the index pair — [[Bucketing.compact]] on the postings
-    * (one file per bucket, properties carried, staged swap) plus the
-    * df-specific MERGE: the companion's append-only deltas collapse
-    * back to one total row per term (sum is the fold the probe would
-    * otherwise realize per query), staged and swapped the same way.
-    * Probes before and after are row-identical (CompactionSpec);
-    * single-writer, with each table's reader outage confined to its own
-    * two-metadata-op swap instant, per [[Bucketing.compact]]'s
-    * contract. */
+    * plus the df-specific MERGE, a second [[StoreFamily.rewrite]]: the
+    * companion's append-only deltas collapse back to one total row per
+    * term (sum is the fold the probe would otherwise realize per query).
+    * Terms whose deltas sum to zero (every holder deleted) drop out — a
+    * rebuild over the survivors would have no row for them either, so
+    * compact-after-delete stays row-identical to that rebuild. Probes
+    * before and after are row-identical (CompactionSpec). */
   def compact(spark: SparkSession, table: String): Unit = {
     Bucketing.compact(spark, table)
-    val dfTable = dfTableOf(table)
-    // terms whose deltas sum to zero (every holder deleted) drop out —
-    // a rebuild over the survivors would have no row for them either,
-    // so compact-after-delete stays row-identical to that rebuild
-    val merged = spark.table(dfTable)
-      .groupBy("term").agg(sum(col("df")).as("df"))
-      .filter(col("df") =!= 0L)
-      .localCheckpoint(true)
-    Bucketing.stagedSwapIn(spark, dfTable, merged, "term",
-      bucketCount(spark, table), Map.empty)
+    StoreFamily.rewrite(spark, dfTableOf(table))(
+      _.groupBy("term").agg(sum(col("df")).as("df")).filter(col("df") =!= 0L))
   }
-
-  private def bucketCount(spark: SparkSession, table: String): Int =
-    spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(throw new IllegalStateException(
-        s"$table carries no bucket spec — not built by PostingsIndex.build"))
 
   /** (term, doc_id, dl, tf) for a tokenized (doc_id, toks) frame — the
     * index's row shape, identical to the recompute path's postings slice
@@ -359,31 +269,19 @@ object PostingsIndex {
   }
 
   private def writeStats(spark: SparkSession, table: String,
-      ns: (Long, Long), extraProps: String = ""): Unit =
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-      s"'$NDocsProp' = '${ns._1}', '$SumDlProp' = '${ns._2}'$extraProps)")
+      ns: (Long, Long), committedBatch: Option[Long]): Unit =
+    Bucketing.setProps(spark, table,
+      Family.identityOf(ns) ++
+        committedBatch.map(Bucketing.LastBatchProp -> _.toString))
 
   /** Build-once memo for dir-derived indexes — the deployment shape the
-    * registered q134 runs through: the first call for a (tag, dir) pair
-    * builds the index, every later call (bench passes, repeated probes)
-    * returns the table name for free. Keyed on the corpus dir's
-    * file-listing signature so an in-process rewrite rebuilds instead of
-    * probing a stale index (the corpusCount memo's rule), with `buckets`
-    * AND a fingerprint of `corpusPred`'s structural rendering folded
-    * into the key and table name ([[IndexMemo]]) — two callers reusing a
-    * tag with DIFFERENT predicates on the same dir resolve to different
-    * tables instead of silently sharing the first predicate's index (the
-    * silent-wrong-result class the banding require() closes on the ANN
-    * side). The rendering is Column#toString — deterministic for a given
-    * expression tree; `tag` remains part of the identity for callers
-    * whose predicates render equal but mean different things (none in
-    * the engine today). */
+    * registered q134 runs through ([[StoreFamily.ensureFor]]: `buckets`
+    * AND a fingerprint of `corpusPred` in the key and table name, so two
+    * callers reusing a tag with DIFFERENT predicates never silently
+    * share the first predicate's index). */
   def ensureFor(spark: SparkSession, dir: String, tag: String,
       corpusPred: Column = lit(true), buckets: Int = 64,
-      afterBuild: String => Unit = _ => ()): String = {
-    val predFp = java.security.MessageDigest.getInstance("MD5")
-      .digest(corpusPred.toString().getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(8)
+      afterBuild: String => Unit = _ => ()): String =
     // `afterBuild` runs INSIDE the memoized build (once per (key,
     // listing)): the hook is for maintenance that is part of the index's
     // identity — q148 derives a condemned set from the fresh index and
@@ -391,21 +289,18 @@ object PostingsIndex {
     // store, never re-deriving verdicts against an already-purged one.
     // The tag distinguishes hooked from plain builds; callers reusing a
     // tag with a different hook own that contract (the tag rule).
-    IndexMemo.ensure(s"postings|$tag|$predFp|$dir|$buckets",
-      graft.Tables.listingSignature(dir, "documents"), s"postings_$tag")(
-      t => { build(spark, dir, t, corpusPred, buckets); afterBuild(t) })
-  }
+    StoreFamily.ensureFor(Family, "postings", tag, dir, Seq(buckets),
+      Some(corpusPred)) { t =>
+      build(spark, dir, t, corpusPred, buckets)
+      afterBuild(t)
+    }
 
   /** The recorded collection stats (n_docs, sum_dl). */
-  def stats(spark: SparkSession, table: String): (Long, Long) = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    (props.get(NDocsProp), props.get(SumDlProp)) match {
-      case (Some(n), Some(s)) => (n.toLong, s.toLong)
-      case _ => throw new IllegalStateException(
-        s"$table carries no graft.bm25.* stats properties — not built by PostingsIndex.build")
-    }
-  }
+  def stats(spark: SparkSession, table: String): (Long, Long) =
+    statsOf(StoreFamily.recorded(Family, spark, table))
+
+  private def statsOf(p: Map[String, String]): (Long, Long) =
+    (p(NDocsProp).toLong, p(SumDlProp).toLong)
 
   /** BM25 top-k for `queryDocs` = (query_id, text) against the indexed
     * collection. The store reads are SIZE-ROUTED per
@@ -427,53 +322,28 @@ object PostingsIndex {
     * recompute path. */
   def topKFor(spark: SparkSession, table: String, queryDocs: DataFrame,
       k: Int): DataFrame = {
-    // a probe against a GROWING index must see committed appends: writers
-    // may run in another session (the streaming ingestion path's cloned
-    // micro-batch session), whose inserts cannot invalidate THIS
-    // session's cached file listing for the table — refresh is the
-    // read-your-committed-appends contract, and costs one listing per
-    // table of the pair
-    spark.catalog.refreshTable(table)
-    spark.catalog.refreshTable(dfTableOf(table))
+    // a probe against a GROWING index must see committed appends — the
+    // guard refreshes the pair (one listing per table)
+    val (n, s) = statsOf(StoreFamily.open(Family, spark, table))
     val qterms = queryDocs
       .select(col("query_id"),
         explode(array_distinct(split(col("text"), " "))).as("term"))
     val qvocab = qterms.select("term").distinct().localCheckpoint(true)
-    // ONE job decides the route AND fetches the literals (round 21,
-    // guide §5): collecting limit+1 rows subsumes the old count()-then-
-    // collect() pair — the sample exceeds the limit exactly when the
-    // count does, and under the limit the sample IS the whole
-    // vocabulary. Driver payload stays capped at limit+1 terms on the
-    // over-limit route (the old spelling's count was free but its
-    // under-limit collect was the same full vocabulary).
-    val sample = qvocab.limit(Bucketing.PruneLiteralLimit + 1).collect()
-    val lits =
-      if (sample.length <= Bucketing.PruneLiteralLimit)
-        Some(sample.map(_.getString(0)).toSeq)
-      else None
-    def restricted(t: String): DataFrame = lits match {
-      case Some(ts) =>
-        spark.table(t).filter(col("term").isin(ts: _*)) // bucket pruning
-      case None => spark.table(t).join(broadcast(qvocab), Seq("term"))
-    }
-    // the DEFERRED-delete subtraction: pending tombstones anti-join the
-    // pruned slice (broadcast — condemned sets are verdict-scale), so a
-    // deferred-deleted doc stops being served the instant its tombstone
-    // lands, with df/stats already folded down at delete time — the
-    // probe arithmetic is bit-equal to the eager verb's. With nothing
-    // pending this is the plain pruned scan (one driver-side catalog
-    // lookup, no job).
-    val slice0 = restricted(table).select("doc_id", "dl", "term", "tf")
-    val slice = Bucketing.pendingTombstones(spark, table) match {
-      case Some(tomb) =>
-        slice0.join(broadcast(tomb), Seq("doc_id"), "left_anti")
-          .select("doc_id", "dl", "term", "tf")
-      case None => slice0
-    }
+    // ONE job decides the route AND fetches the literals
+    // ([[Bucketing.pruneLiterals]]); past the limit both reads restrict
+    // by the broadcast vocab semi-join instead
+    val lits = Bucketing.pruneLiterals(qvocab)
+    val byVocab = (t: DataFrame) => t.join(broadcast(qvocab), Seq("term"))
+    // the DEFERRED-delete subtraction rides the pruned slice
+    // ([[StoreFamily.probeScan]]), with df/stats already folded down at
+    // delete time — the probe arithmetic is bit-equal to the eager
+    // verb's. With nothing pending this is the plain pruned scan.
+    val slice = StoreFamily.probeScan(Family, spark, table, lits, byVocab)
+      .select("doc_id", "dl", "term", "tf")
     // the companion's delta rows fold here — exact integer sum, the same
     // df the recompute path counts from its slice
-    val dfreq = restricted(dfTableOf(table))
-      .groupBy("term").agg(sum(col("df")).as("df"))
+    val dfreq = Bucketing.restrict(spark, dfTableOf(table), "term", lits,
+      byVocab).groupBy("term").agg(sum(col("df")).as("df"))
     // READ-COMMITTED over the three-operation append: the stats property
     // statement is an append's COMMIT POINT (appendDocs's contract — the
     // marker rides in it), so rows visible while the recorded n_docs is
@@ -496,7 +366,6 @@ object PostingsIndex {
     // paying a per-row batch column on every posting. The mirror-image
     // DELETE window (purged rows with stats not yet folded down) only
     // DAMPS idf — df never exceeds n_docs there — so it cannot invert.
-    val (n, s) = stats(spark, table)
     val committed = n > 0
     val statsDf = spark.range(1)
       .select(lit(if (committed) n else 1L).as("n_docs"),

@@ -24,12 +24,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * rows, so the inventory is safe to poll between micro-batches. The one
   * exception is `tombstones_pending`, a count over the tombstone
   * side-table — verdict-scale by the deferred-delete contract, and read
-  * only when the side-table exists. Companion tables (`_df`, `_cent`,
-  * `__tombstones`, `__compact` staging) fold into their parent's row
-  * rather than listing as stores of their own. */
+  * only when the side-table exists. Families, their recorded identity
+  * and their companions come from the [[StoreFamily]] descriptors:
+  * companion tables (`_df`, `_cent`), tombstone side-tables and
+  * `__compact` staging tables fold into their parent's row rather than
+  * listing as stores of their own. */
 object StoreHealth {
-
-  private val Companions = Seq("__tombstones", "__compact", "_df", "_cent")
 
   final case class StoreRow(
       table: String,
@@ -50,7 +50,7 @@ object StoreHealth {
     import spark.implicits._
     val cat = spark.sessionState.catalog
     val rows = cat.listTables("default").map(_.table)
-      .filterNot(t => Companions.exists(t.endsWith))
+      .filterNot(_.endsWith(StoreFamily.Staging))
       .flatMap { t =>
         // listTables includes TEMP VIEWS (no catalog metadata) and races
         // with concurrent drops (the inventory polls between batches by
@@ -63,37 +63,13 @@ object StoreHealth {
       .flatMap { meta =>
         val t = meta.identifier.table
         val p = meta.properties
-        val family =
-          if (p.contains("graft.bm25.n_docs")) Some("postings")
-          else if (p.contains("graft.lsh.tables")) Some("ann")
-          else if (p.contains("graft.minhash.shingle")) Some("band")
-          else if (p.contains("graft.ivf.fit"))
-            Some(if (p.get("graft.ivf.storage").contains("sq")) "ivf_sq"
-            else "ivf_float")
-          else None
-        family.map { f =>
-          val recorded = f match {
-            case "postings" =>
-              s"n_docs=${p("graft.bm25.n_docs")} sum_dl=${p("graft.bm25.sum_dl")}"
-            case "ann" =>
-              s"tables=${p("graft.lsh.tables")} bits=${p("graft.lsh.bits")}"
-            case "band" =>
-              s"shingle=${p("graft.minhash.shingle")} " +
-                s"hashes=${p("graft.minhash.hashes")} " +
-                s"bands=${p("graft.minhash.bands")}"
-            case _ => s"fit=${p("graft.ivf.fit").take(8)}"
-          }
-          val companion = f match {
-            case "postings" => fileCountIfExists(spark,
-              PostingsIndex.dfTableOf(t))
-            case "ivf_float" | "ivf_sq" => fileCountIfExists(spark,
-              IvfIndex.centTableOf(t))
-            case _ => 0
-          }
-          StoreRow(t, f, recorded,
+        StoreFamily.of(meta).map { f =>
+          StoreRow(t, f.label(p),
+            f.identity.map(k => s"${k.split('.').last}=${p(k)}").mkString(" "),
             meta.bucketSpec.map(_.numBuckets).getOrElse(-1),
             Bucketing.dataFileCount(spark, t),
-            companion,
+            f.companions(t).filter(spark.catalog.tableExists)
+              .map(Bucketing.dataFileCount(spark, _)).sum,
             p.get(Bucketing.LastBatchProp).map(_.toLong).getOrElse(-1L),
             Bucketing.pendingTombstones(spark, t)
               .map(_.count()).getOrElse(0L),
@@ -109,10 +85,4 @@ object StoreHealth {
         "companion_files", "last_batch", "tombstones_pending",
         "advisories_pending")
   }
-
-  private def fileCountIfExists(spark: SparkSession, table: String): Int =
-    if (spark.sessionState.catalog.tableExists(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)))
-      Bucketing.dataFileCount(spark, table)
-    else 0
 }

@@ -127,9 +127,19 @@ class AnnIndexSpec extends SparkSpec {
       "corpus: equals the fresh build bit-for-bit, the recorded banding " +
       "and the append guard flip atomically, user properties survive") {
     import org.apache.spark.sql.functions.col
-    AnnIndex.build(spark, sfDir, "ann_reband", tables = 2, bits = 4,
+    // half the corpus built here; the other half appended through a
+    // second session after this one has read (and cached) the listing
+    val e0 = graft.Tables.embeddings(spark, sfDir)
+    val d = java.nio.file.Files.createTempDirectory("annreband").toString
+    e0.filter(col("vec_id") % 2 === 0).coalesce(1)
+      .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+    AnnIndex.build(spark, d, "ann_reband", tables = 2, bits = 4,
       buckets = 8)
     Bucketing.recordBatch(spark, "ann_reband", 5L) // a live stream's marker
+    spark.table("ann_reband").count()
+    AnnIndex.appendVectors("ann_reband",
+      graft.Tables.embeddings(spark.newSession(), sfDir)
+        .filter(col("vec_id") % 2 =!= 0), tables = 2, bits = 4)
     // the transition adaptiveBanding prescribes as the corpus grows
     AnnIndex.reband(spark, "ann_reband", tables = 4, bits = 8)
     assert(AnnIndex.recordedBanding(spark, "ann_reband") == ((4, 8)),

@@ -35,7 +35,7 @@ class CompactionSpec extends SparkSpec {
     // a NON-graft user property must survive maintenance too (the
     // staged swap restores everything outside Spark's own namespaces)
     spark.sql("ALTER TABLE compact_post SET TBLPROPERTIES (" +
-      "'owner.note' = 'r18')")
+      "'owner.note' = 'r18', 'owner.quote' = \"it's mine\")")
     val q = graft.Tables.documents(spark, sfDir).filter(col("doc_id") < 8)
       .select(col("doc_id").as("query_id"), col("text"))
     def rows() = PostingsIndex.topKFor(spark, "compact_post", q, k = 10)
@@ -73,6 +73,8 @@ class CompactionSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(props.get("owner.note").contains("r18"),
       "a user property was dropped by the staged swap")
+    assert(props.get("owner.quote").contains("it's mine"),
+      "a user property holding a quote broke or was dropped by the swap")
     val plan = PostingsIndex.topKFor(spark, "compact_post",
         spark.createDataFrame(Seq((0L, "alpha beta"))).toDF("query_id", "text"),
         k = 5)
@@ -200,6 +202,44 @@ class CompactionSpec extends SparkSpec {
     assert(dataFiles("compact_band").size <= 4,
       s"band compaction must reach one file per bucket, had $filesBefore")
     assert(pairs() == before, "compaction changed the band probe")
+  }
+
+  test("a rewrite sees rows another session committed: appends through " +
+      "a second session survive compaction of the postings pair and of a " +
+      "family without derived state, equal to a rebuild") {
+    val other = spark.newSession()
+    val odd = col("doc_id") % 2 === 1
+    def docsIn(s: org.apache.spark.sql.SparkSession) =
+      graft.Tables.documents(s, sfDir).select("doc_id", "text")
+    def rowsOf(t: String) = {
+      spark.catalog.refreshTable(t)
+      spark.table(t).collect().map(_.toSeq).toSet
+    }
+    // postings: this session reads the pair (caching its listing), the
+    // other session appends, this session compacts
+    PostingsIndex.build(spark, sfDir, "compact_xs_post",
+      corpusPred = !odd, buckets = 4)
+    PostingsIndex.build(spark, sfDir, "compact_xs_post_ref", buckets = 4)
+    spark.table("compact_xs_post").count()
+    spark.table(PostingsIndex.dfTableOf("compact_xs_post")).count()
+    PostingsIndex.appendDocs("compact_xs_post", docsIn(other).filter(odd))
+    PostingsIndex.compact(spark, "compact_xs_post")
+    assert(rowsOf("compact_xs_post") == rowsOf("compact_xs_post_ref"),
+      "compaction dropped postings another session committed")
+    assert(rowsOf(PostingsIndex.dfTableOf("compact_xs_post")) ==
+      rowsOf(PostingsIndex.dfTableOf("compact_xs_post_ref")),
+      "the df merge dropped deltas another session committed")
+    assert(PostingsIndex.stats(spark, "compact_xs_post") ==
+      PostingsIndex.stats(spark, "compact_xs_post_ref"))
+    // band: no derived state, the plain Bucketing.compact path
+    BandIndex.build(spark, sfDir, "compact_xs_band", corpusPred = !odd,
+      buckets = 4)
+    BandIndex.build(spark, sfDir, "compact_xs_band_ref", buckets = 4)
+    spark.table("compact_xs_band").count()
+    BandIndex.appendDocs("compact_xs_band", docsIn(other).filter(odd))
+    Bucketing.compact(spark, "compact_xs_band")
+    assert(rowsOf("compact_xs_band") == rowsOf("compact_xs_band_ref"),
+      "compaction dropped band rows another session committed")
   }
 
   test("compact refuses an unbucketed table") {

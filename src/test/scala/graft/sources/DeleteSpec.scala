@@ -478,4 +478,50 @@ class DeleteSpec extends SparkSpec {
     assert(BandIndex.nearDupPairs(spark, "band_loop", docs).count() == 0L,
       "after purging the losers the sweep must come back empty")
   }
+
+  test("each family's identity guard fires first: delete, deleteDeferred " +
+      "and reindex on another family's store refuse it by name and leave " +
+      "it untouched") {
+    import spark.implicits._
+    PostingsIndex.build(spark, sfDir, "guard_post", buckets = 4)
+    AnnIndex.build(spark, sfDir, "guard_ann", buckets = 4)
+    IvfIndex.build(spark, sfDir, "guard_ivf", buckets = 4)
+    BandIndex.build(spark, sfDir, "guard_band", buckets = 4)
+    val ids = Seq(1L, 2L, 3L).toDF("id")
+    val docs = graft.Tables.documents(spark, sfDir)
+      .filter(col("doc_id") < 3).select("doc_id", "text")
+    val vecs = graft.Tables.embeddings(spark, sfDir)
+      .filter(col("vec_id") < 3)
+    val families: Seq[(String, String, Seq[(String, String => Unit)])] = Seq(
+      ("PostingsIndex", "guard_post", Seq(
+        "delete" -> (t => PostingsIndex.delete(spark, t, ids)),
+        "deleteDeferred" -> (t => PostingsIndex.deleteDeferred(spark, t, ids)),
+        "reindex" -> (t => PostingsIndex.reindex(spark, t, docs)))),
+      ("AnnIndex", "guard_ann", Seq(
+        "delete" -> (t => AnnIndex.delete(spark, t, ids)),
+        "deleteDeferred" -> (t => AnnIndex.deleteDeferred(spark, t, ids)),
+        "reindex" -> (t => AnnIndex.reindexVectors(t, vecs)))),
+      ("IvfIndex", "guard_ivf", Seq(
+        "delete" -> (t => IvfIndex.delete(spark, t, ids)),
+        "deleteDeferred" -> (t => IvfIndex.deleteDeferred(spark, t, ids)),
+        "reindex" -> (t => IvfIndex.reindexVectors(t, vecs)))),
+      ("BandIndex", "guard_band", Seq(
+        "delete" -> (t => BandIndex.delete(spark, t, ids)),
+        "deleteDeferred" -> (t => BandIndex.deleteDeferred(spark, t, ids)),
+        "reindex" -> (t => BandIndex.reindex(spark, t, docs)))))
+    def state(t: String) = {
+      spark.catalog.refreshTable(t)
+      (spark.table(t).count(), Bucketing.dataFileCount(spark, t),
+        Bucketing.pendingTombstones(spark, t).isDefined)
+    }
+    for ((owner, own, verbs) <- families; (_, foreign, _) <- families
+        if foreign != own; (verb, run) <- verbs) {
+      val before = state(foreign)
+      val e = intercept[IllegalStateException](run(foreign))
+      assert(e.getMessage.contains(owner),
+        s"$owner.$verb on $foreign must name $owner: ${e.getMessage}")
+      assert(state(foreign) == before,
+        s"$owner.$verb changed the foreign store $foreign")
+    }
+  }
 }
