@@ -56,87 +56,8 @@ object Bench {
     * family for one operator. The tracked pass still regression-guards
     * the recompute path every round.
     *
-    * Round-18 re-baseline note: q134's probe changed I/O SHAPE this
-    * round — the df companion replaces the slice-derived per-term count
-    * (one pruned read + scoring instead of two pruned reads) and every
-    * index build/append is bucket-aligned (one file per bucket) — so
-    * its r18 number re-baselines; the retrieval family's rows were
-    * re-measured in one session (the superseded-category discipline).
-    * Same arithmetic, same oracle hash — only where the bytes come from
-    * changed (SCALING.md round 18). q136 (the fully index-served
-    * hybrid) and q137 (the persisted-IVF probe) are the round's NEW
-    * headline rows — the total grows by exactly their probe costs,
-    * builds paid in the memo warmup. Late round 18 adds q138 (near-dup
-    * decontam, recompute), q139 (its BandIndex-served spelling, same
-    * oracle), q140 (the index-served full-corpus pair sweep vs q30's
-    * oracle), and q141 (cluster resolution over q140's pairs vs q36's
-    * oracle) as new headline rows — all kept at headline THIS round
-    * (new rows earn stability first); q138 is the q133-style superseded
-    * candidate once q139 has a stable round behind it, and q30/q36
-    * stay headline (the recompute spellings remain the heavy-family
-    * regression guards until the superseded rule is applied
-    * deliberately, one family per round).
-    *
-    * Round-18 continuation adds q142 (the IVF recall audit — q112's
-    * shape on the third family) as a new headline row: it re-runs q34
-    * (tracked) and q137's memo-served probe inside itself, so its cost
-    * is ~the q34 scan + a probe + a broadcast join of two 60-row tops.
-    * New rows earn stability first, per the rule above. Late round 18
-    * also adds q143 (the IVF-SQ probe — q137's cells, q38's int8
-    * payload, its own composed oracle): build paid in the memo warmup,
-    * probe cost ~q137's minus the payload bytes (SCALING.md round 18
-    * measures the scan-volume delta at scale); and q144 (the SQ
-    * quantization audit — q142's shape at fixed geometry), whose cost
-    * is two memo-served probes + a broadcast join of two 60-row tops;
-    * and the multi-probe pair q145/q146 (the Hamming-radius-1 recall
-    * dial on the LSH family — recompute + store-served, one composed
-    * oracle; q146 shares q135's memo'd store, so its marginal cost is
-    * one expanded probe); and q147 (the store-served hard-negative
-    * probe against q125's own oracle — the training row that actually
-    * recurs, served; memo'd 8×4 store built in warmup).
-    *
-    * Round-18 box-noise caveat (measured, late session): the local
-    * session's bench medians are inflated by host scheduling noise
-    * specific to many-small-stage plans — q134 re-measured at
-    * min 6.1 s / med 23.4 s ON THE UNCHANGED PRE-SESSION COMMIT whose
-    * own bench recorded 4.2 s med (worktree bisect), while a
-    * fixed-work 32-thread CPU probe stayed flat at 0.4 s and the
-    * recompute rows (q127 4.8/4.9) matched their history; GC measured
-    * at < 5% of the inflated walls. Root cause found for the worst
-    * row, same session: q134's ~400-term benchmark vocabulary shipped
-    * as an `isin` literal compiled per plan occurrence — routing it to
-    * the broadcast-semi-join restriction (Bucketing.PruneLiteralLimit)
-    * dropped q134 to a stable 6.1 s in the same window. Residual
-    * drift is uniform and session-level; read BENCH_r18 against r17 on
-    * MINS.
-    *
-    * Round-19 re-baseline (the r18 verdict's instruction, done at round
-    * start on an idle box — load avg 0.12): the identical r18 commit
-    * benched 267.7 s here vs the judge's 123.5 s on their box and
-    * r17's 88.7 s — the offset is spread across every row and matches
-    * the "contaminated" r18 session, so it is THIS HOST's throughput
-    * band, not one bad session; round-over-round comparisons are only
-    * valid within one host and one session (r19's artifact vs its own
-    * round-start run; SCALING.md round 19 carries the stage splits).
-    * Round 19's new headline rows: q148 (the postings DELETE lifecycle
-    * — verdict probe + purge paid once in the memo build, the timed row
-    * is the post-delete probe, cost ≈ q134's) and q149 (the composite
-    * with its fuzzy sweep index-served — builds a band store over the
-    * admitted set, purges the stages' drops via delete, sweeps
-    * shuffle-free; timed cost ≈ q124's with the banding moved from the
-    * sweep into the store build — the win is the RECURRING deployment
-    * where the store persists across crawls and the sweep alone runs).
-    * New rows earn stability first, per the rule above.
-    *
-    * Round-20 demotion pass (the superseded category, applied as the
-    * r18 note prescribed): q138 (near-dup decontam, recompute) demotes
-    * now that q139 — its BandIndex-served spelling against the same
-    * oracle — has a stable round behind it, and q145 (multi-probe
-    * recompute) demotes behind q146 (the store-served spelling, same
-    * oracle). Both tracked passes keep regression-guarding the
-    * recompute kernels every round; the headline total drops by exactly
-    * their r19 medians (judge pair ~2.6 s + ~1.5 s). q148/q149 stay
-    * headline (r19 rows, one stable round earned). */
+    * The per-round history of which rows were added, re-baselined or
+    * demoted (rounds 18–20) is in SCALING.md, "Bench headline history". */
   private[graft] val demoted: Set[String] = Set(
     "q133_retrieval_decontam",
     "q138_minhash_decontam", "q145_multiprobe_ann",

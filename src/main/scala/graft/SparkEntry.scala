@@ -35,4 +35,18 @@ object SparkEntry {
 
   /** Names of the queries Bench times each round. */
   def headlines: Seq[String] = registry.filter(_.headline).map(_.name)
+
+  /** Registry queries named on a command line, in argument order. An
+    * argument matches a full query name, or a `qNN` id up to the `_`
+    * (`q12` selects `q12_monthly_orders`, not q120–q129). An argument
+    * that matches nothing throws. */
+  def select(args: Seq[String]): Seq[GraftQuery] = {
+    val matches = args.map(a => a -> registry.filter(q =>
+      q.name == a || q.name.takeWhile(_ != '_') == a))
+    val unknown = matches.collect { case (a, Seq()) => a }
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(
+        s"no registered query matches: ${unknown.mkString(", ")}")
+    matches.flatMap(_._2).distinct
+  }
 }

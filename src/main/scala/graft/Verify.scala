@@ -5,12 +5,15 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // Optional trailing args: query names to restrict the dump to (dev
-    // loop — a full sweep is ~2 min of mostly Spark startup; a one-query
-    // iteration shouldn't pay it). The driver always calls with 2 args.
+    // Optional trailing args: query names or `qNN` ids to restrict the
+    // dump to (dev loop — a full sweep is ~2 min of mostly Spark startup;
+    // a one-query iteration shouldn't pay it), resolved by
+    // SparkEntry.select, which rejects an argument matching nothing. With
+    // 2 args every registered query is dumped.
     val (sfDir, outDir) = (args(0), args(1))
-    val only = args.drop(2).toSet
-    def selected(name: String) = only.isEmpty || only(name)
+    val only = args.drop(2).toSeq
+    val names = SparkEntry.select(only).map(_.name).toSet
+    def selected(name: String) = only.isEmpty || names(name)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

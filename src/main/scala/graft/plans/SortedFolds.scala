@@ -16,7 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * element and `array_sort` materializes a second array per group; on
   * the BM25 scoring tail (3.9M pair rows, 247k groups at sf0.1) the two
   * together measured ~3× the cost of the whole aggregation
-  * (R20FoldProbe: 8.1 s fold vs 3.7 s collect-only vs 2.7 s plain sum).
+  * (SCALING.md round 20: 8.1 s fold vs 3.7 s collect-only vs 2.7 s plain
+  * sum).
   * These kernels compute the identical value — same comparison order as
   * `array_sort` (binary UTF8String order for strings, IEEE
   * `Double.compare` order for doubles, field-by-field for the pair

@@ -1188,20 +1188,19 @@ object Dedup {
       // releases after the verify stage's survivors checkpoint — the
       // result frame reads only survivors + a string re-derivation, so
       // nothing downstream of this call depends on it (the exposed lazy
-      // hashVerify probe frame re-derives if executed afterwards, which
-      // only dev probes do).
+      // hashVerify frame re-derives if executed afterwards; the plan
+      // pins only inspect it).
       val g = q32HashGrams(spark, dir).cache()
       g.count()
       val prefix = q32Prefix(g)
-      val (_, _, _, cand) = q32CandStages(prefix, asymPrefix = true)
+      val cand = q32Candidates(prefix)
       val (hashVerify, result) = jaccardVerifyStages(spark, dir, g, cand)
       g.unpersist()
       Q32Stages(cand, hashVerify, result)
   }
 
-  /** The materialized prefix index of q32 (shared by both Q32AsymProbe
-    * arms): lang-local gram frequencies, rank window, probe-prefix cut,
-    * length bucket. */
+  /** The materialized prefix index of q32: lang-local gram frequencies,
+    * rank window, probe-prefix cut, length bucket. */
   private[queries] def q32Prefix(g: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
       val toks = g.select(col("doc_id"), col("lang"), col("ng"),
@@ -1241,24 +1240,17 @@ object Dedup {
   }
 
   /** The candidate-generation tail of q32 from a materialized `prefix`
-    * frame, with the asymmetric index prefix switchable — probe
-    * instrumentation (Q32AsymProbe) measures the candidate cut the
-    * asymmetric prefix buys on a heavy-tailed corpus by running both
-    * arms. Returns (xSide, raw join events before the positional filter,
-    * joined-pre-distinct, distinct candidates); the shipped q32 path
-    * always takes asymPrefix = true.
+    * frame: the distinct candidate pairs (doc_a, doc_b).
     *
-    * Measured fact (Q32AsymProbe, SCALING.md round 13): the positional
-    * filter SUBSUMES the asymmetric prefix's pair-set effect — an x row
-    * beyond the asymmetric bound has nx − rn_x < ⌈3nx/4⌉ − 1, so every
-    * join event it produces fails the positional bound ⌈3(nx+ny)/8⌉ ≥
-    * ⌈3nx/4⌉ (ny ≥ nx). The asymmetric prefix therefore never changes
+    * Measured fact (SCALING.md round 13, "q32 asymmetric prefix"): the
+    * positional filter SUBSUMES the asymmetric prefix's pair-set effect
+    * — an x row beyond the asymmetric bound has nx − rn_x < ⌈3nx/4⌉ − 1,
+    * so every join event it produces fails the positional bound
+    * ⌈3(nx+ny)/8⌉ ≥ ⌈3nx/4⌉ (ny ≥ nx). The asymmetric prefix therefore never changes
     * the candidate set; what it buys is index size and pre-filter probe
     * volume. */
-  private[queries] def q32CandStages(
-      prefix: org.apache.spark.sql.DataFrame, asymPrefix: Boolean)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-         org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+  private[queries] def q32Candidates(prefix: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
       // LENGTH-BUCKETED postings (see q32BucketBounds): the join key is
       // (gram, lang, bucket), so postings whose sizes are ratio-
       // incompatible land in different hash buckets and never meet — the
@@ -1296,30 +1288,26 @@ object Dedup {
       // bound 1 + (ot − 1) = ot. Cuts the exploded probe side ~37%
       // (355 564 → 223 517 prefix rows at sf0.1; pair set 1 474 569
       // unchanged) and the join events with it.
-      // MEASURED (Q32AsymProbe, SCALING.md round 13): the pair set is
-      // unchanged on EVERY corpus — provably, the positional filter
-      // subsumes the asymmetric bound (see q32CandStages scaladoc) — so
-      // the win is upstream volume: −37% index rows and −61% raw join
-      // probe events on the heavy-tailed Zipf corpus, wall −7%..−29%
-      // depending on collision density.
-      val xBase =
-        if (asymPrefix)
-          prefix.filter(col("rn") <= expr("ng - ((3 * ng + 3) div 4) + 1"))
-        else prefix
-      val xSide = xBase
+      // MEASURED (SCALING.md round 13): the pair set is unchanged on
+      // EVERY corpus — provably, the positional filter subsumes the
+      // asymmetric bound (see the scaladoc above) — so the win is
+      // upstream volume: −37% index rows and −61% raw join probe events
+      // on the heavy-tailed Zipf corpus, wall −7%..−29% depending on
+      // collision density.
+      val xSide = prefix
+        .filter(col("rn") <= expr("ng - ((3 * ng + 3) div 4) + 1"))
         .withColumn("jb", explode(array(col("bkt"), col("bkt") + 1)))
-      val joinedRaw = xSide.as("x").join(prefix.as("y"),
+      xSide.as("x").join(prefix.as("y"),
           col("x.gram") === col("y.gram") && col("x.lang") === col("y.lang") &&
             col("x.jb") === col("y.bkt") &&
             (col("x.ng") < col("y.ng") ||
               (col("x.ng") === col("y.ng") && col("x.doc_id") < col("y.doc_id"))) &&
             col("x.ng").cast("double") >= lit(0.6) * col("y.ng"))
-      val joined = joinedRaw
         .filter(lit(1) + least(col("x.ng") - col("x.rn"), col("y.ng") - col("y.rn")) >=
           expr("(3 * (x.ng + y.ng) + 7) div 8"))
         .select(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
           greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"))
-      (xSide, joinedRaw, joined, joined.distinct())
+        .distinct()
   }
 
   /** The two-stage exact-Jaccard verify shared by q32 (PPJoin candidates)

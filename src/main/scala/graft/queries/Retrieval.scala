@@ -245,9 +245,9 @@ object Retrieval {
       // element order and IEEE add sequence as the interpreted
       // aggregate(array_sort(...)) spelling — the HOF ran a lambda frame
       // per element over ~3.9M pair rows and was ~3× the aggregation's
-      // cost at sf0.1 (R20FoldProbe), and the term-string key the first
-      // compiled kernel still carried is replaced by the vocabulary
-      // rank int (SortedFoldsSpec pins rank fold ≡ term fold ≡
+      // cost at sf0.1 (SCALING.md round 20), and the term-string key
+      // the first compiled kernel still carried is replaced by the
+      // vocabulary rank int (SortedFoldsSpec pins rank fold ≡ term fold ≡
       // interpreted, bit-for-bit)
       .agg(
         call_function("rank_contrib_fold",
@@ -538,7 +538,9 @@ object Retrieval {
     * lever now inside the serving row that uses it (RRF absorbs the
     * deeper vector list unchanged). Dial-on is pinned against the
     * recompute-with-expansion composition in RetrievalSpec; the
-    * recall/wall trade is measured in MultiProbeRecallProbe. */
+    * recall/wall trade is measured in SCALING.md round 18 ("Multi-probe
+    * LSH") and round 20 ("The multi-probe dial at the adaptive
+    * transition"). */
   private[graft] def hybridIndexServed(spark: SparkSession, dir: String,
       multiProbe: Boolean): DataFrame = {
     val lexTable = graft.sources.PostingsIndex.ensureFor(spark, dir,

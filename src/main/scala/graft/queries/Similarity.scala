@@ -993,8 +993,8 @@ object Similarity {
     * unchanged — probeCore's contract). The registered row keeps the
     * dial OFF so the static 8×4 oracle stays comparable; MultiProbeSpec
     * pins dial-on == the recompute scaffold with the same expansion, and
-    * the recall/wall trade is measured at scale in MultiProbeRecallProbe
-    * (SCALING.md round 19). */
+    * the recall/wall trade is measured at scale in SCALING.md round 18
+    * ("Multi-probe LSH") and round 20. */
   private[graft] def hardNegIndexServed(spark: SparkSession, dir: String,
       multiProbe: Boolean): DataFrame = {
     val n = corpusCount(spark, dir)

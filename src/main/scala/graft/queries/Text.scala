@@ -795,7 +795,7 @@ object Text {
           sum(when(col("c2").isNull, 1L).otherwise(0L)).as("n_oov"),
           // compiled ordered fold — same sorted order, same IEEE adds as
           // aggregate(array_sort(...)); the interpreted HOF paid a lambda
-          // frame per bigram (round-20 optimization, R20FoldProbe)
+          // frame per bigram (round-20 optimization, SCALING.md round 20)
           call_function("sorted_sum_fold", collect_list(col("p"))).as("psum"))
         .select(col("doc_id"), col("n_bigrams"), col("n_oov"),
           (col("n_oov").cast("double") / col("n_bigrams")).as("oov_rate"),

@@ -37,8 +37,8 @@ import org.apache.spark.sql.functions._
   *
   * 100 TB shape: weights are 256 longs constant-folded into the codegen
   * plan — nothing is broadcast, nothing shuffles, throughput is the scan
-  * rate. Measured (round 16): 560 k rec/s on a 32-partition batch frame
-  * (ClfBatchProbe — the operator's own rate); the StreamThroughputProbe
+  * rate. Measured (SCALING.md round 16): 560 k rec/s on a 32-partition
+  * batch frame — the operator's own rate; the StreamThroughputProbe
   * `classifier` section reads 45 k rec/s through MemoryStream, which
   * measures that source's few-partition delivery, not the map.
   * Retraining swaps the literal by restarting the query (the standard

@@ -76,18 +76,7 @@ object DecontamStream {
     * callers who may not have gone through [[benchmarkGrams]]. The
     * distinct is a no-op exchange-wise when the input already is
     * ([[benchmarkGrams]] output is both distinct and materialized). */
-  def verdictsBatch(docs: DataFrame, benchGrams: DataFrame): DataFrame =
-    verdictsOnDistinct(docs, benchGrams.select("gram").distinct())
-
-  /** Kernel over a benchmark side the CALLER guarantees gram-unique.
-    * In the shipped paths it is reached only THROUGH [[verdictsBatch]]
-    * (whose defensive distinct is a no-op exchange on an already-unique
-    * side) — [[writer]] calls verdictsBatch per micro-batch, the
-    * measured spelling documented there. The only direct caller is the
-    * REJECTED hoisted-distinct probe variant kept in
-    * StreamThroughputProbe as the comparison guard. */
-  private[streaming] def verdictsOnDistinct(docs: DataFrame,
-      benchDistinct: DataFrame): DataFrame = {
+  def verdictsBatch(docs: DataFrame, benchGrams: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     graft.plans.GraftExtensions.install(spark)
     docs
@@ -97,7 +86,8 @@ object DecontamStream {
       // word_shingles yields [] below 8 tokens; explode_outer keeps the
       // doc as a NULL-gram row so short docs still get a clean verdict
       .select(col("doc_id"), explode_outer(expr("word_shingles(text, 8)")).as("gram"))
-      .join(benchDistinct.withColumn("hit", lit(1)), Seq("gram"), "left")
+      .join(benchGrams.select("gram").distinct().withColumn("hit", lit(1)),
+        Seq("gram"), "left")
       .groupBy("doc_id")
       .agg(count(col("hit")).as("n_shared"))
       .withColumn("contaminated", col("n_shared") > 0)
@@ -108,12 +98,12 @@ object DecontamStream {
     *
     * The per-batch gram-distinct stays IN the batch kernel by
     * MEASUREMENT: round 16 built the advice-suggested hoisted variant
-    * (distinct+checkpoint once per stream) and ran both through the
-    * probe pair (`StreamThroughputProbe decontam decontam-hoisted`)
-    * repeatedly — isolated fresh-JVM runs land within ~5% of each other
-    * (142 k vs 150 k rec/s min-of-6), inside the harness's section-order
-    * JIT bias, which a naive same-JVM comparison mis-read as 13% both
-    * ways depending on which section ran second. With no real
+    * (distinct+checkpoint once per stream) and timed both repeatedly
+    * at StreamThroughputProbe's decontam workload — isolated fresh-JVM
+    * runs land within ~5% of each other (142 k vs 150 k rec/s min-of-6),
+    * inside the harness's section-order JIT bias, which a naive same-JVM
+    * comparison mis-read as 13% both ways depending on which section ran
+    * second. With no real
     * throughput difference, the per-batch spelling wins on design: one
     * entry point that is correct for ANY caller's benchmark frame, and
     * no second materialized gram-set copy in the block store. The

@@ -78,6 +78,22 @@ class BenchSpec extends AnyFunSuite {
       s"heavy-pass queries not in the headline set: $missing")
   }
 
+  test("select resolves full names and qNN ids, rejects unmatched arguments") {
+    val cases = Seq(
+      Seq("q12") -> Seq("q12_monthly_orders"),
+      Seq("q33") -> Seq("q33_embedding_neardup"),
+      Seq("q30_minhash_lsh_dedup") -> Seq("q30_minhash_lsh_dedup"),
+      Seq("q33_embedding_neardup", "q33", "q12") ->
+        Seq("q33_embedding_neardup", "q12_monthly_orders"))
+    cases.foreach { case (args, want) =>
+      assert(SparkEntry.select(args).map(_.name) == want, args)
+    }
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Seq("q12", "q999")))
+    assert(e.getMessage.contains("q999") && !e.getMessage.contains("q12"),
+      e.getMessage)
+  }
+
   test("tracked tier: rows leave the total but stay visible, failures " +
       "surface; demoted names are real headline registry rows, never heavy") {
     val tracked = Seq(("q_t", Seq(0.3), false), ("q_tbad", Seq(0.1), true))

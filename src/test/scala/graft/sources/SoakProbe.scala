@@ -62,8 +62,8 @@ object SoakProbe {
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     // vectors: 8 sign-flip copies for the ANN loop (ids above the base
-    // corpus), 8 DRIFTED copies for the IVF loop (the IvfDriftProbe
-    // "new domain enters the crawl" shape — crowds the base fit so the
+    // corpus), 8 DRIFTED copies for the IVF loop (SCALING.md round 18's
+    // fit-drift "new domain enters the crawl" shape — crowds the base fit so the
     // skew trigger must fire), ids in a third range
     val base = graft.Tables.embeddings(spark, dir)
       .select("vec_id", "label", "embedding")

@@ -203,7 +203,7 @@ class IdempotentIngestSpec extends SparkSpec {
     val baseRows = spark.table("idem_ivf_refit").count()
 
     // drifted batches: base shrunk + offset along one direction, fresh
-    // ids — the IvfDriftProbe model, fed straight to the sink body with
+    // ids — SCALING.md round 18's fit-drift model, fed straight to the sink body with
     // the check on every batch and a tight skew threshold
     val dirLit = typedLit((0 until 64).map(i => ((i % 7) - 3) * 0.1f))
     def driftBatch(b: Int) = base

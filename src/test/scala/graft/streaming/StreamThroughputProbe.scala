@@ -14,9 +14,9 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   *
   * Usage: `sbt "Test/runMain graft.streaming.StreamThroughputProbe
   * [rocksdb] [section...]"` — sections: asof pack mix dedup dedup-expr
-  * dedup-state dedup-state-cap8 dedup-sparse dedup-sparse-rocks decontam classifier
-  * decontam-hoisted quota chain chain-quality chain-retrieval
-  * (no args = all; unknown names abort).
+  * dedup-state dedup-state-cap8 dedup-sparse dedup-sparse-rocks decontam
+  * classifier quota chain chain-quality chain-retrieval rollover
+  * chain-indexed chain-band (no args = all; unknown names abort).
   * CAVEAT (round-16 lesson): same-JVM comparisons BETWEEN sections
   * carry a section-order JIT bias of ~10% — the later section runs
   * warmer. To compare two sections, run each alone in a fresh JVM
@@ -50,7 +50,7 @@ object StreamThroughputProbe {
 
     val known = Set("asof", "pack", "mix", "dedup", "dedup-expr",
       "dedup-state", "dedup-state-cap8", "dedup-sparse",
-      "dedup-sparse-rocks", "decontam", "decontam-hoisted", "quota", "chain",
+      "dedup-sparse-rocks", "decontam", "quota", "chain",
       "classifier", "chain-quality", "chain-retrieval", "rollover",
       "chain-indexed", "chain-band")
     val rocksAll = args.contains("rocksdb")
@@ -476,55 +476,6 @@ object StreamThroughputProbe {
           f"(state rows=$stateRows across ${so.length} operators)")
       } finally
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-
-    // ---- DecontamStream, HOISTED-DISTINCT variant — the round-15
-    // advice's suggested spelling, MEASURED AND REJECTED in round 16
-    // (SCALING.md): distinct+checkpoint once at stream start, batches
-    // join the checkpointed frame. Kept inline so the comparison stays
-    // reproducible against the shipped per-batch `decontam` section
-    // (which measured ~13% faster: the per-batch aggregate gives AQE a
-    // freshly-stated build side to broadcast; this variant joins a bare
-    // checkpoint scan and parks a second gram-set copy in block store).
-    section("decontam-hoisted") {
-      import spark.implicits._
-      def benchText(k: Long): String =
-        (0 until 16).map(j => s"bm${k}t$j").mkString(" ")
-      val benchDf = (0 until 1000).map(k => (k.toLong, benchText(k)))
-        .toDF("doc_id", "text")
-      val bg = DecontamStream.benchmarkGrams(spark, benchDf)
-      val benchDistinct = bg.select("gram").distinct().localCheckpoint(true)
-      val in = MemoryStream[(Long, String)]
-      var verdicts = 0L
-      val q = in.toDF().toDF("doc_id", "text")
-        .writeStream.foreachBatch {
-          (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val v = DecontamStream.verdictsOnDistinct(batch, benchDistinct)
-            val c = v.agg(org.apache.spark.sql.functions.count(
-                org.apache.spark.sql.functions.lit(1)),
-              org.apache.spark.sql.functions.coalesce(
-                org.apache.spark.sql.functions.sum(
-                  org.apache.spark.sql.functions.when(
-                    org.apache.spark.sql.functions.col("contaminated"), 1L)
-                    .otherwise(0L)),
-                org.apache.spark.sql.functions.lit(0L))).head()
-            verdicts += c.getLong(0)
-        }.start()
-      val t0 = System.nanoTime()
-      for (b <- 0 until 10) {
-        in.addData((0 until 100000).map { i =>
-          val id = b * 100000L + i
-          val txt = if (i % 50 == 49) benchText(id % 1000)
-                    else (0 until 16).map(j => s"u${id}x$j").mkString(" ")
-          (id, txt)
-        })
-        q.processAllAvailable()
-      }
-      val wall = (System.nanoTime() - t0) / 1e9
-      reportPlain("decontam-hoisted 1M (1k-doc benchmark)", wall,
-        f"1000000 events in $wall%.2f s = ${1000000 / wall}%.0f rec/s; " +
-        s"verdicts=$verdicts (hoisted distinct+checkpoint — rejected variant)")
-      q.stop()
     }
 
     // ---- QuotaStream: 1M docs over 20k domains ------------------------

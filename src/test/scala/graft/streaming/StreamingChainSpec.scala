@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -76,14 +76,21 @@ class StreamingChainSpec extends SparkSpec {
     val (kept, spans) = batchReference(rows)
     assert(kept.size == 25, "20 of sA + all 5 of sB survive the cap")
 
+    var plan = ""
     withRocksDB {
       streamOf(Seq(rows)) { docs => push =>
         val q = CurationChain.curatedPacked(docs)
           .writeStream.format("memory").queryName("chain_one")
           .outputMode("append").start()
-        push(); q.processAllAvailable(); q.stop()
+        push(); q.processAllAvailable()
+        plan = q.asInstanceOf[StreamingQueryWrapper]
+          .streamingQuery.lastExecution.executedPlan.toString
+        q.stop()
       }
     }
+    // CurationChain's scale-shape claim: one keyed exchange per stateful
+    // stage (doc_id for dedup, source for quota, source again for pack)
+    assert("Exchange hashpartitioning".r.findAllIn(plan).length == 3, plan)
     val got = spark.table("chain_one").collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("n_tok"), r.getAs[Long]("start_tok"),
