@@ -7,7 +7,11 @@ import org.apache.spark.sql.SparkSession
   * no names are given) against SPARK_GRAFT_SF_DIR. Names resolve through
   * [[SparkEntry.select]]: a full name or a `qNN` id. The per-operator scale
   * review the build notes require — check pushed filters, pruned schemas,
-  * exchange counts, broadcast hints — without running anything. */
+  * exchange counts, broadcast hints. A query whose builder runs actions
+  * DOES execute them here: q124/q149 resolve clusters (q149 also
+  * maintains its band store) and take the terminal checkpoint, so their
+  * dump is the post-checkpoint scan. For the composite's per-stage plans
+  * use `CurationPipeline.stagesForPlanAudit` (what PlanShapeSpec pins). */
 object ExplainMain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")

@@ -64,11 +64,12 @@ import graft.{GraftQuery, Tables}
   * Scale shape: one keyed shuffle per rendezvous — fp for the gate,
   * content-md5 for exact dedup, the banded buckets for the fuzzy sweep,
   * gram keys for decontam, source for the calibrate/cap/tier windows —
-  * each over a strictly shrinking survivor set. Stage outputs are
-  * localCheckpoint barriers: in production each stage materializes to
-  * durable storage anyway (they are datasets, resumable per stage); here
-  * the barrier also stops Spark re-deriving the whole prefix once per
-  * accounting row and per downstream consumer. The per-source windows
+  * each over a strictly shrinking survivor set. Stage outputs are lazy
+  * localCheckpoint barriers (see [[stages]]): each stage's partitions
+  * are computed once and reused, so Spark never re-derives the whole
+  * prefix once per accounting row or per downstream consumer. The
+  * barriers live in executor-local storage — a run that dies restarts
+  * from the parquet inputs, not from a stage. The per-source windows
   * are catalog-bounded (q99's argument: sources are few, documents are
   * not). Stage-boundary invariants (doc/token conservation, dedup
   * idempotence, decontam completeness, split leakage-freedom, q53
@@ -105,17 +106,26 @@ object CurationPipeline {
   /** q81's bag-of-words fingerprint — the shared definition. */
   private def fpCol: Column = Curation.bowFingerprint
 
-  /** Run the pipeline; every returned frame is a materialized stage
-    * boundary (localCheckpoint). `materialize = false` returns the same
-    * frames UN-checkpointed so their full logical plans stay visible —
-    * the plan-audit hook (PlanShapeSpec pins the stage shapes through
-    * it); never use it for execution, where each stage would re-derive
-    * its whole prefix once per consumer. */
+  /** Build the pipeline with the fuzzy sweep recomputed (q124's
+    * spelling). The one barrier policy: every stage boundary is ONE
+    * lazy `localCheckpoint(eager = false)` — the partitions persist the
+    * first time an action computes through the boundary, and every later
+    * consumer reads them instead of re-deriving the prefix. Cluster
+    * resolution ([[Dedup.resolveClusters]]'s per-round actions) and, on
+    * the index-served path, store maintenance force their prefix before
+    * this returns; everything else materializes in the caller's first
+    * action. Measured alternative, declined: cache() barriers preserve
+    * partitioning but AQE materializes every InMemoryTableScan as its
+    * own table-cache stage JOB — q124 went 30 → 58 builder jobs and
+    * 4.2 → 7.5 s (sf0.1, 32 cores).
+    *
+    * `materialize = false` returns the same frames with no barrier, so
+    * their full logical plans stay visible — for plan metrics and audits
+    * only; executed, each stage would re-derive its whole prefix once
+    * per consumer. */
   def stages(spark: SparkSession, dir: String,
-      materialize: Boolean = true, indexServed: Boolean = false,
-      bandTable: Option[String] = None, oneShot: Boolean = false): Stages =
-    stagesImpl(spark, dir, materialize, labelsOverride = None, indexServed,
-      bandTable, oneShot)
+      materialize: Boolean = true): Stages =
+    stagesImpl(spark, dir, materialize, labels = None, bandStore = None)
 
   /** The index-served sweep's DEFAULT store name — derived, never
     * chosen (the r19 fixed name "bands_q149" collided across sessions
@@ -127,8 +137,9 @@ object CurationPipeline {
     * naming). Same dir, same listing → same name: that is the point —
     * the second run finds the first run's store and reconciles
     * (a no-op), paying the sweep alone. Two-crawl callers name their
-    * store explicitly via `bandTable` (the listing changes per crawl,
-    * so the derived name would rebuild rather than reconcile). */
+    * store explicitly via [[accounting]]'s `bandStore` (the listing
+    * changes per crawl, so the derived name would rebuild rather than
+    * reconcile). */
   private def defaultBandTable(spark: SparkSession, dir: String): String = {
     val sig = Tables.listingSignature(dir, "documents")
     "bands_q149_" + java.security.MessageDigest.getInstance("MD5")
@@ -136,44 +147,26 @@ object CurationPipeline {
       .map("%02x".format(_)).mkString.take(8)
   }
 
-  /** Plan-audit hook: [[Dedup.resolveClusters]] runs eager per-round
-    * actions (count/cache) REGARDLESS of `materialize`, so a plan-only
-    * audit through [[stages]](materialize = false) would still execute
-    * the pipeline's heaviest stage over the un-checkpointed prefix.
-    * This entry point injects a precomputed (or stub) labels frame —
-    * (doc_id, canonical) — so every stage plan builds lazily. The pair
-    * CANDIDATE plan shape is pinned separately (q30's bucket-join test);
-    * never use this for execution. */
+  /** Plan-audit hook: [[Dedup.resolveClusters]] runs per-round actions
+    * (count/cache) REGARDLESS of `materialize`, so a plan-only audit
+    * through [[stages]](materialize = false) would still execute the
+    * pipeline's heaviest stage over the barrier-free prefix. This entry
+    * point injects a precomputed (or stub) labels frame — (doc_id,
+    * canonical) — and no barriers, so every stage plan builds without
+    * running anything. The pair CANDIDATE plan shape is pinned
+    * separately (q30's bucket-join test); never use this for execution. */
   private[graft] def stagesForPlanAudit(spark: SparkSession, dir: String,
       labels: DataFrame): Stages =
-    stagesImpl(spark, dir, materialize = false, labelsOverride = Some(labels),
-      indexServed = false, bandTable = None, oneShot = false)
+    stagesImpl(spark, dir, materialize = false, Some(labels), bandStore = None)
 
-  /** `oneShot`: the ONE-PASS materialization mode (round 21, guide §1.2
-    * step 1 / §5 — the r20 "not yet optimized" item): stage boundaries
-    * become LAZY localCheckpoints — the SAME plans, the same
-    * materialize-once-per-stage behavior (each boundary persists its
-    * partitions the first time an action computes through it), but no
-    * eager job per barrier: everything not already forced by the
-    * (unavoidably eager) cluster-resolve and index-maintenance actions
-    * materializes inside the CALLER's single terminal action. The
-    * default stays the eager per-stage checkpoint — each stage a durable
-    * dataset the moment stages() returns, the resumability contract this
-    * scaladoc documents — and the accounting rows (q124/q149) opt in
-    * because their one terminal aggregate never resumes mid-pipeline.
-    * Measured alternative, declined: cache() barriers preserve
-    * partitioning but AQE materializes every InMemoryTableScan as its
-    * own table-cache stage JOB — q124 went 30 → 58 builder jobs and
-    * 4.2 → 7.5 s (sf0.1, 32 cores), the exact inverse of the goal.
-    * Same frames, same rows either way: eager vs lazy changes WHEN work
-    * happens, not what is computed. */
+  /** `labels`: injected cluster labels (plan audit) instead of the sweep.
+    * `bandStore`: serve the sweep from that persisted band store (q149)
+    * instead of recomputing it (q124). */
   private def stagesImpl(spark: SparkSession, dir: String,
-      materialize: Boolean, labelsOverride: Option[DataFrame],
-      indexServed: Boolean, bandTable: Option[String],
-      oneShot: Boolean = false): Stages = {
+      materialize: Boolean, labels: Option[DataFrame],
+      bandStore: Option[String]): Stages = {
     def barrier(df: DataFrame): DataFrame =
-      if (!materialize) df
-      else df.localCheckpoint(eager = !oneShot)
+      if (materialize) df.localCheckpoint(eager = false) else df
     graft.plans.GraftExtensions.install(spark)
 
     val docs = Tables.documents(spark, dir)
@@ -232,10 +225,9 @@ object CurationPipeline {
     // from the store (q140's bucketed self-join). Banding is
     // per-document and deterministic, so both spellings verify the
     // identical pair set — one oracle gates both rows.
-    val labels = labelsOverride.getOrElse {
-      val pairs =
-        if (indexServed) {
-          val table = bandTable.getOrElse(defaultBandTable(spark, dir))
+    val clusters = labels.getOrElse {
+      val pairs = bandStore match {
+        case Some(table) =>
           if (!spark.sessionState.catalog.tableExists(
               org.apache.spark.sql.catalyst.TableIdentifier(table))) {
             graft.sources.BandIndex.buildDocs(spark, table,
@@ -249,14 +241,15 @@ object CurationPipeline {
           graft.sources.BandIndex.nearDupPairs(spark, table,
               exactKept.select("doc_id", "text"))
             .select("doc_a", "doc_b")
-        } else Dedup
+        case None => Dedup
           .minhashPairsOn(spark, exactKept.select("doc_id", "text"))
           .select("doc_a", "doc_b")
+      }
       Dedup.resolveClusters(pairs) // already checkpointed
     }
     val wClus = Window.partitionBy("canonical")
       .orderBy(col("quality_score").desc, col("doc_id"))
-    val clusterDropped = exactKept.join(labels, "doc_id")
+    val clusterDropped = exactKept.join(clusters, "doc_id")
       .withColumn("rn", row_number().over(wClus))
       .filter(col("rn") > 1)
       .select("doc_id")
@@ -305,14 +298,14 @@ object CurationPipeline {
         when(col("pct2") >= 0.75, 4L).when(col("pct2") >= 0.5, 2L)
           .otherwise(1L))
       .drop("pct2")
-      .join(labels, Seq("doc_id"), "left")
+      .join(clusters, Seq("doc_id"), "left")
       .withColumn("group_key", coalesce(col("canonical"), col("doc_id")))
       .withColumn("split", Sampling.GroupSplit.splitCol(col("group_key")))
       .drop("canonical")
       .transform(barrier)
     val capped = splitDf.select(clean.columns.map(col): _*)
 
-    Stages(arriving, admitted, scored, exactKept, fuzzyKept, labels,
+    Stages(arriving, admitted, scored, exactKept, fuzzyKept, clusters,
       contaminated, clean, capped, splitDf)
   }
 
@@ -345,24 +338,19 @@ object CurationPipeline {
         col("n_docs"), col("n_tokens"),
         col("n_tokens").as("effective_tokens"))
 
+  /** The stage accounting rows. `bandStore = None` recomputes the fuzzy
+    * sweep (q124); `Some(t)` serves it from band store `t` (q149). */
   def accounting(spark: SparkSession, dir: String,
-      indexServed: Boolean = false,
-      bandTable: Option[String] = None): DataFrame = {
-    // ONE-SHOT mode (round 21): the accounting rows are the pipeline's
-    // only terminal consumer, so the stage boundaries ride LAZY
-    // localCheckpoints and everything not already forced by the eager
-    // cluster-resolve / index-maintenance actions materializes in ONE
-    // terminal action here (the eager-checkpoint default paid a barrier
-    // job per stage — job-launch + AQE-replan latency — for
-    // resumability this aggregate never uses). The terminal action is
-    // an eager checkpoint of the 10-row accounting union; the stage
-    // RDD blocks are ContextCleaner-reclaimed once the frames
-    // dereference, and the bench's per-sample persistent-RDD sweep
-    // still guarantees each timed pass recomputes from the parquet
-    // inputs. Rows identical by construction: eager vs lazy changes
-    // when work happens, not what is computed.
-    val st = stages(spark, dir, indexServed = indexServed,
-      bandTable = bandTable, oneShot = true)
+      bandStore: Option[String] = None): DataFrame = {
+    // The stage barriers are lazy (see `stages`): past what cluster
+    // resolution and store maintenance already forced, every stage
+    // materializes in the ONE action here — an eager checkpoint of the
+    // 10-row accounting union. The stage RDD blocks are
+    // ContextCleaner-reclaimed once the frames dereference, and the
+    // bench's per-sample persistent-RDD sweep still guarantees each
+    // timed pass recomputes from the parquet inputs.
+    val st = stagesImpl(spark, dir, materialize = true, labels = None,
+      bandStore)
     val splitRows = st.split
       .groupBy("split")
       .agg(
@@ -528,7 +516,7 @@ object CurationPipeline {
     * proved at the gate). */
   private val q149 = GraftQuery(
     "q149_curation_pipeline_indexed",
-    (spark, dir) => accounting(spark, dir, indexServed = true),
+    (spark, dir) => accounting(spark, dir, Some(defaultBandTable(spark, dir))),
     Some(compositeOracleSql),
     headline = true)
 

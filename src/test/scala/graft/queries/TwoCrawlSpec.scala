@@ -39,7 +39,7 @@ class TwoCrawlSpec extends SparkSpec {
 
     // crawl A's composite builds the store over A's admitted set
     val acctA = acct(CurationPipeline.accounting(spark, dirA,
-      indexServed = true, bandTable = Some(store)))
+      bandStore = Some(store)))
     val wantA = acct(CurationPipeline.accounting(spark, dirA))
     assert(acctA == wantA, "crawl A's indexed accounting diverges from " +
       "the recompute replay over crawl A")
@@ -49,7 +49,7 @@ class TwoCrawlSpec extends SparkSpec {
     // store reconciles — only B's new survivors band; A's docs that
     // fall to the union's recalibrated gates tombstone out.
     val acctB = acct(CurationPipeline.accounting(spark, sfDir,
-      indexServed = true, bandTable = Some(store)))
+      bandStore = Some(store)))
     val wantB = acct(CurationPipeline.accounting(spark, sfDir))
     assert(acctB == wantB, "crawl B's indexed accounting over the " +
       "persisted store diverges from the recompute replay over the union")
@@ -63,7 +63,7 @@ class TwoCrawlSpec extends SparkSpec {
     // row's passes 2+ pay)
     val files = Bucketing.dataFileCount(spark, store)
     val acctB2 = acct(CurationPipeline.accounting(spark, sfDir,
-      indexServed = true, bandTable = Some(store)))
+      bandStore = Some(store)))
     assert(acctB2 == wantB)
     assert(Bucketing.dataFileCount(spark, store) == files,
       "a reconcile against an unchanged corpus must write nothing")
@@ -74,6 +74,9 @@ class TwoCrawlSpec extends SparkSpec {
       "rows — the oracle hash is invocation-independent)") {
     val q = graft.SparkEntry.queries("q149_curation_pipeline_indexed")
     val r1 = acct(q(spark, sfDir))
+    val q124 = graft.SparkEntry.queries("q124_curation_pipeline")
+    assert(r1 == acct(q124(spark, sfDir)),
+      "the registered q149 row must equal the registered q124 row")
     val tables = spark.sql("SHOW TABLES").collect().map(_.getString(1))
       .filter(_.startsWith("bands_q149_"))
     assert(tables.nonEmpty, "q149 must build its listing-keyed store")

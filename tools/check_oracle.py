@@ -9,6 +9,7 @@ oracle SQL from oracle_sql.json in DuckDB over the same tables, and compares
 itself never depends on Python.
 """
 import json
+import re
 import sys
 
 import duckdb
@@ -17,6 +18,17 @@ import pandas as pd
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
+
+
+def materialize_pairs(sql: str) -> str:
+    """A recursive cluster closure joins the MinHash `pairs` CTE at every
+    step, and DuckDB inlines it there: it re-derives the pairs per step
+    and runs out of memory on the curation composite (q124/q149) at
+    sf0.01. Materializing the CTE computes it once; the rows are the
+    same."""
+    if "WITH RECURSIVE" not in sql:
+        return sql
+    return re.sub(r"\bpairs AS \(", "pairs AS MATERIALIZED (", sql)
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -85,7 +97,7 @@ def main() -> int:
         try:
             got = con.execute(
                 f"SELECT * FROM '{out_dir}/{name}/*.parquet'").fetchdf()
-            want = con.execute(sql).fetchdf()
+            want = con.execute(materialize_pairs(sql)).fetchdf()
         except Exception as e:
             print(f"FAIL {name}: {e}")
             n_fail += 1
