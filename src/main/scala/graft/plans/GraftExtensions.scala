@@ -113,6 +113,18 @@ object GraftExtensions {
     new ExpressionInfo(classOf[DotFold].getName, "dot_fold"),
     (children: Seq[Expression]) => DotFold(children(0), children(1)))
 
+  /** det_ln(x) — the deterministic ln the BM25 idf rides on; Scala
+    * callers use [[graft.queries.DetMath.lnCol]], which builds the same
+    * node without needing this registration. */
+  private[plans] val detLnDescription = (
+    org.apache.spark.sql.catalyst.FunctionIdentifier("det_ln"),
+    new ExpressionInfo(classOf[DetLn].getName, "det_ln"),
+    (children: Seq[Expression]) => {
+      require(children.size == 1,
+        s"det_ln(x) takes exactly 1 argument, got ${children.size}")
+      DetLn(children.head)
+    })
+
   private[plans] val dotFoldI8Description = (
     org.apache.spark.sql.catalyst.FunctionIdentifier("dot_fold_i8"),
     new ExpressionInfo(classOf[DotFoldI8].getName, "dot_fold_i8"),
@@ -327,6 +339,7 @@ object GraftExtensions {
     minhashDescription,
     dotFoldDescription,
     dotFoldI8Description,
+    detLnDescription,
     sortedSumFoldDescription,
     termContribFoldDescription,
     rankContribFoldDescription,

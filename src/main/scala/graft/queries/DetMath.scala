@@ -1,7 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
+
+import graft.plans.DetLn
 
 /** Deterministic natural log — the cross-engine bit-exactness answer for
   * scoring functions that need a transcendental (BM25's idf, q127/q128).
@@ -23,48 +25,38 @@ import org.apache.spark.sql.functions._
   *      ulp,
   *   5. ln x = e·LN2 + ln m, LN2 a shared shortest-round-trip literal.
   *
-  * Every constant is rendered from the SAME Scala double: Spark gets the
-  * double via `lit`, DuckDB gets `CAST('<toString>' AS DOUBLE)` whose
-  * correctly-rounding parse returns the identical bits (shortest-round-trip
-  * repr by construction). Accuracy ≤ 2 ulp vs Math.log over the idf domain
-  * (DetMathSpec); determinism exact by construction.
+  * Every constant is rendered from the SAME Scala double ([[DetLn]]'s):
+  * Spark's compiled kernel reads the double, DuckDB gets
+  * `CAST('<toString>' AS DOUBLE)` whose correctly-rounding parse returns
+  * the identical bits (shortest-round-trip repr by construction).
+  * Accuracy ≤ 2 ulp vs Math.log over the idf domain (DetMathSpec);
+  * determinism exact by construction.
   *
-  * Domain: x ∈ [1, 2^41). Out-of-range inputs produce garbage, not errors —
-  * this is a scoring kernel, not a general libm.
+  * Domain: x ∈ [1, 2^41). Out of it the Spark kernel follows plain IEEE
+  * arithmetic and never raises: x = −1 gives −Infinity, NaN and ±Infinity
+  * give NaN, other x < 1 give finite values that are not logs (DetMathSpec
+  * pins x = −1). This is a scoring kernel, not a general libm.
   */
 object DetMath {
-  private val MaxExp = 40
-  private[queries] val Ln2: Double = 0.6931471805599453
-  private[queries] val SeriesCoeffs: Seq[Double] =
-    (0 to 15).map(k => 1.0 / (2 * k + 1))
+  import DetLn.{Ln2, MaxExp, SeriesCoeffs}
 
   /** DuckDB literal with the exact bits of `d` (string cast is
     * correctly-rounded and always DOUBLE-typed — decimal literals would
     * pull DuckDB into DECIMAL arithmetic with different rounding). */
   private def dlit(d: Double): String = s"CAST('${d.toString}' AS DOUBLE)"
 
-  /** Spark side. `x` must be DoubleType; the tree is wide (2×40 CASEs +
-    * 16-term Horner) so call it on reduced frames (per-term idf, not
-    * per-row), which is where a log belongs at scale anyway. */
-  def lnCol(x: Column): Column = {
-    val e = (1 to MaxExp)
-      .map(i => when(x >= lit(math.pow(2.0, i)), lit(1L)).otherwise(lit(0L)))
-      .reduce(_ + _)
-    val scale = (1 to MaxExp)
-      .map(i => when(x >= lit(math.pow(2.0, i)), lit(2.0)).otherwise(lit(1.0)))
-      .reduce(_ * _)
-    val m = x / scale
-    val z = (m - lit(1.0)) / (m + lit(1.0))
-    val z2 = z * z
-    val s = SeriesCoeffs.init.foldRight(lit(SeriesCoeffs.last): Column)(
-      (c, acc) => lit(c) + z2 * acc)
-    e.cast("double") * lit(Ln2) + lit(2.0) * z * s
-  }
+  /** Spark side: one compiled [[DetLn]] node over `x` (DoubleType).
+    * Built straight from the expression, so it needs no function
+    * registration and works on any session; SQL reaches the same node as
+    * `det_ln` once [[graft.plans.GraftExtensions]] is installed. */
+  def lnCol(x: Column): Column =
+    DatasetBridge.column(DetLn(DatasetBridge.expression(x)))
 
   /** DuckDB side: a CTE chain staging the intermediates (inlining them
     * textually would square the expression to ~150 KB). Input: relation
     * `src` with DOUBLE column `x`; output: relation `${out}_fin` = all of
-    * `src`'s columns plus `$out` = ln(x). Same op sequence as [[lnCol]]. */
+    * `src`'s columns plus `$out` = ln(x). Same op sequence as
+    * [[DetLn.compute]]. */
   def lnSqlCtes(src: String, x: String, out: String): String = {
     val e = (1 to MaxExp)
       .map(i => s"(CASE WHEN $x >= ${dlit(math.pow(2.0, i))} THEN 1 ELSE 0 END)")

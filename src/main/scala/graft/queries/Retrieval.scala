@@ -41,9 +41,10 @@ import org.apache.spark.sql.functions._
   * the scan); corpus stats (N, Σdl) are metadata-class one-row aggregates;
   * the per-(query, doc) fold is a keyed shuffle bounded by matched pairs;
   * top-k is a per-query rank filter (partial per-partition heaps). The
-  * idf's wide DetMath tree runs on the per-TERM frame (|query vocab| rows),
-  * not per posting. q128 adds one (query_id, doc_id)-keyed full-outer join
-  * of two already-top-20 (i.e. anchors×20-row) frames — broadcast-scale.
+  * idf's log (DetMath, one compiled `det_ln` node) runs on the per-TERM
+  * frame (|query vocab| rows), not per posting. q128 adds one (query_id,
+  * doc_id)-keyed full-outer join of two already-top-20 (i.e.
+  * anchors×20-row) frames — broadcast-scale.
   * q128's vector half is deliberately the EXACT cosine ranking — the
   * honest O(anchors·n) RRF ground input at anchor scale (composite
   * probed sub-linear 0.46/0.50 through 300×, the BM25 half dominating —

@@ -70,7 +70,7 @@ class GraftExtensionsSpec extends SparkSpec {
     // too, so a description dropped from the shared list fails loudly
     // instead of silently vanishing from one registration path.
     val expected = Set(
-      "xml_valid_native", "minhash_sigs", "dot_fold", "dot_fold_i8",
+      "xml_valid_native", "minhash_sigs", "dot_fold", "dot_fold_i8", "det_ln",
       "sorted_sum_fold", "term_contrib_fold", "rank_contrib_fold",
       "word_shingles", "char_ngrams", "rolling_hash",
       "sorted_intersect_count", "window_hashes", "winnow_positions",

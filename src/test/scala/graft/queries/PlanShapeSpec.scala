@@ -670,6 +670,23 @@ class PlanShapeSpec extends SparkSpec {
     assert(bnlj <= 1, s"expected at most the one-row stats cross, got $bnlj:\n$s")
   }
 
+  test("q133/q134: the BM25 plans stay small — the idf's ln is one compiled " +
+      "node, never a re-expanding Column tree") {
+    // Expression nodes summed over every operator of the optimized plan,
+    // subqueries included. The Column-tree ln alone made the idf
+    // projection 17,925 nodes (each reference to a shared intermediate
+    // re-expands its subtree), re-walked by every optimizer pass.
+    def exprNodes(name: String): Int =
+      SparkEntry.queries(name)(spark, sfDir).queryExecution.optimizedPlan
+        .collectWithSubqueries { case n =>
+          n.expressions.map(_.collect { case e => e }.size).sum
+        }.sum
+    for (q <- Seq("q133_retrieval_decontam", "q134_postings_decontam")) {
+      val n = exprNodes(q)
+      assert(n < 2000, s"$q's optimized plan has $n expression nodes")
+    }
+  }
+
   test("q134/q135: the registered index probes read their persisted tables " +
       "bucket-pruned — the corpus is never re-scanned for postings/signatures") {
     // building the plans runs ensureFor's one-time builds at the fixture SF
