@@ -42,16 +42,24 @@ object Dedup {
       docs: org.apache.spark.sql.DataFrame,
       shingle: Int = 3) = {
     graft.plans.GraftExtensions.install(spark)
-    docs
+    shinglesOf(docs
       .select(col("doc_id"), col("text"))
-      .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
+      .repartition(spark.sparkContext.defaultParallelism, col("doc_id")),
+      shingle)
+  }
+
+  /** [[shingleOn]]'s narrow part, with no exchange — what a probe runs
+    * over a handful of rows (BandIndex's query side and candidate
+    * verify). The width defaults to the engine banding's 3;
+    * BandIndex.reband passes the store's recorded width. */
+  private[graft] def shinglesOf(docs: org.apache.spark.sql.DataFrame,
+      shingle: Int) =
+    docs
       .filter(size(split(col("text"), " ")) >= shingle)
       // compiled shingle construction (graft.plans.WordShingles) — the
       // array_distinct(transform(sequence(...))) spelling is semantically
-      // identical but interpreted. The width defaults to the engine
-      // banding's 3; BandIndex.reband passes the store's recorded width.
+      // identical but interpreted
       .select(col("doc_id"), expr(s"word_shingles(text, $shingle)").as("sh"))
-  }
 
   private def shingleSqlFrom(src: String) =
     s"""s AS (
@@ -101,13 +109,18 @@ object Dedup {
       sigs: org.apache.spark.sql.DataFrame,
       bands: Int = 4,
       rowsPerBand: Int = 3): org.apache.spark.sql.DataFrame = {
-    val bandCols = (0 until bands).map(b =>
-      md5(concat((1 to rowsPerBand).map(i =>
-        element_at(col("sigs"), rowsPerBand * b + i)): _*)).as(s"b$b"))
-    sigs.select(col("doc_id") +: bandCols: _*)
-      .select(col("doc_id"), posexplode(array((0 until bands).map(b => col(s"b$b")): _*)))
+    sigs.select(col("doc_id"),
+        posexplode(bandSigsOf(col("sigs"), bands, rowsPerBand)))
       .toDF("doc_id", "band", "sig")
   }
+
+  /** A signature array's band signatures, band order: band b's sig is
+    * the md5 of its `rowsPerBand` concatenated member hashes. */
+  private[graft] def bandSigsOf(sigs: org.apache.spark.sql.Column,
+      bands: Int, rowsPerBand: Int): org.apache.spark.sql.Column =
+    array((0 until bands).map(b =>
+      md5(concat((1 to rowsPerBand).map(i =>
+        element_at(sigs, rowsPerBand * b + i)): _*))): _*)
 
   /** (doc_id, band, sig) for an arbitrary (doc_id, text, …) frame — the
     * full shingle → minhash → band pipeline as one call; what
@@ -220,15 +233,24 @@ object Dedup {
       cand: org.apache.spark.sql.DataFrame,
       shq: org.apache.spark.sql.DataFrame,
       shc: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val jac = size(array_intersect(col("sa.sh"), col("sb.sh"))).cast("double") /
-      size(array_union(col("sa.sh"), col("sb.sh")))
-    cand.as("c")
-      .join(shq.as("sa"), col("sa.doc_id") === col("c.bench_id"))
-      .join(shc.as("sb"), col("sb.doc_id") === col("c.doc_id"))
-      .select(col("c.bench_id").as("bench_id"), col("c.doc_id").as("doc_id"),
-        jac.as("jaccard"))
-      .filter(col("jaccard") >= 0.5)
+    verifiedPairs(cand.as("c")
+        .join(shq.as("sa"), col("sa.doc_id") === col("c.bench_id"))
+        .join(shc.as("sb"), col("sb.doc_id") === col("c.doc_id")),
+      col("c.bench_id"), col("c.doc_id"), col("sa.sh"), col("sb.sh"))
   }
+
+  /** The exact-Jaccard verify both near-dup spellings share
+    * ([[crossVerify]] and graft.sources.BandIndex.nearDupsFor): the
+    * (bench_id, doc_id, jaccard) rows of `pairs` whose query shingles `a`
+    * and candidate shingles `b` reach Jaccard 0.5. */
+  private[graft] def verifiedPairs(pairs: org.apache.spark.sql.DataFrame,
+      benchId: org.apache.spark.sql.Column, docId: org.apache.spark.sql.Column,
+      a: org.apache.spark.sql.Column,
+      b: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
+    pairs.select(benchId.as("bench_id"), docId.as("doc_id"),
+        (size(array_intersect(a, b)).cast("double") / size(array_union(a, b)))
+          .as("jaccard"))
+      .filter(col("jaccard") >= 0.5)
 
   /** Verified near-dup pairs ACROSS two corpora — `queryDocs` (the held-out
     * benchmark) against `corpusDocs`: band rows on each side, banded

@@ -155,63 +155,28 @@ object Retrieval {
     scoreTail(qterms, postings, stats, k)
   }
 
-  /** The scoring tail SHARED by the recompute path and the persisted
-    * [[graft.sources.PostingsIndex]] probe: df over the query-relevant
-    * posting slice → idf/avgdl on the per-TERM frame → once-per-posting
-    * contribution → per-(query, doc) ordered fold → top-k. Callers hand a
-    * `postings` frame (doc_id, dl, term, tf) already restricted to the
-    * query vocabulary AND cheap to consume twice (checkpointed slice /
-    * pruned scan) — the tail reads it for df and again for scoring.
-    * `stats` is a one-row (n_docs, sum_dl) frame; identical IEEE
-    * arithmetic on identical inputs in both callers is what makes the
-    * index probe bit-equal to the recompute spelling (PostingsIndexSpec
-    * pins it). */
+  /** The recompute path's scoring tail: df over the query-relevant
+    * posting slice → [[termWeights]] on the per-TERM frame →
+    * once-per-posting [[contribOf]] → per-(query, doc) [[scoreFold]] →
+    * top-k. Callers hand a `postings` frame (doc_id, dl, term, tf)
+    * already restricted to the query vocabulary AND cheap to consume
+    * twice (checkpointed slice) — the tail reads it for df and again for
+    * scoring. `stats` is a one-row (n_docs, sum_dl) frame. The persisted
+    * [[graft.sources.PostingsIndex]] probe scores through the same three
+    * pieces, which is what makes it bit-equal to this spelling
+    * (PostingsIndexSpec pins it). */
   private[graft] def scoreTail(qterms: DataFrame, postings: DataFrame,
-      stats: DataFrame, k: Int): DataFrame =
-    scoreTail(qterms, postings,
-      postings.groupBy("term").agg(count(lit(1)).as("df")), stats, k)
-
-  /** The tail with df HANDED IN instead of derived: the index probe's
-    * spelling — PostingsIndex persists (term, df) beside the postings
-    * (the stats-fold pattern applied to the one collection statistic the
-    * probe still recomputed per run), so the probe pays ONE pruned
-    * postings read for scoring plus a vocabulary-sized df read, never a
-    * second pass over the posting slice. `dfreq` = (term, df) restricted
-    * to the query vocabulary; df is the same integer either way, so the
-    * idf arithmetic — and therefore q134's hash against q133's oracle —
-    * is unchanged by construction. */
-  private[graft] def scoreTail(qterms: DataFrame, postings: DataFrame,
-      dfreq: DataFrame, stats: DataFrame, k: Int): DataFrame = {
-    graft.plans.GraftExtensions.install(qterms.sparkSession)
-    // The vocabulary rank `r`: row_number over the binary-UTF8-sorted
-    // query vocabulary (a single-partition window — qvocab is
-    // query-scale by contract, and it is about to be broadcast anyway).
-    // Every pair row downstream carries this 4-byte int INSTEAD of the
-    // term string (round 20, guide §2.3 — the string existed only to
-    // fix the fold's IEEE add order, and the rank map is
-    // order-preserving and injective, so sorting ranks visits the same
-    // contributions in the same order: bit-identical scores, ~half the
-    // bytes through the engine's largest exchange).
-    val wVocab = Window.orderBy("term")
+      stats: DataFrame, k: Int): DataFrame = {
+    val dfreq = postings.groupBy("term").agg(count(lit(1)).as("df"))
     // coalesce(1) below the vocabulary window (round 21, guide §2.4):
     // the un-partitioned rank window requires AllTuples, which a
     // one-partition child already satisfies — without the narrow merge
     // the planner inserted a SinglePartition Exchange here on every
     // scoreTail consumer. dfreq is vocabulary-scale by contract (the
     // frame is about to be broadcast whole), so one task is the right
-    // parallelism; in the index-probe path this also collapses the
-    // bucket-pruned df-companion read + delta fold into the same task.
-    val qvocab = dfreq.coalesce(1).crossJoin(broadcast(stats))
-      .withColumn("x",
-        lit(1.0) + ((col("n_docs") - col("df")).cast("double") + lit(0.5)) /
-          (col("df").cast("double") + lit(0.5)))
-      .withColumn("idf", DetMath.lnCol(col("x")))
-      .withColumn("avgdl", col("sum_dl").cast("double") / col("n_docs"))
-      .withColumn("r", row_number().over(wVocab))
-      .select("term", "r", "idf", "avgdl")
-    val contrib = col("idf") * (col("tf").cast("double") * lit(2.2)) /
-      (col("tf").cast("double") +
-        lit(1.2) * (lit(0.25) + lit(0.75) * col("dl").cast("double") / col("avgdl")))
+    // parallelism.
+    val qvocab = termWeights(dfreq.coalesce(1).crossJoin(broadcast(stats)),
+      col("n_docs"), col("sum_dl"))
     // The BM25 contribution depends only on (term, doc) — never on the
     // query (more-like-this query term weight ≡ 1) — so it is computed
     // ONCE per posting, below the anchor fan-out: the per-pair join emits
@@ -220,7 +185,8 @@ object Retrieval {
     // per-pair spelling, so bit-identical.
     val scored = postings
       .join(broadcast(qvocab), Seq("term"))
-      .select(col("doc_id"), col("term"), col("r"), contrib.as("c"))
+      .select(col("doc_id"), col("term"), col("r"),
+        contribOf(col("idf"), col("avgdl")).as("c"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("score").desc, col("doc_id"))
     // ONE exchange for the whole tail (round-20, guide §2.4): hash-
@@ -242,21 +208,55 @@ object Retrieval {
       .repartition(qterms.sparkSession.sparkContext.defaultParallelism,
         col("query_id"))
       .groupBy("query_id", "doc_id")
-      // compiled ordered fold (graft.plans.RankContribFold): identical
-      // element order and IEEE add sequence as the interpreted
-      // aggregate(array_sort(...)) spelling — the HOF ran a lambda frame
-      // per element over ~3.9M pair rows and was ~3× the aggregation's
-      // cost at sf0.1 (SCALING.md round 20), and the term-string key
-      // the first compiled kernel still carried is replaced by the
-      // vocabulary rank int (SortedFoldsSpec pins rank fold ≡ term fold ≡
-      // interpreted, bit-for-bit)
-      .agg(
-        call_function("rank_contrib_fold",
-          collect_list(struct(col("r"), col("c")))).as("score"),
-        count(lit(1)).as("n_terms"))
+      .agg(scoreFold.head, scoreFold.tail: _*)
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
   }
+
+  /** Per-term BM25 weights (term, r, idf, avgdl) of a ONE-partition
+    * (term, df) frame, at the collection's `nDocs` and `sumDl`: Lucene's
+    * always-positive idf through the det_ln kernel, avgdl, and the
+    * vocabulary rank `r` — row_number over the binary-UTF8-sorted
+    * vocabulary (the un-partitioned window needs no exchange above one
+    * partition). Every pair row downstream carries this 4-byte int
+    * INSTEAD of the term string (round 20, guide §2.3 — the string
+    * existed only to fix the fold's IEEE add order, and the rank map is
+    * order-preserving and injective, so sorting ranks visits the same
+    * contributions in the same order: bit-identical scores, ~half the
+    * bytes through the engine's largest exchange). */
+  private[graft] def termWeights(dfreq: DataFrame, nDocs: Column,
+      sumDl: Column): DataFrame = {
+    graft.plans.GraftExtensions.install(dfreq.sparkSession)
+    dfreq
+      .withColumn("x",
+        lit(1.0) + ((nDocs - col("df")).cast("double") + lit(0.5)) /
+          (col("df").cast("double") + lit(0.5)))
+      .withColumn("idf", DetMath.lnCol(col("x")))
+      .withColumn("avgdl", sumDl.cast("double") / nDocs)
+      .withColumn("r", row_number().over(Window.orderBy("term")))
+      .select("term", "r", "idf", "avgdl")
+  }
+
+  /** The BM25 contribution (k1 = 1.2, b = 0.75) of one posting row
+    * (tf, dl) under its term's `idf` and the collection's `avgdl`. */
+  private[graft] def contribOf(idf: Column, avgdl: Column): Column =
+    idf * (col("tf").cast("double") * lit(2.2)) /
+      (col("tf").cast("double") +
+        lit(1.2) * (lit(0.25) + lit(0.75) * col("dl").cast("double") / avgdl))
+
+  /** The per-(query, doc) aggregate over (r, c) contribution rows: the
+    * score — compiled ordered fold (graft.plans.RankContribFold):
+    * identical element order and IEEE add sequence as the interpreted
+    * aggregate(array_sort(...)) spelling; the HOF ran a lambda frame per
+    * element over ~3.9M pair rows and was ~3× the aggregation's cost at
+    * sf0.1 (SCALING.md round 20), and the term-string key the first
+    * compiled kernel still carried is replaced by the vocabulary rank int
+    * (SortedFoldsSpec pins rank fold ≡ term fold ≡ interpreted,
+    * bit-for-bit) — and n_terms. */
+  private[graft] def scoreFold: Seq[Column] = Seq(
+    call_function("rank_contrib_fold",
+      collect_list(struct(col("r"), col("c")))).as("score"),
+    count(lit(1)).as("n_terms"))
 
   /** The matching DuckDB CTE chain, ending in relation `lex` with columns
     * (query_id, doc_id, n_terms, score, rank ≤ k). `queryPredSql` /
@@ -561,11 +561,8 @@ object Retrieval {
     val anchors =
       if (multiProbe) Similarity.multiProbeExpand(anchors0, bits)
       else anchors0
-    // sorted = false: fuseRrf unions + re-aggregates this list by
-    // query_id, so the probe's final orderBy was a pure range-Sort
-    // exchange the union destroyed (round 21, guide §2.4); rows unchanged
     val vec = graft.sources.AnnIndex.topKFor(spark, annTable, anchors,
-      FuseDepth, signedAt = Some((tables, bits)), sorted = false)
+      FuseDepth, signedAt = Some((tables, bits)))
       .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
     fuseRrf(lex, vec, TopK)
   }

@@ -307,9 +307,9 @@ object Similarity {
     * banding, candidate dedup, and tie rule, in both engines. The
     * cross-label filter rides in the CANDIDATE join, so same-label pairs
     * die at the bucket probe before any cosine is computed. */
-  private[queries] def lshTopK(spark: SparkSession, dir: String, k: Int,
+  private[graft] def lshTopK(spark: SparkSession, dir: String, k: Int,
       crossLabelOnly: Boolean, tables: Int = 4, bits: Int = 8,
-      multiProbe: Boolean = false): DataFrame = {
+      multiProbe: Boolean = false, nAnchors: Int = 20): DataFrame = {
     val pool =
       if (tables * bits <= 32) hyperplanes else hyperplanePool(tables * bits)
     val e = normedVectors(spark, dir)
@@ -337,7 +337,7 @@ object Similarity {
     // expanded serving probes); single-probe plans are unchanged (the
     // anchor filter merely moves above the join, where the optimizer
     // pushed it anyway)
-    val qsigs0 = sigs.filter(col("vec_id") < 20)
+    val qsigs0 = sigs.filter(col("vec_id") < nAnchors)
     val qsigs = if (multiProbe) multiProbeExpand(qsigs0, bits) else qsigs0
     val cand = qsigs.as("x").join(sigs.as("y"), cond)
       .select(col("x.vec_id").as("query_id"), col("y.vec_id").as("neighbor_id"))
@@ -526,35 +526,40 @@ object Similarity {
     * whose cell boundary passes between query and neighbor. */
   private val q37 = GraftQuery(
     "q37_ivf_ann",
-    (spark, dir) => {
-      val e = normedVectors(spark, dir)
-      val cent = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cnrm"))
-      val simToCent = dot(col("v"), col("cv")) / (col("nrm") * col("cnrm"))
-      val wAssign = Window.partitionBy("vec_id")
-        .orderBy(col("c_sim").desc, col("c_id"))
-      val rankedCells = e.crossJoin(broadcast(cent))
-        .select(col("vec_id"), col("c_id"), simToCent.as("c_sim"))
-        .withColumn("rn", row_number().over(wAssign))
-      val assign = rankedCells.filter(col("rn") === 1)
-        .select(col("vec_id"), col("c_id").as("cell"))
-      val probes = rankedCells.filter(col("rn") <= 2)
-        .select(col("vec_id"), col("c_id").as("cell"))
-      val cos = dot(col("q.v"), col("c.v")) / (col("q.nrm") * col("c.nrm"))
-      val wRank = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-      probes.as("qa").filter(col("qa.vec_id") < 20)
-        .join(assign.as("ca"),
-          col("qa.cell") === col("ca.cell") && col("qa.vec_id") =!= col("ca.vec_id"))
-        .select(col("qa.vec_id").as("query_id"), col("ca.vec_id").as("neighbor_id"))
-        .join(e.as("q"), col("q.vec_id") === col("query_id"))
-        .join(e.as("c"), col("c.vec_id") === col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"), cos.as("cosine"))
-        .withColumn("rank", row_number().over(wRank))
-        .filter(col("rank") <= 3)
-        .orderBy("query_id", "rank")
-    },
+    (spark, dir) => ivfTopK(spark, dir),
     Some(ivfTopKSql),
     headline = true)
+
+  /** q37's body over the anchors `vec_id < nAnchors` (the registered row
+    * uses 20). */
+  private[graft] def ivfTopK(spark: SparkSession, dir: String,
+      nAnchors: Int = 20): DataFrame = {
+    val e = normedVectors(spark, dir)
+    val cent = e.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cnrm"))
+    val simToCent = dot(col("v"), col("cv")) / (col("nrm") * col("cnrm"))
+    val wAssign = Window.partitionBy("vec_id")
+      .orderBy(col("c_sim").desc, col("c_id"))
+    val rankedCells = e.crossJoin(broadcast(cent))
+      .select(col("vec_id"), col("c_id"), simToCent.as("c_sim"))
+      .withColumn("rn", row_number().over(wAssign))
+    val assign = rankedCells.filter(col("rn") === 1)
+      .select(col("vec_id"), col("c_id").as("cell"))
+    val probes = rankedCells.filter(col("rn") <= 2)
+      .select(col("vec_id"), col("c_id").as("cell"))
+    val cos = dot(col("q.v"), col("c.v")) / (col("q.nrm") * col("c.nrm"))
+    val wRank = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
+    probes.as("qa").filter(col("qa.vec_id") < nAnchors)
+      .join(assign.as("ca"),
+        col("qa.cell") === col("ca.cell") && col("qa.vec_id") =!= col("ca.vec_id"))
+      .select(col("qa.vec_id").as("query_id"), col("ca.vec_id").as("neighbor_id"))
+      .join(e.as("q"), col("q.vec_id") === col("query_id"))
+      .join(e.as("c"), col("c.vec_id") === col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), cos.as("cosine"))
+      .withColumn("rank", row_number().over(wRank))
+      .filter(col("rank") <= 3)
+      .orderBy("query_id", "rank")
+  }
 
   /** q37's oracle, shared with q137 (the index-served spelling probes
     * the persisted cell store against the SAME SQL — the q134/q135
@@ -651,6 +656,24 @@ object Similarity {
                    127.0 / greatest(list_max(list_transform(v, y -> abs(y))), 1e-30) AS scale
             FROM e))"""
 
+  /** q38's body over the anchors `vec_id < nAnchors` (the registered row
+    * uses 20). */
+  private[graft] def quantizedTopK(spark: SparkSession, dir: String,
+      nAnchors: Int = 20): DataFrame = {
+    val qz = int8Quantized(spark, dir)
+      .withColumn("qnrm", sqrt(dot(col("qv"), col("qv"))))
+      .select(col("vec_id"), col("qv"), col("qnrm"))
+    val q = qz.filter(col("vec_id") < nAnchors)
+    val score = dot(col("q.qv"), col("c.qv")) / (col("q.qnrm") * col("c.qnrm"))
+    val w = Window.partitionBy("query_id").orderBy(col("qcosine").desc, col("neighbor_id"))
+    broadcast(q.as("q")).join(qz.as("c"), col("q.vec_id") =!= col("c.vec_id"))
+      .select(col("q.vec_id").as("query_id"), col("c.vec_id").as("neighbor_id"),
+        score.as("qcosine"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 5)
+      .orderBy("query_id", "rank")
+  }
+
   /** Q38: int8 scalar-quantized cosine search — the memory-bandwidth
     * scale path. Each 64-dim float vector compresses to 64 signed bytes
     * plus one per-vector scale (127 / max|x|): an 8× reduction that turns
@@ -667,20 +690,7 @@ object Similarity {
     * half-case semantics are engine-specific. */
   private val q38 = GraftQuery(
     "q38_quantized_ann",
-    (spark, dir) => {
-      val qz = int8Quantized(spark, dir)
-        .withColumn("qnrm", sqrt(dot(col("qv"), col("qv"))))
-        .select(col("vec_id"), col("qv"), col("qnrm"))
-      val q = qz.filter(col("vec_id") < 20)
-      val score = dot(col("q.qv"), col("c.qv")) / (col("q.qnrm") * col("c.qnrm"))
-      val w = Window.partitionBy("query_id").orderBy(col("qcosine").desc, col("neighbor_id"))
-      broadcast(q.as("q")).join(qz.as("c"), col("q.vec_id") =!= col("c.vec_id"))
-        .select(col("q.vec_id").as("query_id"), col("c.vec_id").as("neighbor_id"),
-          score.as("qcosine"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .orderBy("query_id", "rank")
-    },
+    (spark, dir) => quantizedTopK(spark, dir),
     Some(s"""
       WITH $normedVectorsSql, $int8QuantizedSql,
       qn AS (

@@ -1,8 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.queries.Similarity
 
@@ -20,8 +20,9 @@ import graft.queries.Similarity
   *
   * Layout choices, stated: (a) `sig` is the bucket key (single-column,
   * because bucket pruning works on single-key `isin` predicates); the
-  * (tbl, sig) correctness rendezvous is the broadcast join — the
-  * pruning predicate is the IO filter, the join is the semantics.
+  * (tbl, sig) correctness rendezvous is the probe's literal fan-out and
+  * its table match — the pruning predicate is the IO filter, the
+  * rendezvous is the semantics.
   * (b) v and nrm are stored per signature row (×tables storage) so the
   * exact re-rank reads no second corpus table; at 100 TB the trade is
   * tables× the vector bytes for a self-contained single-scan probe —
@@ -198,10 +199,8 @@ object AnnIndex {
     * caller's banding read and the probe would otherwise make the
     * old-banding signatures collide with NOTHING. */
   def topKFor(spark: SparkSession, table: String, anchorRows: DataFrame,
-      k: Int, signedAt: Option[(Int, Int)] = None,
-      sorted: Boolean = true): DataFrame =
-    probeCore(spark, table, anchorRows, k, crossLabel = false, signedAt,
-      sorted)
+      k: Int, signedAt: Option[(Int, Int)] = None): DataFrame =
+    probeCore(spark, table, anchorRows, k, crossLabel = false, signedAt)
 
   /** The CROSS-LABEL serving probe — q125's hard-negative semantics
     * over the persisted store (the training-data shape: for each
@@ -220,122 +219,64 @@ object AnnIndex {
       signedAt: Option[(Int, Int)] = None): DataFrame =
     probeCore(spark, table, anchorRows, k, crossLabel = true, signedAt)
 
-  /** The ONE probe chain both serving entries share (refresh, anchor
-    * checkpoint, driver sig collect, isin pruning, broadcast rendezvous,
-    * pair dedup, rank) — the label predicate and its two output columns
-    * are the only fork, so a fix to the shared contract (the refresh
-    * rule, the dedup rule, the pruning predicate) can never apply to
-    * one entry and silently miss the other.
+  /** The ONE probe chain both serving entries share (refresh, the
+    * query side, the (tbl, sig) rendezvous, pair dedup, rank) — the
+    * label predicate and its two output columns are the only fork, so a
+    * fix to the shared contract can never apply to one entry and
+    * silently miss the other.
     *
-    * Broadcast shape (round-18 advice applied): the rendezvous
-    * broadcasts only the SLIM probe keys (query_id[, label], tbl, sig)
-    * — a multi-probe-expanded anchor set carries (bits+1) rows per
-    * (query, table), and shipping qv/qnrm on every expanded row grew
-    * the broadcast and the driver collect ~9× at 4×8 banding for a
-    * payload that is identical across a query's rows. The query payload
-    * joins back as ONE broadcast row per query (no exchange); the
-    * neighbor payload still rides the index scan row (the
-    * self-contained-single-scan trade); and the pair dedup stays the
-    * narrow groupBy/max — keys plus one cosine double through the
-    * exchange with map-side partial max, never the 64-double vector per
-    * colliding row. Same fold on the same vectors → identical values,
-    * identical tie rule → every output bit-equal to the pre-slim
-    * spelling. */
+    * The anchor rows are query-scale by the q122/q125 contract: they
+    * collect to the driver ONCE (a literal client query runs no job)
+    * and become the probe's literals — the signature pruning literal and
+    * the `sig → anchor rows` fan-out, payload included. The store side
+    * is then one plan ([[StoreFamily.pointScan]]): pruned scan, fan-out,
+    * cosine, dedup, rank. The cosine computes BEFORE the pair dedup, so
+    * the dedup carries the pair keys plus ONE double. Colliding (query,
+    * neighbor) pairs from multiple tables/probes carry the identical
+    * cosine; max() is the deterministic dedup. Same fold on the same
+    * vectors and the same tie rule as lshTopK. */
   private def probeCore(spark: SparkSession, table: String,
       anchorRows: DataFrame, k: Int, crossLabel: Boolean,
-      signedAt: Option[(Int, Int)] = None,
-      sorted: Boolean = true): DataFrame = {
+      signedAt: Option[(Int, Int)] = None): DataFrame = {
     StoreFamily.open(Family, spark, table)
-    // materialize the anchor rows ONCE (they are query-scale by the
-    // q122/q125 contract): the consumers below — the driver-side
-    // signature collect, the slim broadcast, the payload broadcast —
-    // would otherwise re-execute the caller's whole anchor pipeline
-    // (topK's index scan, or a client's read→norm→sign chain)
     val anchors = anchorRows
       .select(Seq(col("vec_id").as("query_id")) ++
         (if (crossLabel) Seq(col("label").as("query_label")) else Nil) ++
         Seq(col("tbl").as("qtbl"), col("sig").as("qsig"),
           col("v").as("qv"), col("nrm").as("qnrm")): _*)
-      .localCheckpoint(true)
-    // SINGLE-PARTITION anchor derivations (round 21, guide §2.4): the
-    // slim-key distinct, the payload dedup and the driver signature
-    // collect each planned their own 32-partition hash exchange over a
-    // frame that is query-scale by contract — three shuffles (and
-    // 3 × cpus scheduled tasks) whose only job was deduplicating a few
-    // hundred rows. coalesce(1) over the checkpointed anchor RDD is a
-    // narrow merge, and a one-partition child satisfies every clustering
-    // requirement, so all three aggregations now plan exchange-FREE.
-    // Same rows either way (distinct/dropDuplicates semantics are
-    // partitioning-independent; payload rows are identical per query by
-    // construction, so any representative is the same value).
-    val one = anchors.coalesce(1)
-    val slim = one
-      .select(Seq(col("query_id")) ++
-        (if (crossLabel) Seq(col("query_label")) else Nil) ++
-        Seq(col("qtbl"), col("qsig")): _*)
-      .distinct()
-    val payload = one.select("query_id", "qv", "qnrm")
-      .dropDuplicates("query_id")
-    // anchor signatures collect to the driver for the pruning predicate
-    val probeSigs = slim.select("qsig").distinct()
-      .collect().map(_.getString(0)).toSeq
-    // the anchor side has EXECUTED (checkpoint + collect above) — the
-    // caller's signing pipeline included. Refuse a reband that landed
-    // since the caller read the banding it signed at: the old-banding
-    // signatures would collide with nothing (silent-empty, where the
-    // contract promises loud-retry). The residual window past this
-    // check fails loud on its own (the swap deletes the old files).
+    // duplicate anchor rows probe once
+    val rows = anchors.collect().toSeq.distinct
+    // the anchor side has EXECUTED — the caller's signing pipeline
+    // included: refuse a reband that landed since the caller read the
+    // banding it signed at (the old-banding signatures would collide
+    // with nothing — silent-empty, where the contract promises
+    // loud-retry). The residual window past this check fails loud on its
+    // own (the swap deletes the old files).
     signedAt.foreach(StoreFamily.requireStable(table, _,
       recordedBanding(spark, table)))
-    val baseCond = col("tbl") === col("qtbl") && col("sig") === col("qsig") &&
-      col("vec_id") =!= col("query_id")
+    val baseCond = col("tbl") === col("qtbl") && col("vec_id") =!= col("query_id")
     val cond =
       if (crossLabel) baseCond && col("label") =!= col("query_label")
       else baseCond
-    val outKeys =
-      if (crossLabel) Seq(col("query_id"), col("query_label"),
-        col("vec_id").as("neighbor_id"), col("label").as("neighbor_label"))
-      else Seq(col("query_id"), col("vec_id").as("neighbor_id"))
     val keyNames =
       if (crossLabel)
         Seq("query_id", "query_label", "neighbor_id", "neighbor_label")
       else Seq("query_id", "neighbor_id")
-    // ONE index scan: bucket-pruned by the literal signature set, hash-
-    // probed against the broadcast slim keys on the (tbl, sig)
-    // rendezvous; the query payload joins back BROADCAST (no exchange)
-    // and the cosine computes BEFORE the pair dedup, so the dedup
-    // exchange carries the pair keys plus ONE double with a map-side
-    // partial max — not the 64-double neighbor vector per colliding row
-    // (the dropDuplicates first spelling shuffled ~30× the bytes on the
-    // probe hot path, and multi-probe multiplies collisions). Colliding
-    // (query, neighbor) pairs from multiple tables/probes carry the
-    // identical cosine; max() is the deterministic dedup.
+    val outKeys =
+      if (crossLabel) Seq(col("query_id"), col("query_label"),
+        col("vec_id").as("neighbor_id"), col("label").as("neighbor_label"))
+      else Seq(col("query_id"), col("vec_id").as("neighbor_id"))
     val cos = Similarity.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    // bucket pruning HERE: anchors are query-scale by contract, so the
-    // signatures always ship as the literal
-    StoreFamily.probeScan(Family, spark, table, Some(probeSigs))
-      .join(broadcast(slim), cond)
-      .select(outKeys :+ col("v") :+ col("nrm"): _*)
-      .join(broadcast(payload), Seq("query_id"))
+    val fan = StoreFamily.fanOut(StringType, anchors.schema,
+      rows.map(r => r.getAs[String]("qsig") -> r))
+    StoreFamily.pointScan(Family, spark, table, fan)
+      .select(col("*"), col("q.*")).filter(cond)
+      .select(outKeys ++ Seq(col("v"), col("nrm"), col("qv"), col("qnrm")): _*)
       .select(keyNames.map(col) :+ cos.as("cosine"): _*)
-      // ONE exchange for the dedup+rank tail (round-20, guide §2.4):
-      // query_id-only hash partitioning satisfies both the pair-dedup
-      // groupBy's clustering and the rank window's, replacing the two
-      // planner exchanges with one; explicit count pins it against AQE
-      // byte-coalescing. Anchor sets are query-scale by contract, and
-      // the window already required a query's rows co-located.
-      .repartition(spark.sparkContext.defaultParallelism, col("query_id"))
+      .transform(fan.gather(_))
       .groupBy(keyNames.map(col): _*)
       .agg(max("cosine").as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      // `sorted = false` (round 21, guide §2.4): a COMPOSING caller —
-      // q136's RRF fusion, which unions this frame and re-aggregates by
-      // query_id — pays a full range-partitioning Sort exchange here for
-      // an order the union immediately destroys. Registered probe rows
-      // (q135/q146/q147) keep the sorted output; same rows either way.
-      .transform(df => if (sorted) df.orderBy("query_id", "rank") else df)
+      .transform(StoreFamily.pointRank(_, fan, k, col("cosine").desc,
+        col("neighbor_id")))
   }
 }

@@ -1,7 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType,
+  StructField, StructType}
 
 import graft.queries.Dedup
 
@@ -202,15 +204,6 @@ object BandIndex {
     }
   }
 
-  /** Past this many probe band rows, the probes stop shipping the
-    * signatures as an `isin` plan literal and scan the store un-pruned
-    * (here the (band, sig) join IS the semantics, so no replacement
-    * restriction is needed). The limit and its measured rationale are
-    * [[Bucketing.PruneLiteralLimit]] — the one size-routing rule every
-    * bucketed-store probe shares (PostingsIndex routes to a broadcast
-    * vocab semi-join past it). */
-  private[sources] val PruneSigLimit = Bucketing.PruneLiteralLimit
-
   /** Band-collision ids of `bandRows` against the indexed store — the
     * STREAMING GATE primitive: which of the batch's docs share at least
     * one (band, sig) with any indexed doc. NO exact verify here: the
@@ -220,27 +213,13 @@ object BandIndex {
     * deployments needing exact-Jaccard confirmation keep a document
     * store and run [[nearDupsFor]], which verifies candidate-bounded.
     * `bandRows` is batch-bounded by the foreachBatch contract
-    * (broadcast side); pruning is size-routed per [[PruneSigLimit]]. */
+    * ([[candidatesFor]] collects it). */
   private[graft] def collidingIds(spark: SparkSession, table: String,
       bandRows: DataFrame): DataFrame = {
     StoreFamily.open(Family, spark, table)
-    collisions(spark, table, bandRows).select(col("x.doc_id")).distinct()
+    candidatesFor(spark, table, bandRows).select(col("bench_id").as("doc_id"))
+      .distinct()
   }
-
-  /** The (band, sig) collisions of `bandRows` (aliased `x`) with the
-    * store (aliased `y`): the store scan is size-routed per
-    * [[PruneSigLimit]] ([[Bucketing.pruneLiterals]]) — a
-    * point-query-scale signature set ships as the bucket-pruning
-    * literal, anything larger scans the store whole — with tombstones
-    * subtracted above the sig filter ([[StoreFamily.probeScan]]); the
-    * broadcast (band, sig) join is the rendezvous either way.
-    * `bandRows` must be materialized (checkpointed). */
-  private def collisions(spark: SparkSession, table: String,
-      bandRows: DataFrame): DataFrame =
-    StoreFamily.probeScan(Family, spark, table,
-        Bucketing.pruneLiterals(bandRows.select("sig").distinct())).as("y")
-      .join(broadcast(bandRows.as("x")),
-        col("x.band") === col("y.band") && col("x.sig") === col("y.sig"))
 
   /** [[appendDocs]] over the documents of `dir` restricted to `pred` —
     * the dir-based epoch-append convenience. */
@@ -249,63 +228,63 @@ object BandIndex {
     appendDocs(table, graft.Tables.documents(spark, dir).filter(pred))
 
   /** Verified near-dup pairs for `queryDocs` = (doc_id, text) against
-    * the indexed collection: the query side bands at probe time (its
-    * shingles computed ONCE, checkpointed — they feed both the banding
-    * and the verify), the store scan is SIZE-ROUTED per
-    * [[PruneSigLimit]] (a point-query-scale set probes bucket-pruned by
-    * its signature literals; a benchmark-sweep-scale set scans the band
-    * store whole — still a metadata-scale read: ~4 md5 rows per doc vs
-    * the text corpus the recompute path re-shingles), and the (band,
-    * sig) broadcast join is the rendezvous either way. The
-    * exact-Jaccard verify then re-shingles ONLY the candidate corpus
-    * docs — the candidate ids pushed into the corpus scan as a literal
-    * (routed like the sigs) — through the same [[Dedup.crossVerify]] as
-    * the recompute path: identical candidate set, identical arithmetic,
-    * so q139's hash against q138's oracle holds by construction.
-    * Self-matches cannot arise: the store holds only docs the
-    * build/append predicates admitted, disjoint from the query slice by
-    * the caller's split. */
+    * the indexed collection, banded and verified at the STORE'S recorded
+    * banding (after a reband the engine default would produce signatures
+    * that never collide; the recordedBanding rule). The query side is
+    * query-scale by contract: it shingles, signs and bands in ONE collect
+    * (a projection over a client's literal rows runs no job; the same
+    * compiled kernels as the recompute path), and the probe then runs
+    * two plans:
+    *   - the candidate collect ([[candidatesFor]]): the store scan,
+    *     bucket-pruned by the band signatures, executes exactly once.
+    *     Candidate pairs are query-bounded — each bench item collides
+    *     with its true near-dups plus banding noise, measured 47 pairs at
+    *     the 300× probe leg;
+    *   - the verify: the candidate corpus docs — pushed into the corpus
+    *     scan as an id literal up to [[Bucketing.PruneLiteralLimit]] of
+    *     them (the pre-collect spelling's un-pruned corpus read was 6.0
+    *     of the probe's 6.5 s at 300×; SCALING.md round 18) — re-shingle
+    *     and meet their query docs' shingles
+    *     through a literal `candidate doc → (bench_id, shingles)`
+    *     fan-out; [[Dedup.verifiedPairs]] applies the recompute path's
+    *     exact Jaccard and threshold.
+    * Identical candidate set, identical arithmetic, so q139's hash
+    * against q138's oracle holds by construction. Self-matches cannot
+    * arise: the store holds only docs the build/append predicates
+    * admitted, disjoint from the query slice by the caller's split. */
   def nearDupsFor(spark: SparkSession, table: String,
       corpusDocs: DataFrame, queryDocs: DataFrame): DataFrame = {
     import spark.implicits._
-    // the query side bands — and the verify re-shingles — at the STORE'S
-    // recorded banding (after a reband the engine default would produce
-    // signatures that never collide; the recordedBanding rule)
-    val (shingle, hashes, bands) =
+    graft.plans.GraftExtensions.install(spark)
+    val banding @ (shingle, hashes, bands) =
       bandingOf(StoreFamily.open(Family, spark, table))
-    val shq = Dedup.shingleOn(spark, queryDocs, shingle)
-      .localCheckpoint(true)
-    val qbands = Dedup.bandRowsOf(
-        Dedup.minhashSigsOf(spark, shq, hashes), bands, hashes / bands)
-      .localCheckpoint(true)
-    // candidate pairs COLLECT to the driver (the query-vocab-literal
-    // contract: each bench item collides with its true near-dups plus
-    // banding noise — query-bounded, measured 47 pairs at the 300×
-    // probe leg). That executes the store scan exactly ONCE and lets
-    // the candidate ids reach the CORPUS scan as a pushed-down literal
-    // below — the pre-collect spelling re-ran the store scan in both
-    // verify consumers and filtered the corpus text through a broadcast
-    // join no parquet reader can push (measured: the verify tail was
-    // 6.0 of the probe's 6.5 s at 300×, dominated by the un-pruned
-    // corpus read; SCALING.md round 18).
-    val candPairs = candidatesFor(spark, table, qbands)
+    val shq = Dedup.shinglesOf(queryDocs.select(col("doc_id"), col("text")),
+        shingle)
+      .withColumn("sigs", expr(s"minhash_sigs(sh, $hashes)"))
+      .select(col("doc_id"), col("sh"),
+        Dedup.bandSigsOf(col("sigs"), bands, hashes / bands).as("bsigs"))
+      .collect().toSeq
+    val cand = candidatesFor(spark, table, shq.flatMap(r =>
+        r.getSeq[String](2).zipWithIndex.map { case (sig, b) =>
+          (r.getLong(0), b, sig) })
+        .toDF("doc_id", "band", "sig"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    // the collect above is where the store scan executed — refuse a
-    // reband that landed after the banding read (silent-empty guard)
-    StoreFamily.requireStable(table, (shingle, hashes, bands),
-      recordedBanding(spark, table))
-    val cand = candPairs.toDF("bench_id", "doc_id")
-    val candIds = candPairs.map(_._2).distinct
-    // candidate-bounded verify: only candidate corpus docs re-shingle;
-    // the id set routes like the sigs (small → pushdown literal, large
-    // → broadcast semi-join — same planning-cost cliff)
-    val candDocs =
-      if (candIds.size <= PruneSigLimit)
-        corpusDocs.filter(col("doc_id").isin(candIds: _*))
-      else corpusDocs.join(
-        broadcast(cand.select("doc_id").distinct()), Seq("doc_id"))
-    Dedup.crossVerify(cand, shq, Dedup.shingleOn(spark, candDocs, shingle))
+    // the store scan executed in the candidate collect — refuse a reband
+    // that landed after the banding read (silent-empty guard)
+    StoreFamily.requireStable(table, banding, recordedBanding(spark, table))
+    val byBench = shq.groupMap(_.getLong(0))(_.getSeq[String](1))
+    val fan = StoreFamily.fanOut(LongType, VerifyEntry,
+      cand.flatMap { case (b, d) => byBench(b).map(sh => (d: Any) -> Row(b, sh)) })
+    // only candidate docs re-shingle, pruned by the id literal or not
+    Dedup.verifiedPairs(fan.spread(Dedup.shinglesOf(fan.prune(
+          corpusDocs.select(col("doc_id"), col("text")), "doc_id")
+          .filter(fan.holds("doc_id")), shingle), "doc_id"),
+      col("q.bench_id"), col("doc_id"), col("q.sh"), col("sh"))
   }
+
+  /** A verify fan-out entry: a bench doc and its shingles. */
+  private val VerifyEntry = StructType(Seq(StructField("bench_id", LongType),
+    StructField("sh", ArrayType(StringType))))
 
   /** Verified near-dup pairs of the WHOLE indexed collection — the
     * recurring full-corpus dedup sweep (q30) served from the store: the
@@ -317,16 +296,17 @@ object BandIndex {
     * candidate-bounded exactly like [[nearDupsFor]]: pair volume tracks
     * true duplication (bucket-occupancy-bounded, the q30 argument), so
     * small sweeps collect-and-push the ids, large ones route to the
-    * distributed semi-join (the [[PruneSigLimit]] rule on pair count).
+    * distributed semi-join (the [[Bucketing.PruneLiteralLimit]] rule on pair
+    * count).
     * Output (doc_a, doc_b, jaccard ≥ 0.5) — q140 registers it against
     * q30's own oracle SQL. */
   def nearDupPairs(spark: SparkSession, table: String,
       corpusDocs: DataFrame): DataFrame =
-    nearDupPairsRouted(spark, table, corpusDocs, PruneSigLimit)
+    nearDupPairsRouted(spark, table, corpusDocs, Bucketing.PruneLiteralLimit)
 
   /** [[nearDupPairs]] with the collect-route limit injectable — the
     * spec forces the distributed route on a small fixture (limit 0);
-    * production always routes at [[PruneSigLimit]]. */
+    * production always routes at [[Bucketing.PruneLiteralLimit]]. */
   private[graft] def nearDupPairsRouted(spark: SparkSession, table: String,
       corpusDocs: DataFrame, routeLimit: Int): DataFrame = {
     import spark.implicits._
@@ -399,15 +379,27 @@ object BandIndex {
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
   }
 
-  /** The lazy candidate frame (bench_id, doc_id) for a probe over
-    * materialized `qbands` ([[collisions]]). Exposed for the plan pin:
-    * the pruned route's `SelectedBucketsCount` lives in THIS frame's
-    * scan (BandIndexSpec); [[nearDupsFor]] collects it. */
+  /** The lazy distinct (bench_id, doc_id) band collisions of `qbands`
+    * (doc_id, band, sig) with the store. The band rows collect to the
+    * driver once (a LocalRelation runs no job) and the store scan reads
+    * the buckets of their signatures ([[StoreFamily.pointScan]]: the
+    * plan-visible `SelectedBucketsCount` BandIndexSpec pins) with a
+    * literal `sig → (band, doc_id)` fan-out; (band, sig) is the
+    * rendezvous and tombstones subtract above the scan. */
   private[graft] def candidatesFor(spark: SparkSession, table: String,
-      qbands: DataFrame): DataFrame =
-    collisions(spark, table, qbands)
-      .select(col("x.doc_id").as("bench_id"), col("y.doc_id").as("doc_id"))
-      .distinct()
+      qbands: DataFrame): DataFrame = {
+    val qb = qbands.select("sig", "band", "doc_id")
+    val fan = StoreFamily.fanOut(qb.schema("sig").dataType,
+      StructType(qb.schema.tail),
+      qb.collect().toSeq.map(r => r.get(0) -> Row(r.get(1), r.get(2))))
+    StoreFamily.pointScan(Family, spark, table, fan)
+      .filter(col("band") === col("q.band"))
+      .select(col("q.doc_id").as("bench_id"), col("doc_id"))
+      // a point-sized probe dedupes in one task, exchange-free; the
+      // aggregate above the Generate is also what keeps Spark's
+      // DisableUnnecessaryBucketedScan from dropping the pruning
+      .transform(fan.gather(_, "bench_id")).distinct()
+  }
 
   /** Build-once memo for dir-derived stores — the registered q139 runs
     * through it ([[StoreFamily.ensureFor]]: `buckets` AND the corpus

@@ -229,39 +229,18 @@ object Bucketing {
       case None => frame
     }
 
-  // ---- Probe literals ---------------------------------------------------
+  // ---- Literal limit ----------------------------------------------------
 
-  /** Shared size-routing limit for probe literals over bucketed stores:
-    * at or under this many distinct key values a probe ships them as
-    * the bucket-pruning `isin` literal; past it the probe restricts by
-    * a broadcast semi-join (or scans whole where the join itself is the
-    * rendezvous). MEASURED, not guessed (SCALING.md round 18): a
-    * 2,000-element string `In` costs ~0.6 s of planning/codegen per
-    * plan occurrence while the scan it prunes costs 0.1–0.2 s, and past
-    * a few hundred values the literal hits nearly every bucket anyway —
-    * pruning pays exactly for point-query-scale key sets. */
+  /** Size limit for an `isin` literal of key values: a probe prunes its
+    * store scan by one up to this many keys and reads the store whole
+    * past it ([[StoreFamily.FanOut.prune]]); [[BandIndex.nearDupPairs]]'s
+    * collect route ships its candidate ids as one. MEASURED, not guessed
+    * (SCALING.md round 18): a 2,000-element string `In` costs ~0.6 s of
+    * planning/codegen per plan occurrence while the scan it prunes costs
+    * 0.1–0.2 s, and past a few hundred values the literal hits nearly
+    * every bucket anyway — pruning pays exactly for point-query-scale
+    * key sets. */
   private[sources] val PruneLiteralLimit = 256
-
-  /** `keys` (one column of DISTINCT values) as a pruning literal, or
-    * None past [[PruneLiteralLimit]]. ONE job decides the route AND
-    * fetches the literal: a limit+1 sample exceeds the limit exactly
-    * when the count does, and under it the sample IS the whole set
-    * (driver payload capped at limit+1 values either way). */
-  private[sources] def pruneLiterals(keys: DataFrame): Option[Seq[Any]] = {
-    val sample = keys.limit(PruneLiteralLimit + 1).collect()
-    if (sample.length <= PruneLiteralLimit) Some(sample.map(_.get(0)).toSeq)
-    else None
-  }
-
-  /** `table` restricted to `literals` of `key` — the bucket-pruning
-    * `isin` (`SelectedBucketsCount` in the scan) — or, with no literal,
-    * to whatever `wide` narrows it to (the whole table by default). */
-  private[sources] def restrict(spark: SparkSession, table: String,
-      key: String, literals: Option[Seq[Any]],
-      wide: DataFrame => DataFrame = identity): DataFrame = {
-    val t = spark.table(table)
-    literals.fold(wide(t))(ls => t.filter(col(key).isin(ls: _*)))
-  }
 
   // ---- Streaming batch marker -------------------------------------------
 

@@ -1,9 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
+import graft.plans.DotFold
 import graft.queries.Similarity
 
 /** PERSISTED IVF index — the third index family, closing the serving
@@ -93,8 +97,8 @@ object IvfIndex {
       Seq("qv", "qnrm"), "cosine") {
     def payload(normed: DataFrame): DataFrame = normed
     def query(q: DataFrame): DataFrame = q
-    def scoreOf: Column = Similarity.dot(col("pr.qv"), col("ix.v")) /
-      (col("pr.qnrm") * col("ix.nrm"))
+    def scoreOf: Column = Similarity.dot(col("qv"), col("v")) /
+      (col("qnrm") * col("nrm"))
   }
 
   /** The SQ payload: ranking inside the probed cells is the quantized
@@ -112,8 +116,8 @@ object IvfIndex {
         Similarity.int8Scale(col("qv"))))
       .withColumn("aqnrm", sqrt(Similarity.dot(col("aqv"), col("aqv"))))
     def scoreOf: Column =
-      call_function("dot_fold_i8", col("ix.qv"), col("pr.aqv")) /
-        (col("pr.aqnrm") * col("ix.qnrm"))
+      call_function("dot_fold_i8", col("qv"), col("aqv")) /
+        (col("aqnrm") * col("qnrm"))
   }
 
   /** The storage routing check, run after [[StoreFamily.open]]. */
@@ -273,53 +277,64 @@ object IvfIndex {
   }
 
   /** The serving-path probe: `anchors` = (query_id, v, nrm) — normed
-    * query vectors (callers norm via Similarity.normedVectorsOf). Ranks
-    * each anchor against the broadcast centroid companion, collects the
-    * union of `nProbe` cell ids to the driver (≤ anchors × nProbe of at
-    * most fit-size values — trivially query-scale), and reads ONE
-    * bucket-pruned scan of exactly those cells. `nProbe` is the
-    * per-query recall-for-scan-volume dial (probe cost tracks
+    * query vectors (callers norm via Similarity.normedVectorsOf). Each
+    * anchor probes its `nProbe` nearest cells, and the store is read as
+    * ONE bucket-pruned scan of exactly those cells ([[probe]]). `nProbe`
+    * is the per-query recall-for-scan-volume dial (probe cost tracks
     * n/nlist × nProbe); the default is q37's 2. */
   def topKFor(spark: SparkSession, table: String, anchors: DataFrame,
       k: Int, nProbe: Int = NProbe): DataFrame =
     probe(Full, spark, table, anchors, k, nProbe)
 
+  /** The probe both storages share. The anchors' full-precision vectors
+    * rank the centroid companion (the coarse quantizer never sees codes)
+    * and each anchor probes its `nProbe` nearest cells, ties on (c_sim
+    * desc, c_id). That ranking runs on the DRIVER: the anchors
+    * (query-scale by contract) and the fit-sized centroid set collect
+    * once and each similarity is [[DotFold.compute]], the kernel the
+    * `dot_fold` node calls, ordered under Spark's double ordering — so
+    * the probed cells are exactly the ones q37's plan-side window picks.
+    * The store side is one plan ([[StoreFamily.pointScan]]): pruned cell
+    * scan, literal fan-out to the anchors, in-cell score, rank. Each
+    * database vector lives in exactly one cell, so candidates need no
+    * dedup. */
   private def probe(st: Storage, spark: SparkSession, table: String,
       anchors: DataFrame, k: Int, nProbe: Int): DataFrame = {
     if (st.sq) graft.plans.GraftExtensions.install(spark)
     requireStorage(st, table, StoreFamily.open(Family, spark, table))
-    val simToCent = Similarity.dot(col("qv"), col("cv")) /
-      (col("qnrm") * col("cnrm"))
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("c_sim").desc, col("c_id"))
-    // (query_id, cell, query payload): each anchor's nProbe nearest
-    // cells, ranked full-precision (the coarse quantizer never sees
-    // codes), the query payload riding along for the single-pass re-rank
-    val probes = st.query(anchors
-        .select(col("query_id"), col("v").as("qv"), col("nrm").as("qnrm")))
-      .crossJoin(broadcast(spark.table(centTableOf(table))))
-      .select(col("query_id") +: st.probeCols.map(col) :+ col("c_id") :+
-        simToCent.as("c_sim"): _*)
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe)
-      .select(col("query_id") +: col("c_id").as("cell") +:
-        st.probeCols.map(col): _*)
-      .localCheckpoint(true)
-    val probeCells = probes.select("cell").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val wRank = Window.partitionBy("query_id")
-      .orderBy(col(st.score).desc, col("neighbor_id"))
-    // bucket pruning HERE — the probed cells always ship as the literal
-    StoreFamily.probeScan(Family, spark, table, Some(probeCells)).as("ix")
-      .join(broadcast(probes.as("pr")),
-        col("ix.cell") === col("pr.cell") &&
-          col("ix.vec_id") =!= col("pr.query_id"))
-      .select(col("pr.query_id"), col("ix.vec_id").as("neighbor_id"),
+    // (query_id, qv, qnrm[, the SQ payload])
+    val queries = st.query(anchors
+      .select(col("query_id"), col("v").as("qv"), col("nrm").as("qnrm")))
+    val entry = StructType(("query_id" +: st.probeCols).map(queries.schema(_)))
+    val rows = queries.collect().toSeq
+    val cent = spark.table(centTableOf(table)).select("c_id", "cv", "cnrm")
+      .collect().map(c => (c.getLong(0), doubles(c.getSeq[Double](1)),
+        c.getDouble(2)))
+    val entries = rows.flatMap { r =>
+      val (qv, qnrm) = (doubles(r.getAs[collection.Seq[Double]]("qv")),
+        r.getAs[Double]("qnrm"))
+      val e = Row.fromSeq(entry.fieldNames.toSeq.map(r.getAs[Any]))
+      cent.map { case (c, cv, cnrm) =>
+          c -> DotFold.compute(qv, cv) / (qnrm * cnrm) }
+        .sortWith { case ((c1, s1), (c2, s2)) =>
+          val d = SQLOrderingUtil.compareDoubles(s2, s1)
+          d < 0 || (d == 0 && c1 < c2)
+        }
+        .take(nProbe).map { case (c, _) => (c: Any) -> e }
+    }
+    val fan = StoreFamily.fanOut(LongType, entry, entries)
+    StoreFamily.pointScan(Family, spark, table, fan)
+      .select(col("*"), col("q.*"))
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
         st.scoreOf.as(st.score))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .orderBy("query_id", "rank")
+      .transform(fan.gather(_))
+      .transform(StoreFamily.pointRank(_, fan, k, col(st.score).desc,
+        col("neighbor_id")))
   }
+
+  private def doubles(v: collection.Seq[Double]): UnsafeArrayData =
+    UnsafeArrayData.fromPrimitiveArray(v.toArray)
 
   /** DELETE vectors from the cell store — [[StoreFamily.delete]], on
     * both storage formats unchanged (the anti-join keys on vec_id and

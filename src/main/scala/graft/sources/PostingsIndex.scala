@@ -1,7 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType,
+  StringType, StructField, StructType}
 
 import graft.queries.Retrieval
 
@@ -45,12 +47,13 @@ import graft.queries.Retrieval
   * commutes with the rebuild ([[compact]] collapses the deltas back to
   * one row per term when maintenance runs).
   *
-  * Scoring parity: the probe feeds the pruned slice into the SAME
-  * scoring tail as the recompute path ([[Retrieval.scoreTail]]: idf
-  * from the handed-in df frame via DetMath on the per-term frame,
-  * once-per-posting contribution, ordered fold, top-k) — identical IEEE
-  * arithmetic on identical inputs (df is the same integer whether
-  * summed from deltas or counted from the slice), so [[topKFor]] output
+  * Scoring parity: the probe scores the pruned slice with the SAME
+  * arithmetic as the recompute path — [[Retrieval.termWeights]] (idf
+  * through the det_ln kernel, avgdl, vocabulary rank),
+  * [[Retrieval.contribOf]] once per posting, the ordered
+  * [[Retrieval.scoreFold]], top-k — identical IEEE arithmetic on
+  * identical inputs (df is the same integer whether summed from deltas
+  * or counted from the slice), so [[topKFor]] output
   * is spec-pinned EQUAL to `bm25RankedWhere` at the same corpus
   * (PostingsIndexSpec, the AnnIndexSpec parity pattern), and q134 runs
   * it against q133's own DuckDB oracle.
@@ -303,75 +306,93 @@ object PostingsIndex {
     (p(NDocsProp).toLong, p(SumDlProp).toLong)
 
   /** BM25 top-k for `queryDocs` = (query_id, text) against the indexed
-    * collection. The store reads are SIZE-ROUTED per
-    * [[Bucketing.PruneLiteralLimit]]: a point-query-scale vocabulary
-    * collects to the driver as the bucket-pruning `isin` literal
-    * (`SelectedBucketsCount`, spec-pinned); a benchmark-sweep-scale
-    * vocabulary restricts both reads by a BROADCAST VOCAB SEMI-JOIN
-    * instead — the q127 below-the-aggregation rule, same restriction
-    * with no giant plan literal and no driver collect (the literal
-    * stopped skipping buckets at that size anyway; measured in
-    * SCALING.md round 18). Either way the probe pays ONE
-    * vocabulary-restricted postings read (the scoring join) plus a
-    * vocabulary-sized read of the (term, df) deltas —
-    * [[Retrieval.scoreTail]]'s handed-in df form. No localCheckpoint
-    * barrier: the recompute path's barrier guards an expensive
-    * tokenize→explode→aggregate prefix this probe no longer has, and
-    * skipping it keeps the pruned route plan-visible and the block
-    * store untouched. Self-matches are excluded by doc_id, matching the
-    * recompute path. */
+    * collection, as one probe ([[StoreFamily.pointScan]]): the query
+    * side's (term, query) pairs collect to the driver once; the
+    * vocabulary's df deltas are the one mid-probe read, a pruned read of
+    * the companion that also derives every term's weights through
+    * [[Retrieval.termWeights]] (the recompute path's idf, avgdl and
+    * vocabulary rank); the store side is one plan — pruned postings
+    * scan, literal fan-out to the queries, the once-per-posting
+    * [[Retrieval.contribOf]], the ordered [[Retrieval.scoreFold]], top-k.
+    * So every score is bit-equal to `bm25RankedWhere`'s at the same
+    * corpus (PostingsIndexSpec), and q134 runs against q133's own DuckDB
+    * oracle. Terms without a df row serve nothing, as the recompute's
+    * join with its df frame drops them. No barrier: the recompute path's
+    * barrier guards an expensive tokenize→explode→aggregate prefix this
+    * probe does not have. Self-matches are excluded by doc_id, matching
+    * the recompute path.
+    *
+    * READ-COMMITTED over the three-operation append: the stats property
+    * statement is an append's COMMIT POINT (appendDocs's contract — the
+    * marker rides in it), so rows visible while the recorded n_docs is
+    * still 0 belong to an in-flight append. The probe serves the
+    * committed-empty result and reads NO slice rows rather than evaluate
+    * idf/avgdl at n_docs = 0 (ANSI DIVIDE_BY_ZERO — found by SoakProbe's
+    * first run, where the serving thread raced the stream's first
+    * batch). Past the first commit the residual mid-append window is
+    * BENIGN-BUT-STATED-FULLY: a probe may transiently score a later
+    * batch's already-inserted postings under the previous commit's stats
+    * — a bounded idf/avgdl deviation, and in the worst case (a term held
+    * by more in-flight docs than the recorded n_docs admits) the Lucene
+    * idf's (n_docs − df + ½)/(df + ½) term can go NEGATIVE, a possible
+    * transient RANKING INVERSION for that term's matches. It disappears
+    * when the append's property statement lands, never crashes, and
+    * never misses a committed document; deployments for which a
+    * transient inversion matters gate probes on the batch marker (probe
+    * only between batches — the SoakProbe serving pattern). The
+    * mirror-image DELETE window (purged rows with stats not yet folded
+    * down) only DAMPS idf — df never exceeds n_docs there — so it cannot
+    * invert. */
   def topKFor(spark: SparkSession, table: String, queryDocs: DataFrame,
       k: Int): DataFrame = {
     // a probe against a GROWING index must see committed appends — the
     // guard refreshes the pair (one listing per table)
     val (n, s) = statsOf(StoreFamily.open(Family, spark, table))
-    val qterms = queryDocs
-      .select(col("query_id"),
-        explode(array_distinct(split(col("text"), " "))).as("term"))
-    val qvocab = qterms.select("term").distinct().localCheckpoint(true)
-    // ONE job decides the route AND fetches the literals
-    // ([[Bucketing.pruneLiterals]]); past the limit both reads restrict
-    // by the broadcast vocab semi-join instead
-    val lits = Bucketing.pruneLiterals(qvocab)
-    val byVocab = (t: DataFrame) => t.join(broadcast(qvocab), Seq("term"))
-    // the DEFERRED-delete subtraction rides the pruned slice
-    // ([[StoreFamily.probeScan]]), with df/stats already folded down at
-    // delete time — the probe arithmetic is bit-equal to the eager
-    // verb's. With nothing pending this is the plain pruned scan.
-    val slice = StoreFamily.probeScan(Family, spark, table, lits, byVocab)
-      .select("doc_id", "dl", "term", "tf")
+    // read-committed: nothing committed → no df read, an empty fan-out.
+    // The explode runs on the driver: a Generate over a LocalRelation
+    // would not fold, the projection does (no job for a literal query)
+    val pairs = if (n == 0) Nil else queryDocs
+      .select(col("query_id"), array_distinct(split(col("text"), " ")))
+      .collect().toSeq.flatMap(r => Option(r.getSeq[String](1)).toSeq.flatten
+        .map(_ -> r.getLong(0)))
+    val vocab = StoreFamily.fanOut(StringType, QueryEntry,
+      pairs.map { case (t, q) => t -> Row(q) })
     // the companion's delta rows fold here — exact integer sum, the same
-    // df the recompute path counts from its slice
-    val dfreq = Bucketing.restrict(spark, dfTableOf(table), "term", lits,
-      byVocab).groupBy("term").agg(sum(col("df")).as("df"))
-    // READ-COMMITTED over the three-operation append: the stats property
-    // statement is an append's COMMIT POINT (appendDocs's contract — the
-    // marker rides in it), so rows visible while the recorded n_docs is
-    // still 0 belong to an in-flight append. Serve the committed-empty
-    // result and read NO slice rows, rather than evaluate idf/avgdl at
-    // n_docs = 0 (ANSI DIVIDE_BY_ZERO — found by SoakProbe's first run,
-    // where the serving thread raced the stream's first batch). Past the
-    // first commit the residual mid-append window is BENIGN-BUT-STATED-
-    // FULLY: a probe may transiently score a later batch's already-
-    // inserted postings under the previous commit's stats — a bounded
-    // idf/avgdl deviation, and in the worst case (a term held by more
-    // in-flight docs than the recorded n_docs admits) the Lucene idf's
-    // (n_docs − df + ½)/(df + ½) term can go NEGATIVE, which is not just
-    // a score shift but a possible transient RANKING INVERSION for that
-    // term's matches (round-18 advice, now stated). It disappears when
-    // the append's property statement lands, never crashes, and never
-    // misses a committed document; deployments for which a transient
-    // inversion matters gate probes on the batch marker (probe only
-    // between batches — the SoakProbe serving pattern) rather than
-    // paying a per-row batch column on every posting. The mirror-image
-    // DELETE window (purged rows with stats not yet folded down) only
-    // DAMPS idf — df never exceeds n_docs there — so it cannot invert.
-    val committed = n > 0
-    val statsDf = spark.range(1)
-      .select(lit(if (committed) n else 1L).as("n_docs"),
-        lit(if (committed) s else 1L).as("sum_dl"))
-    Retrieval.scoreTail(qterms,
-      if (committed) slice else slice.limit(0),
-      if (committed) dfreq else dfreq.limit(0), statsDf, k)
+    // df the recompute path counts from its slice. The aggregate is what
+    // keeps the df read bucket-pruned (pointScan's
+    // DisableUnnecessaryBucketedScan note); one partition, no exchange
+    val weights = if (pairs.isEmpty) Map.empty[String, Row] else
+      Retrieval.termWeights(vocab.prune(spark.table(dfTableOf(table)), "term")
+          .filter(vocab.holds("term")).coalesce(1)
+          .groupBy("term").agg(sum(col("df")).as("df")),
+        lit(n), lit(s))
+        .collect().map(r => r.getString(0) -> r).toMap
+    val entries = pairs.filter(p => weights.contains(p._1)).map { case (t, q) =>
+      t -> Row(q, weights(t).getInt(1), weights(t).getDouble(2))
+    }
+    val avgdl = weights.headOption.fold(1.0)(_._2.getDouble(3))
+    // the DEFERRED-delete subtraction rides the pruned slice
+    // ([[StoreFamily.pointScan]]), with df/stats already folded down at
+    // delete time — bit-equal to the eager verb's arithmetic
+    val fan = StoreFamily.fanOut(StringType, PointEntry, entries,
+      probed = vocab.keys)
+    StoreFamily.pointScan(Family, spark, table, fan)
+      .filter(col("doc_id") =!= col("q.query_id"))
+      .select(col("q.query_id").as("query_id"), col("doc_id"),
+        col("q.r").as("r"),
+        Retrieval.contribOf(col("q.idf"), lit(avgdl)).as("c"))
+      .transform(fan.gather(_))
+      .groupBy("query_id", "doc_id")
+      .agg(Retrieval.scoreFold.head, Retrieval.scoreFold.tail: _*)
+      .transform(StoreFamily.pointRank(_, fan, k, col("score").desc,
+        col("doc_id")))
   }
+
+  /** A (term → query) fan-out entry: the query. */
+  private val QueryEntry = StructType(Seq(StructField("query_id", LongType)))
+
+  /** The query entry the scoring fan-out carries per (term, query): the
+    * query, the term's vocabulary rank and its idf. */
+  private val PointEntry = StructType(Seq(StructField("query_id", LongType),
+    StructField("r", IntegerType), StructField("idf", DoubleType)))
 }

@@ -1,15 +1,22 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.CatalogTable
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeProjection}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, element_at, explode,
+  map_contains_key, row_number}
+import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** What distinguishes one persisted index family from another — and
   * nothing else. The four families (postings, ANN, IVF, MinHash bands)
   * share one lifecycle, implemented once in the companion object against
   * this descriptor: the identity guard, eager and deferred delete,
-  * reindex, the one staged full rewrite, the tombstone-subtracted pruned
-  * probe scan, the mid-probe identity check and the build-once memo.
+  * reindex, the one staged full rewrite, the one probe shape (query side
+  * on the driver, tombstone-subtracted pruned scan, literal fan-out,
+  * rank), the mid-probe identity check and the build-once memo.
   *
   * @param owner      the family object, named in every guard message
   * @param deleteKey  the row-identity column deletes and reindexes key on
@@ -250,15 +257,103 @@ private[sources] object StoreFamily {
     corpus.join(ids, Seq(k), "left_semi")
   }
 
-  /** The live store rows a probe reads: restricted by
-    * [[Bucketing.restrict]] (the bucket-pruning literal, or `wide`),
-    * with pending tombstones subtracted ABOVE the restriction so the
-    * pruning stays on the scan node. */
-  def probeScan(f: StoreFamily, spark: SparkSession, table: String,
-      literals: Option[Seq[Any]],
-      wide: DataFrame => DataFrame = identity): DataFrame =
-    Bucketing.subtractTombstones(spark, table, f.deleteKey,
-      Bucketing.restrict(spark, table, f.bucketKey, literals, wide))
+  // ---- Point probes ------------------------------------------------------
+  //
+  // Every family's probe has one shape: the query side (query-scale by
+  // contract) collects to the driver once — a projection over a
+  // LocalRelation runs no job — and becomes plan literals ([[fanOut]]);
+  // the store side is one plan, pruned scan → literal fan-out → score →
+  // rank ([[pointScan]], [[pointRank]]), with no localCheckpoint, no
+  // mid-probe collect and no broadcast of query rows.
+
+  /** The literal fan-out of a probe: `entries` (key, query entry)
+    * grouped into one typed map literal `key → array<entry>`, held in
+    * Spark's unsafe (binary) layout so the exploded entries read like
+    * scanned rows — a generic literal would box every array element.
+    * Duplicate entries stay duplicated, as a join against the query rows
+    * would keep them. `probed` keys are read without an entry (their
+    * rows fan out to nothing). */
+  def fanOut(keyType: DataType, entry: StructType,
+      entries: Seq[(Any, Row)], probed: Seq[Any] = Nil): FanOut = {
+    val m = entries.groupMap(_._1)(_._2)
+    val t = MapType(keyType, ArrayType(entry, false), false)
+    val unsafe = UnsafeProjection.create(Array[DataType](t))
+      .apply(InternalRow(CatalystTypeConverters.createToCatalystConverter(t)(m)))
+      .getMap(0).copy()
+    FanOut((probed ++ m.keys).distinct, DatasetBridge.column(Literal(unsafe, t)),
+      entries.size)
+  }
+
+  /** A probe's driver-side literals: the keys it reads, the
+    * `key → array<entry>` map over them, and the entry count. */
+  final case class FanOut(keys: Seq[Any], map: Column, size: Int) {
+
+    /** Whether the probe is point-sized: at most
+      * [[Bucketing.PruneLiteralLimit]] query entries. */
+    def point: Boolean = size <= Bucketing.PruneLiteralLimit
+
+    /** `frame` read where `key` is one of the keys — as the
+      * bucket-pruning `isin` literal (`SelectedBucketsCount` in the scan)
+      * up to [[Bucketing.PruneLiteralLimit]] keys, whole past it: the
+      * limit is the `isin`'s measured planning budget, and [[spread]]'s
+      * map lookup restricts the rows either way. */
+    def prune(frame: DataFrame, key: String): DataFrame =
+      if (keys.size <= Bucketing.PruneLiteralLimit)
+        frame.filter(col(key).isin(keys: _*))
+      else frame
+
+    /** `frame`, each row repeated once per query entry its `key` fans
+      * out to — the entry as struct column `q`; rows of keys with no
+      * entry drop out. The lookup is a linear search of the keys per row
+      * — what a read past the pruning limit pays on every row. */
+    def spread(frame: DataFrame, key: String): DataFrame =
+      frame.withColumn("q", explode(element_at(map, col(key))))
+
+    /** Whether `key` has an entry — [[spread]]'s restriction without the
+      * fan-out. */
+    def holds(key: String): Column = map_contains_key(map, col(key))
+
+    /** `frame` gathered for the probe's per-`key` tail (pair aggregate,
+      * rank window). A point-sized probe runs it in ONE partition with no
+      * exchange: its read is query-scale, and a hash exchange's extra job
+      * and stage cost more than a parallel tail saves (SCALING.md, "Point
+      * probes as one plan"). A larger one hash-partitions by `key` — one
+      * exchange serving the aggregate and the window alike, the explicit
+      * count pinning it against AQE's byte-based coalescing: q134's 50
+      * queries fan out to ~250k (query, doc) pairs at sf0.1, 9.0 s in one
+      * task, 5.8 s over four (4-core VM). */
+    def gather(frame: DataFrame, key: String = "query_id"): DataFrame =
+      if (point) frame.coalesce(1)
+      else frame.repartition(frame.sparkSession.sparkContext.defaultParallelism,
+        col(key))
+  }
+
+  /** The store side of a probe: the live rows of the keys `fan` names
+    * (`SelectedBucketsCount` in the scan; pending tombstones subtracted
+    * ABOVE the pruning, so it stays on the scan node), each repeated
+    * once per query entry its key fans out to ([[FanOut.spread]]).
+    * Spark's DisableUnnecessaryBucketedScan keeps a bucketed (pruned)
+    * scan only below an operator that asks for a distribution — an
+    * aggregate or window with no exchange in between; every probe plan
+    * has one (the rank window, band's candidate distinct). */
+  def pointScan(f: StoreFamily, spark: SparkSession, table: String,
+      fan: FanOut): DataFrame =
+    fan.spread(Bucketing.subtractTombstones(spark, table, f.deleteKey,
+      fan.prune(spark.table(table), f.bucketKey)), f.bucketKey)
+
+  /** The top `k` rows per query_id under `order` of `scored` (already
+    * [[FanOut.gather]]ed), numbered `rank` and sorted by (query_id,
+    * rank) — a point-sized probe's one partition locally, with no range
+    * exchange. */
+  def pointRank(scored: DataFrame, fan: FanOut, k: Int,
+      order: Column*): DataFrame = {
+    val top = scored
+      .withColumn("rank",
+        row_number().over(Window.partitionBy("query_id").orderBy(order: _*)))
+      .filter(col("rank") <= k)
+    if (fan.point) top.sortWithinPartitions("query_id", "rank")
+    else top.orderBy("query_id", "rank")
+  }
 
   /** The mid-probe identity check: a probe reads the recorded banding,
     * spends jobs signing its query side, then scans — a reband swap

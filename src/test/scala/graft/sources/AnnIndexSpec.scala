@@ -18,6 +18,31 @@ class AnnIndexSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
     assert(got.toSeq == want.toSeq,
       s"index probe diverges from lshTopK: got=${got.take(5).toSeq} want=${want.take(5).toSeq}")
+    // the old route boundary: 64 anchors sign PruneLiteralLimit rows, 65
+    // sign 260 (the next whole-query size) — both equal lshTopK over the
+    // same anchors, for the plain and the cross-label probe; the scan
+    // prunes while the distinct signatures fit the limit, and no query
+    // row is broadcast
+    import org.apache.spark.sql.functions.col
+    import graft.queries.Similarity
+    for (n <- Seq(64, 65)) {
+      val anchors = Similarity.signatureRowsOf(
+        Similarity.normedVectors(spark, sfDir).filter(col("vec_id") < n), 4, 8)
+      assert((anchors.count() <= Bucketing.PruneLiteralLimit) == (n == 64))
+      val pruned = anchors.select("sig").distinct().count() <=
+        Bucketing.PruneLiteralLimit
+      val probe = AnnIndex.topKFor(spark, "ann_idx_parity", anchors, 5)
+      val plan = probe.queryExecution.executedPlan.toString
+      assert(prunesByLiteral(probe) == pruned &&
+        !plan.contains("BroadcastExchange"), s"$n anchors:\n$plan")
+      assert(probe.collect().toSeq == Similarity.lshTopK(spark, sfDir, 5,
+        crossLabelOnly = false, nAnchors = n).collect().toSeq,
+        s"$n anchors: the probe diverges from lshTopK")
+      assert(AnnIndex.hardNegativesFor(spark, "ann_idx_parity", anchors, 3)
+        .collect().toSeq == Similarity.lshTopK(spark, sfDir, 3,
+          crossLabelOnly = true, nAnchors = n).collect().toSeq,
+        s"$n anchors: hardNegativesFor diverges from lshTopK")
+    }
   }
 
   test("incremental append: build on half the corpus, append the rest — " +

@@ -37,19 +37,48 @@ class BandIndexSpec extends SparkSpec {
 
   test("past PruneSigLimit the probe routes to the un-pruned scan and " +
       "stays row-identical (the size-routing seam, both sides exercised)") {
-    // sf0.001's bench slice is 50 docs → 200 band rows → the PRUNED
-    // route; a 100-doc query slice → 400 rows → the FULL-SCAN route.
+    // (PruneSigLimit is now Bucketing.PruneLiteralLimit, the one pruning
+    // limit every probe shares.) sf0.001's bench slice is 50 docs → 200
+    // band rows → a PRUNED scan; a 100-doc query slice → 400 rows → the
+    // store read WHOLE, its signature fan-out alone restricting the rows.
     // Compare both against the recompute on the same split.
     val wideBench = docs.filter(col("doc_id") % 5 === 2)
     val wideCorpus = docs.filter(col("doc_id") % 5 =!= 2)
     BandIndex.build(spark, sfDir, "bands_route", corpusPred = col("doc_id") % 5 =!= 2)
-    assert(wideBench.count() * 4 > BandIndex.PruneSigLimit,
+    assert(wideBench.count() * 4 > Bucketing.PruneLiteralLimit,
       "fixture must exceed the routing limit to exercise the full-scan side")
     val got = rows(BandIndex.nearDupsFor(spark, "bands_route",
       corpusDocs = wideCorpus, queryDocs = wideBench))
     val want = rows(Dedup.nearDupXPairsOn(spark, wideBench, wideCorpus))
     assert(want.nonEmpty, "fixture split must contain cross near-dups")
     assert(got == want, "full-scan route diverges from the recompute")
+    // the exact boundary: 64 shingle-able query docs band PruneLiteralLimit
+    // rows, 65 band 260
+    val ids = Dedup.shinglesOf(wideBench, 3).orderBy("doc_id").select("doc_id")
+      .limit(65).collect().map(_.getLong(0)).toSeq
+    for (n <- Seq(64, 65)) {
+      val q = wideBench.filter(col("doc_id").isin(ids.take(n): _*))
+      assert(rows(BandIndex.nearDupsFor(spark, "bands_route",
+          corpusDocs = wideCorpus, queryDocs = q)) ==
+        rows(Dedup.nearDupXPairsOn(spark, q, wideCorpus)),
+        s"$n query docs: the probe diverges from the recompute")
+    }
+    // past the limit in CANDIDATE docs: one query doc whose text 300
+    // stored docs repeat verifies them all, the corpus read whole and
+    // restricted by its candidate fan-out alone
+    import spark.implicits._
+    val text = wideBench.filter(col("doc_id") === ids.head).select("text")
+      .head().getString(0)
+    val copies = (1L to 300L).map(i => (8000000L + i, text)).toDF("doc_id", "text")
+    BandIndex.buildDocs(spark, "bands_many", copies, buckets = 4)
+    val one = Seq((9000000L, text)).toDF("doc_id", "text")
+    val probe = BandIndex.nearDupsFor(spark, "bands_many",
+      corpusDocs = copies, queryDocs = one)
+    assert(!prunesByLiteral(probe), "300 candidate ids must not ship as an isin")
+    val many = rows(probe)
+    assert(many.size == 300 && many.size > Bucketing.PruneLiteralLimit)
+    assert(many == rows(Dedup.nearDupXPairsOn(spark, one, copies)),
+      "past the candidate limit the probe diverges from the recompute")
   }
 
   test("the candidate scan is bucket-pruned by the query side's band " +

@@ -23,6 +23,22 @@ class IvfIndexSpec extends SparkSpec {
       graft.SparkEntry.queries("q37_ivf_ann")(spark, sfDir))
     assert(got == want,
       s"IVF probe diverges from recompute: got=${got.take(3)} want=${want.take(3)}")
+    // the old route boundary: PruneLiteralLimit anchors and one more
+    // both equal q37's recompute over them, prune the scan to their
+    // probed cells (never more than the fit's centroids) and broadcast
+    // no query rows
+    val lim = Bucketing.PruneLiteralLimit
+    assert(spark.table("ivf_parity").filter(col("vec_id") < lim + 1)
+      .select("vec_id").distinct().count() == lim + 1)
+    for (n <- Seq(lim, lim + 1)) {
+      val probe = IvfIndex.topK(spark, "ivf_parity", nAnchors = n, k = 3)
+      val plan = probe.queryExecution.executedPlan.toString
+      assert(prunesByLiteral(probe) &&
+        !plan.contains("BroadcastExchange"), s"$n anchors:\n$plan")
+      assert(rows(probe) ==
+        rows(graft.queries.Similarity.ivfTopK(spark, sfDir, nAnchors = n)),
+        s"$n anchors: the IVF probe diverges from q37's recompute")
+    }
   }
 
   test("a few-anchor probe reads only its n-probe cells (bucket-pruned)") {

@@ -32,6 +32,19 @@ class IvfSqSpec extends SparkSpec {
       graft.SparkEntry.queries("q38_quantized_ann")(spark, sfDir))
     assert(got == want,
       s"all-cells SQ probe diverges from q38: got=${got.take(3)} want=${want.take(3)}")
+    // the old route boundary: PruneLiteralLimit anchors and one more
+    // both equal q38's full quantized ranking over them, and no query
+    // row is broadcast
+    val lim = Bucketing.PruneLiteralLimit
+    for (n <- Seq(lim, lim + 1)) {
+      val probe = IvfIndex.topKForSq(spark, "ivfsq_all", anchorsOf(n), k = 5,
+        nProbe = IvfIndex.NCentroids)
+      assert(!probe.queryExecution.executedPlan.toString
+        .contains("BroadcastExchange"), s"$n anchors broadcast query rows")
+      assert(qrows(probe) == qrows(graft.queries.Similarity.quantizedTopK(
+        spark, sfDir, nAnchors = n)),
+        s"$n anchors: the SQ probe diverges from q38's ranking")
+    }
   }
 
   test("the 2-cell operating point: probed candidates are the FLOAT " +

@@ -32,6 +32,37 @@ class PostingsIndexSpec extends SparkSpec {
       nAnchors = 8, k = 10))
     assert(got == want,
       s"index probe diverges from recompute: got=${got.take(3)} want=${want.take(3)}")
+    // the pruning boundary: a query vocabulary of PruneLiteralLimit
+    // terms prunes the scan by its `isin`, one term more reads the store
+    // whole — both equal the recompute over the same corpus
+    // (bm25RankedWhere's frame core), and neither broadcasts query rows;
+    // terms no document holds pad the first query's vocabulary
+    import spark.implicits._
+    val words = graft.Tables.documents(spark, sfDir).orderBy("doc_id")
+      .select("text").limit(16).collect().toSeq
+      .map(_.getString(0).split(" ").filter(_.nonEmpty).distinct.toSeq)
+    val lim = Bucketing.PruneLiteralLimit
+    val real = words.flatten.distinct.size
+    assert(real < lim, s"fixture vocabulary $real must sit under the limit")
+    def queries(vocab: Int) = words.zipWithIndex.map { case (w, i) =>
+      val pad = if (i == 0) (0 until vocab - real).map(j => s"zzpad$j") else Nil
+      (9000000L + i, (w ++ pad).mkString(" "))
+    }
+    val corpusToks = graft.queries.Retrieval.tokenizedDocsOf(
+      graft.Tables.documents(spark, sfDir))
+    for ((vocab, pruned) <- Seq(lim -> true, (lim + 1) -> false)) {
+      val q = queries(vocab).toDF("query_id", "text")
+      val probe = PostingsIndex.topKFor(spark, "postings_parity", q, k = 10)
+      val plan = probe.queryExecution.executedPlan.toString
+      assert(prunesByLiteral(probe) == pruned &&
+        !plan.contains("BroadcastExchange"), s"a $vocab-term vocabulary:\n$plan")
+      val recompute = graft.queries.Retrieval.bm25On(
+        graft.queries.Retrieval.tokenizedDocsOf(
+          q.withColumnRenamed("query_id", "doc_id"))
+          .withColumnRenamed("doc_id", "query_id"), corpusToks, 10)
+      assert(rows(probe) == rows(recompute),
+        s"a $vocab-term vocabulary: the probe diverges from the recompute")
+    }
   }
 
   test("the probe scan is bucket-pruned by the query vocabulary") {
