@@ -99,30 +99,28 @@ object SpanConverter extends Serializable {
     var ordinal = 0
     def nextId(): String = { val id = callId(traceId, spanId, ordinal); ordinal += 1; id }
 
-    // pass 1: per-turn transforms
+    // pass 1: per-turn transforms; assistant turns keep their calls for
+    // the pairing below
     val staged = input.map { m =>
       m.role match {
         case "system" =>
-          ChatMessage("system", Some(TextOps.stripSysPromptSections(m.content)),
-            Seq.empty, None, None)
+          (ChatMessage("system", Some(TextOps.stripSysPromptSections(m.content)),
+            Seq.empty, None, None), Vector.empty[NexXml.ToolCall])
         case "assistant" =>
           val (clean, calls) = NexXml.extractToolCalls(m.content, nextId _)
-          ChatMessage("assistant", Some(clean), calls.map(_.toJson), None, None)
+          (ChatMessage("assistant", Some(clean), calls.map(_.toJson), None, None), calls)
         case _ =>
-          ChatMessage(m.role, Some(m.content), Seq.empty, None, None)
+          (ChatMessage(m.role, Some(m.content), Seq.empty, None, None),
+            Vector.empty[NexXml.ToolCall])
       }
     }
 
-    // pass 2: J5 pairing — queue of pending calls, matched by name
-    // first, else FIFO; unmatched results get a fresh id.
+    // pass 2: J5 pairing — queue of pending (id, name) calls, matched by
+    // name first, else FIFO; unmatched results get a fresh id.
     val pending = scala.collection.mutable.Queue.empty[(String, String)]
-    val IdName = "\"id\": \"([^\"]+)\".*?\"name\": \"([^\"]+)\"".r
-    val paired = staged.flatMap { m =>
-      if (m.role == "assistant" && m.tool_calls.nonEmpty) {
-        m.tool_calls.foreach { tc =>
-          IdName.findFirstMatchIn(tc).foreach(x =>
-            pending.enqueue((x.group(1), x.group(2))))
-        }
+    val paired = staged.flatMap { case (m, calls) =>
+      if (m.role == "assistant" && calls.nonEmpty) {
+        calls.foreach(tc => pending.enqueue((tc.id, tc.name)))
         Seq(m)
       } else if (m.role == "user" &&
         m.content.exists(_.startsWith("Tool execution results:"))) {

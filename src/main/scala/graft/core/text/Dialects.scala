@@ -1,7 +1,5 @@
 package graft.core.text
 
-import scala.util.matching.Regex
-
 /** Tool-call dialect rewriting: NexAU XML → Qwen / MiniMax / GLM /
   * OpenRouter / DeepSeek inline formats (behavioral reference: parsers
   * `convert_trace_to_specific_tool_call_style.py:71-214`, emitters
@@ -16,121 +14,77 @@ object Dialects extends Serializable {
 
   // ---- emitters ----------------------------------------------------------
 
-  def emitQwen(c: CallInfo): String =
-    (Seq("<tool_call>", s"<function=${c.name}>") ++
-      c.params.map { case (k, v) => s"<parameter=$k>$v</parameter>" } ++
-      Seq("</function>", "</tool_call>")).mkString("\n")
-
-  def emitMinimax(c: CallInfo): String =
-    (Seq(s"<invoke name=${c.name}>") ++
-      c.params.map { case (k, v) => s"<parameter name=$k>$v</parameter>" } ++
-      Seq("</invoke>")).mkString("\n")
-
-  def emitGlm(c: CallInfo): String =
-    (Seq(s"<tool_call>${c.name}") ++
-      c.params.flatMap { case (k, v) =>
-        Seq(s"<arg_key>$k</arg_key>", s"<arg_value>$v</arg_value>")
-      } ++ Seq("</tool_call>")).mkString("\n")
-
-  def emitOpenrouter(c: CallInfo): String =
-    (Seq(s"<${c.name}>") ++
-      c.params.map { case (k, v) => s"<$k>$v</$k>" } ++
-      Seq(s"</${c.name}>")).mkString("\n")
-
-  /** DeepSeek's fullwidth-bar / lower-eighth-block unicode framing with
-    * JSON arguments. */
-  def emitDeepseek(c: CallInfo): String =
-    "<｜tool▁calls▁begin｜><｜tool▁call▁begin｜>" + c.name + "<｜tool▁sep｜>" +
-      NexXml.Json.obj(c.params) + "<｜tool▁call▁end｜><｜tool▁calls▁end｜>"
-
-  def emit(c: CallInfo, format: String): String = format.toLowerCase match {
-    case "qwen"       => emitQwen(c)
-    case "minimax"    => emitMinimax(c)
-    case "glm"        => emitGlm(c)
-    case "openrouter" => emitOpenrouter(c)
-    case "deepseek"   => emitDeepseek(c)
-    case other => throw new IllegalArgumentException(
-      s"Unsupported format: $other. Supported: ${Supported.mkString(", ")}")
+  private def emit(c: CallInfo, format: String): String = {
+    def lines(head: Seq[String], param: (String, String) => Seq[String],
+        tail: Seq[String]): String =
+      (head ++ c.params.flatMap(param.tupled) ++ tail).mkString("\n")
+    format.toLowerCase match {
+      case "qwen" => lines(Seq("<tool_call>", s"<function=${c.name}>"),
+        (k, v) => Seq(s"<parameter=$k>$v</parameter>"), Seq("</function>", "</tool_call>"))
+      case "minimax" => lines(Seq(s"<invoke name=${c.name}>"),
+        (k, v) => Seq(s"<parameter name=$k>$v</parameter>"), Seq("</invoke>"))
+      case "glm" => lines(Seq(s"<tool_call>${c.name}"),
+        (k, v) => Seq(s"<arg_key>$k</arg_key>", s"<arg_value>$v</arg_value>"),
+        Seq("</tool_call>"))
+      case "openrouter" =>
+        lines(Seq(s"<${c.name}>"), (k, v) => Seq(s"<$k>$v</$k>"), Seq(s"</${c.name}>"))
+      // fullwidth-bar / lower-eighth-block unicode framing, JSON arguments
+      case "deepseek" =>
+        "<｜tool▁calls▁begin｜><｜tool▁call▁begin｜>" + c.name + "<｜tool▁sep｜>" +
+          NexXml.Json.obj(c.params) + "<｜tool▁call▁end｜><｜tool▁calls▁end｜>"
+      case other => throw new IllegalArgumentException(
+        s"Unsupported format: $other. Supported: ${Supported.mkString(", ")}")
+    }
   }
 
   // ---- NexAU parsers -----------------------------------------------------
 
-  private val ToolName: Regex = "(?s)<tool_name>\\s*([^<]+)\\s*</tool_name>".r
-  private val ParamBlock: Regex = "(?s)<parameter>(.*?)</parameter>".r
-
-  def parseToolUse(body: String): Option[CallInfo] =
-    ToolName.findFirstMatchIn(body).map { m =>
-      val params = ParamBlock.findFirstMatchIn(body)
-        .map(pm => NexXml.parseParams(pm.group(1).trim)).getOrElse(Vector.empty)
-      CallInfo(m.group(1).trim, params)
-    }
-
-  private val AgentName: Regex = "(?s)<agent_name>\\s*([^<]+)\\s*</agent_name>".r
-  private val Message: Regex = "(?s)<message>(.*?)</message>".r
-  private val History: Regex = "(?s)<history>(.*?)</history>".r
+  private def parseToolUse(body: String): Option[CallInfo] =
+    NexXml.nameAndParams(body).map { case (name, params) => CallInfo(name, params) }
 
   /** sub-agent → CallInfo("sub-agent", agent_name/message[/history]). */
-  def parseSubAgent(body: String): Option[CallInfo] =
-    AgentName.findFirstMatchIn(body).map { m =>
-      val msg = Message.findFirstMatchIn(body).map(_.group(1).trim).getOrElse("")
-      val hist = History.findFirstMatchIn(body).map(_.group(1).trim)
+  private def parseSubAgent(body: String): Option[CallInfo] =
+    NexTags.firstText(body, "agent_name").map { name =>
+      val hist = NexTags.first(body, "history").map(_.trim).filter(_.nonEmpty)
       CallInfo("sub-agent",
-        Vector("agent_name" -> m.group(1).trim, "message" -> msg) ++
-          hist.filter(_.nonEmpty).map("history" -> _))
+        Vector("agent_name" -> name, "message" -> trimmed(body, "message")) ++
+          hist.map("history" -> _))
     }
 
-  private val InputSource: Regex =
-    "(?s)<input_data_source>(.*?)</input_data_source>".r
-
-  def parseBatchAgent(body: String): Option[CallInfo] =
-    AgentName.findFirstMatchIn(body).map { m =>
-      val msg = Message.findFirstMatchIn(body).map(_.group(1).trim).getOrElse("")
-      val src = InputSource.findFirstMatchIn(body).map(_.group(1).trim).getOrElse("")
+  private def parseBatchAgent(body: String): Option[CallInfo] =
+    NexTags.firstText(body, "agent_name").map { name =>
       CallInfo("batch-agent",
-        Vector("agent_name" -> m.group(1).trim, "input_data_source" -> src,
-          "message" -> msg))
+        Vector("agent_name" -> name,
+          "input_data_source" -> trimmed(body, "input_data_source"),
+          "message" -> trimmed(body, "message")))
     }
+
+  private def trimmed(body: String, tag: String): String =
+    NexTags.first(body, tag).fold("")(_.trim)
 
   // ---- whole-message conversion ------------------------------------------
 
-  private val BatchBlock: Regex = "(?s)<use_batch_agent>(.*?)</use_batch_agent>".r
-  private val PaBlock: Regex =
-    "(?s)<use_parallel_sub_agents>(.*?)</use_parallel_sub_agents>".r
-  private val PtBlock: Regex =
-    "(?s)<use_parallel_tool_calls>(.*?)</use_parallel_tool_calls>".r
-  private val Pa: Regex = "(?s)<parallel_agent>(.*?)</parallel_agent>".r
-  private val Pt: Regex = "(?s)<parallel_tool>(.*?)</parallel_tool>".r
-  private val SubAgentBlock: Regex = "(?s)<sub-agent>(.*?)</sub-agent>".r
-  private val ToolUseBlock: Regex = "(?s)<tool_use>(.*?)</tool_use>".r
-
-  private def sub(re: Regex, s: String)(f: String => Option[String]): String =
-    re.replaceAllIn(s, m =>
-      f(m.group(1)) match {
-        case Some(rep) => Regex.quoteReplacement(rep)
-        case None      => Regex.quoteReplacement(m.matched)
-      })
-
   /** Rewrite every NexAU call in `message` to the target dialect, in the
     * reference's fixed order: batch → parallel sub-agents → parallel tools
-    * → single sub-agent → single tool_use. Unparseable blocks pass through
-    * untouched. */
+    * → single sub-agent → single tool_use. Each pass rewrites what the
+    * earlier passes left, so a block inside an emitted parameter or
+    * message value is converted by its own later pass. Unparseable blocks
+    * pass through untouched. */
   def convertMessage(message: String, format: String): String = {
     require(Supported.contains(format.toLowerCase),
       s"Unsupported format: $format. Supported: ${Supported.mkString(", ")}")
-    var out = message
-    out = sub(BatchBlock, out)(b => parseBatchAgent(b).map(emit(_, format)))
-    out = sub(PaBlock, out) { body =>
-      val parts =
-        Pa.findAllMatchIn(body).flatMap(a => parseSubAgent(a.group(1))).toVector ++
-          Pt.findAllMatchIn(body).flatMap(t => parseToolUse(t.group(1))).toVector
-      if (parts.isEmpty) None else Some(parts.map(emit(_, format)).mkString("\n"))
-    }
-    out = sub(PtBlock, out) { body =>
-      val parts = Pt.findAllMatchIn(body).flatMap(t => parseToolUse(t.group(1))).toVector
-      if (parts.isEmpty) None else Some(parts.map(emit(_, format)).mkString("\n"))
-    }
-    out = sub(SubAgentBlock, out)(b => parseSubAgent(b).map(emit(_, format)))
-    out = sub(ToolUseBlock, out)(b => parseToolUse(b).map(emit(_, format)))
-    out
+    def each(body: String, tag: String)(parse: String => Option[CallInfo]) =
+      NexTags.blocks(body, tag).flatMap(b => parse(b.body))
+    def emitAll(calls: Vector[CallInfo]): Option[String] =
+      if (calls.isEmpty) None else Some(calls.map(emit(_, format)).mkString("\n"))
+    var out = NexTags.rewrite(message, "use_batch_agent")(b =>
+      parseBatchAgent(b).map(emit(_, format)))
+    out = NexTags.rewrite(out, "use_parallel_sub_agents")(b =>
+      emitAll(each(b, "parallel_agent")(parseSubAgent) ++
+        each(b, "parallel_tool")(parseToolUse)))
+    out = NexTags.rewrite(out, "use_parallel_tool_calls")(b =>
+      emitAll(each(b, "parallel_tool")(parseToolUse)))
+    out = NexTags.rewrite(out, "sub-agent")(b => parseSubAgent(b).map(emit(_, format)))
+    NexTags.rewrite(out, "tool_use")(b => parseToolUse(b).map(emit(_, format)))
   }
 }

@@ -3,6 +3,9 @@ package graft.core.text
 import scala.collection.immutable.VectorBuilder
 import scala.util.matching.Regex
 
+import com.fasterxml.jackson.core.json.JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS
+import com.fasterxml.jackson.databind.{ObjectMapper, json, node}
+
 /** NexAU-XML tool-call model and extraction — the converter's heart.
   *
   * Behavioral reference (not a port): tag restoration
@@ -54,31 +57,27 @@ object NexXml extends Serializable {
     * unparseable string becomes `{}`. Already-object arguments, calls
     * without a function block, and unparseable call JSON pass through
     * unchanged. */
-  def normalizeArguments(toolCallJson: String): String = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    import com.fasterxml.jackson.databind.node.ObjectNode
-    val mapper = new ObjectMapper()
-    val lenient = com.fasterxml.jackson.databind.json.JsonMapper.builder()
-      .enable(com.fasterxml.jackson.core.json.JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS)
-      .build()
+  def normalizeArguments(toolCallJson: String): String =
     scala.util.Try {
-      val root = mapper.readTree(toolCallJson)
-      Option(root.get("function")).collect { case fn: ObjectNode => fn } match {
+      val root = Mapper.readTree(toolCallJson)
+      Option(root.get("function")).collect { case fn: node.ObjectNode => fn } match {
         case Some(fn) if Option(fn.get("arguments")).exists(_.isTextual) =>
-          val parsed = scala.util.Try(lenient.readTree(fn.get("arguments").asText))
+          val parsed = scala.util.Try(LenientMapper.readTree(fn.get("arguments").asText))
             .toOption.filter(n => n != null && !n.isMissingNode)
-            .getOrElse(mapper.createObjectNode())
-          fn.set[ObjectNode]("arguments", parsed)
-          mapper.writeValueAsString(root)
+            .getOrElse(Mapper.createObjectNode())
+          fn.set[node.ObjectNode]("arguments", parsed)
+          Mapper.writeValueAsString(root)
         case _ => toolCallJson
       }
     }.getOrElse(toolCallJson)
-  }
 
-  private val TagPairs: Seq[(String, String)] = Seq(
-    "tool_use", "sub-agent", "parallel_tool", "parallel_agent",
-    "use_parallel_tool_calls", "use_parallel_sub_agents", "use_batch_agent"
-  ).map(t => (s"<$t>", s"</$t>"))
+  // configured once, then only read from: safe to share across threads
+  private val Mapper = new ObjectMapper()
+  private val LenientMapper =
+    json.JsonMapper.builder().enable(ALLOW_UNESCAPED_CONTROL_CHARS).build()
+
+  private val TagPairs: Seq[(String, String)] =
+    NexTags.BlockTags.map(t => (s"<$t>", s"</$t>"))
 
   /** Restore closing tags chopped off by LLM stop sequences: for each known
     * pair, if the text contains the opener, does not (rstripped) end with
@@ -97,19 +96,16 @@ object NexXml extends Serializable {
 
   /** Minimal HTML entity unescape (the subset the reference's
     * `html.unescape` sees in practice; `&amp;` is resolved last). */
-  def htmlUnescape(s: String): String = {
-    val numeric = "&#(x?)([0-9a-fA-F]+);".r
-    val afterNumeric = numeric.replaceAllIn(s, m => {
-      val code =
-        if (m.group(1).nonEmpty) Integer.parseInt(m.group(2), 16)
-        else Integer.parseInt(m.group(2), 10)
+  def htmlUnescape(s: String): String =
+    NumericEntity.replaceAllIn(s, m => {
+      val code = Integer.parseInt(m.group(2), if (m.group(1).nonEmpty) 16 else 10)
       Regex.quoteReplacement(new String(Character.toChars(code)))
     })
-    afterNumeric
       .replace("&lt;", "<").replace("&gt;", ">")
       .replace("&quot;", "\"").replace("&apos;", "'")
       .replace("&amp;", "&")
-  }
+
+  private val NumericEntity: Regex = "&#(x?)([0-9a-fA-F]+);".r
 
   private val ParamPair: Regex = "(?s)<([^>]+)>(.*?)</\\1>".r
 
@@ -123,22 +119,21 @@ object NexXml extends Serializable {
     else if (paramBlock.trim.nonEmpty) Vector("content" -> paramBlock.trim)
     else Vector.empty
 
-  private val ToolUse: Regex = "(?s)<tool_use>(.*?)</tool_use>".r
   private val SubAgent: Regex =
     "(?s)<sub-agent>\\s*<agent_name>([^<]+)</agent_name>\\s*<message>(.*?)</message>\\s*</sub-agent>".r
-  private val ParallelTools: Regex =
-    "(?s)<use_parallel_tool_calls>(.*?)</use_parallel_tool_calls>".r
-  private val ParallelTool: Regex = "(?s)<parallel_tool>(.*?)</parallel_tool>".r
-  private val ParallelAgents: Regex =
-    "(?s)<use_parallel_sub_agents>(.*?)</use_parallel_sub_agents>".r
   private val ParallelAgent: Regex =
     "(?s)<parallel_agent>\\s*<agent_name>([^<]+)</agent_name>\\s*<message>(.*?)</message>\\s*</parallel_agent>".r
   private val BatchAgent: Regex =
     "(?s)<use_batch_agent>\\s*<agent_name>([^<]+)</agent_name>\\s*<input_data_source>(.*?)</input_data_source>\\s*<message>(.*?)</message>\\s*</use_batch_agent>".r
-  private val ToolName: Regex = "(?s)<tool_name>\\s*([^<]+)\\s*</tool_name>".r
-  private val ParamBlock: Regex = "(?s)<parameter>(.*?)</parameter>".r
   private val FileName: Regex = "<file_name>([^<]+)</file_name>".r
   private val DataFormat: Regex = "<format>([^<]+)</format>".r
+
+  /** A tool_use body's name and parameters by the plain tag grammar: the
+    * first non-empty `<tool_name>` text and the first `<parameter>` block. */
+  private[text] def nameAndParams(body: String): Option[(String, Vector[(String, String)])] =
+    NexTags.firstText(body, "tool_name").map(name =>
+      name -> NexTags.first(body, "parameter").fold(Vector.empty[(String, String)])(p =>
+        parseParams(p.trim)))
 
   /** Extract every NexAU call form from assistant content, in the
     * reference's stage order (single tool_use → sub-agent → parallel tools
@@ -150,48 +145,38 @@ object NexXml extends Serializable {
     val calls = new VectorBuilder[ToolCall]
 
     // robust XML first (F2's recovery chain — handles raw markup inside
-    // values, truncated lines, CDATA), regex as the final fallback
+    // values, truncated lines, CDATA), the plain tag grammar as the final
+    // fallback
     def parseSingleTool(block: String): Option[ToolCall] =
-      RobustXml.parseToolUse(block)
+      RobustXml.parseToolUse(block).orElse(nameAndParams(block))
         .map { case (name, params) => ToolCall(newId(), name, Json.obj(params)) }
-        .orElse(ToolName.findFirstMatchIn(block).map { nameM =>
-          val params = ParamBlock.findFirstMatchIn(block)
-            .map(pm => parseParams(pm.group(1).trim))
-            .getOrElse(Vector.empty)
-          ToolCall(newId(), nameM.group(1).trim, Json.obj(params))
-        })
+
+    def subAgent(name: String, message: String): Unit =
+      calls += ToolCall(newId(), s"${name.trim}_sub_agent",
+        Json.obj(Vector("message" -> message.trim)))
+
+    def parallelTools(body: String): Unit =
+      NexTags.blocks(body, "parallel_tool")
+        .flatMap(t => parseSingleTool(t.body.strip))
+        .foreach(calls += _)
 
     var out = restoreClosingTags(content)
 
-    out = ToolUse.replaceAllIn(out, m =>
-      parseSingleTool(m.group(1).strip) match {
-        case Some(tc) => calls += tc; ""
-        case None     => Regex.quoteReplacement(m.matched)
-      })
+    out = NexTags.rewrite(out, "tool_use")(b =>
+      parseSingleTool(b.strip).map { tc => calls += tc; "" })
 
-    out = SubAgent.replaceAllIn(out, m => {
-      calls += ToolCall(newId(), s"${m.group(1).trim}_sub_agent",
-        Json.obj(Vector("message" -> m.group(2).trim)))
-      ""
-    })
+    out = SubAgent.replaceAllIn(out, m => { subAgent(m.group(1), m.group(2)); "" })
 
-    out = ParallelTools.replaceAllIn(out, m => {
-      ParallelTool.findAllMatchIn(m.group(1))
-        .flatMap(t => parseSingleTool(t.group(1).strip))
-        .foreach(calls += _)
-      ""
-    })
+    out = NexTags.rewrite(out, "use_parallel_tool_calls") { body =>
+      parallelTools(body)
+      Some("")
+    }
 
-    out = ParallelAgents.replaceAllIn(out, m => {
-      val body = m.group(1)
-      ParallelAgent.findAllMatchIn(body).foreach(a =>
-        calls += ToolCall(newId(), s"${a.group(1).trim}_sub_agent",
-          Json.obj(Vector("message" -> a.group(2).trim))))
-      ParallelTool.findAllMatchIn(body)
-        .flatMap(t => parseSingleTool(t.group(1).strip))
-        .foreach(calls += _)
-      ""
-    })
+    out = NexTags.rewrite(out, "use_parallel_sub_agents") { body =>
+      ParallelAgent.findAllMatchIn(body).foreach(a => subAgent(a.group(1), a.group(2)))
+      parallelTools(body)
+      Some("")
+    }
 
     out = BatchAgent.replaceAllIn(out, m => {
       val src = m.group(2)

@@ -59,15 +59,14 @@ object RobustXml extends Serializable {
   private def escape(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
-  private val ParamBlock: Regex = "(?s)<parameter>(.*?)</parameter>".r
   private val ParamPair: Regex = "(?s)<(\\w+)>(.*?)</\\1>".r
 
   /** Strategy 3: escape markup that appears inside parameter VALUES. */
   private[text] def escapeParamValues(body: String): String =
-    ParamBlock.findFirstMatchIn(body) match {
+    NexTags.first(body, "parameter") match {
       case None => body
-      case Some(pm) =>
-        val fixed = ParamPair.replaceAllIn(pm.group(1), m => {
+      case Some(param) =>
+        val fixed = ParamPair.replaceAllIn(param, m => {
           val v = m.group(2)
           val rep =
             if (v.contains("<") && v.contains(">"))
@@ -75,7 +74,7 @@ object RobustXml extends Serializable {
             else m.matched
           Regex.quoteReplacement(rep)
         })
-        body.replace(pm.group(1), fixed)
+        body.replace(param, fixed)
     }
 
   private val ToolName: Regex = "(?is)<tool_name>\\s*([^<]+)\\s*</tool_name>".r
@@ -95,11 +94,11 @@ object RobustXml extends Serializable {
       .orElse {
         // strategy 5: minimal rebuild from regex extraction. The parameter
         // body is kept RAW (reference parity): if it is itself unbalanced
-        // this parse fails too and the caller's pure-regex fallback takes
-        // over (which maps unparseable bodies to a "content" param).
+        // this parse fails too and the caller's plain tag-grammar fallback
+        // takes over (which maps unparseable bodies to a "content" param).
         val tool = ToolName.findFirstMatchIn(body).map(_.group(1).trim).getOrElse("unknown")
-        val param = ParamBlock.findFirstMatchIn(body)
-          .map(m => s"<parameter>${m.group(1).strip}</parameter>").getOrElse("")
+        val param = NexTags.first(body, "parameter")
+          .map(p => s"<parameter>${p.strip}</parameter>").getOrElse("")
         tryParse(s"<tool_name>${escape(tool)}</tool_name>$param")
       }
 

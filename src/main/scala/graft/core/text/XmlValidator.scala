@@ -48,112 +48,60 @@ object XmlValidator extends Serializable {
     errors.toList
   }
 
-  private val ToolUseBlock: Regex = "(?s)<tool_use>(.*?)</tool_use>".r
-  private val ToolNameIn: Regex = "(?s)<tool_name>(.*?)</tool_name>".r
-  private val ParamIn: Regex = "(?s)<parameter>(.*?)</parameter>".r
-  private val PtBlock: Regex =
-    "(?s)<use_parallel_tool_calls>(.*?)</use_parallel_tool_calls>".r
-  private val Pt: Regex = "(?s)<parallel_tool>(.*?)</parallel_tool>".r
-  private val PaBlock: Regex =
-    "(?s)<use_parallel_sub_agents>(.*?)</use_parallel_sub_agents>".r
-  private val Pa: Regex = "(?s)<parallel_agent>(.*?)</parallel_agent>".r
-  private val AgentNameIn: Regex = "(?s)<agent_name>(.*?)</agent_name>".r
-  private val MessageIn: Regex = "(?s)<message>(.*?)</message>".r
-  private val BaBlock: Regex = "(?s)<use_batch_agent>(.*?)</use_batch_agent>".r
+  /** `check(label, body)` on each `<tag>` block. Top-level blocks (no
+    * `where`) are labelled by position, and none at all while the opener
+    * is present is the unclosed-opener error; blocks inside a block are
+    * labelled by its `where` and their ordinal. */
+  private def eachBlock(content: String, tag: String, where: String = "")(
+      check: (String, String) => List[String]): List[String] = {
+    val found = NexTags.blocks(content, tag)
+    if (found.isEmpty && where.isEmpty && content.contains(s"<$tag>"))
+      List(s"Found unclosed <$tag> tag")
+    else found.toList.zipWithIndex.flatMap { case (blk, i) =>
+      check(if (where.isEmpty) s"$tag block #${i + 1} (position ${blk.start})"
+        else s"$where $tag #${i + 1}", blk.body)
+    }
+  }
 
-  /** tool_use blocks must carry tool_name + parameter, and the parameter
-    * body must itself be tag-balanced. */
-  def validateToolUse(content: String): List[String] = {
-    val blocks = ToolUseBlock.findAllMatchIn(content).toList
-    if (blocks.isEmpty)
-      return if (content.contains("<tool_use>"))
-        List("Found unclosed <tool_use> tag")
-      else Nil
-    blocks.zipWithIndex.flatMap { case (m, i) =>
-      val block = m.group(1)
-      val where = s"tool_use block #${i + 1} (position ${m.start})"
-      val nameErr =
-        if (ToolNameIn.findFirstIn(block).isEmpty)
-          List(s"$where missing <tool_name>...</tool_name>")
-        else Nil
-      ParamIn.findFirstMatchIn(block) match {
+  /** One `missing <child>` error per required child block `body` lacks. */
+  private def missing(children: String*)(where: String, body: String): List[String] =
+    children.filter(NexTags.first(body, _).isEmpty).map(c => s"$where missing <$c>").toList
+
+  /** tool_use blocks need tool_name + a tag-balanced parameter body. */
+  private def validateToolUse(content: String): List[String] =
+    eachBlock(content, "tool_use") { (where, block) =>
+      val nameErr = NexTags.first(block, "tool_name").fold(
+        List(s"$where missing <tool_name>...</tool_name>"))(_ => Nil)
+      NexTags.first(block, "parameter").map(checkTagsBalanced) match {
         case None => nameErr :+ s"$where missing <parameter>...</parameter>"
-        case Some(pm) =>
-          val inner = checkTagsBalanced(pm.group(1))
-          if (inner.isEmpty) nameErr
-          else nameErr ++ (s"$where parameter internal tag mismatch" ::
-            inner.map("  └─ " + _))
+        case Some(Nil) => nameErr
+        case Some(inner) => nameErr ++ (s"$where parameter internal tag mismatch" ::
+          inner.map("  └─ " + _))
       }
     }
-  }
 
-  /** use_parallel_tool_calls blocks need ≥1 well-formed parallel_tool, each
-    * carrying tool_name + parameter. */
-  def validateParallelTools(content: String): List[String] = {
-    val blocks = PtBlock.findAllMatchIn(content).toList
-    if (blocks.isEmpty)
-      return if (content.contains("<use_parallel_tool_calls>"))
-        List("Found unclosed <use_parallel_tool_calls> tag")
-      else Nil
-    blocks.zipWithIndex.flatMap { case (m, i) =>
-      val where = s"use_parallel_tool_calls block #${i + 1} (position ${m.start})"
-      val tools = Pt.findAllMatchIn(m.group(1)).toList
-      if (tools.isEmpty) List(s"$where missing <parallel_tool>...</parallel_tool>")
-      else tools.zipWithIndex.flatMap { case (t, j) =>
-        val twhere = s"$where parallel_tool #${j + 1}"
-        val body = t.group(1)
-        (if (ToolNameIn.findFirstIn(body).isEmpty)
-          List(s"$twhere missing <tool_name>") else Nil) ++
-          (if (ParamIn.findFirstIn(body).isEmpty)
-            List(s"$twhere missing <parameter>") else Nil)
-      }
+  /** use_parallel_tool_calls blocks need ≥1 parallel_tool, each carrying
+    * tool_name + parameter. */
+  private def validateParallelTools(content: String): List[String] =
+    eachBlock(content, "use_parallel_tool_calls") { (where, body) =>
+      if (NexTags.first(body, "parallel_tool").isEmpty)
+        List(s"$where missing <parallel_tool>...</parallel_tool>")
+      else eachBlock(body, "parallel_tool", where)(missing("tool_name", "parameter"))
     }
-  }
 
   /** use_parallel_sub_agents blocks need ≥1 parallel_agent or
     * parallel_tool; agents need agent_name + message. */
-  def validateParallelAgents(content: String): List[String] = {
-    val blocks = PaBlock.findAllMatchIn(content).toList
-    if (blocks.isEmpty)
-      return if (content.contains("<use_parallel_sub_agents>"))
-        List("Found unclosed <use_parallel_sub_agents> tag")
-      else Nil
-    blocks.zipWithIndex.flatMap { case (m, i) =>
-      val where = s"use_parallel_sub_agents block #${i + 1} (position ${m.start})"
-      val body = m.group(1)
-      val agents = Pa.findAllMatchIn(body).toList
-      val tools = Pt.findAllMatchIn(body).toList
-      if (agents.isEmpty && tools.isEmpty)
+  private def validateParallelAgents(content: String): List[String] =
+    eachBlock(content, "use_parallel_sub_agents") { (where, body) =>
+      if (NexTags.first(body, "parallel_agent").isEmpty &&
+        NexTags.first(body, "parallel_tool").isEmpty)
         List(s"$where missing <parallel_agent> or <parallel_tool>")
-      else agents.zipWithIndex.flatMap { case (a, j) =>
-        val awhere = s"$where parallel_agent #${j + 1}"
-        val abody = a.group(1)
-        (if (AgentNameIn.findFirstIn(abody).isEmpty)
-          List(s"$awhere missing <agent_name>") else Nil) ++
-          (if (MessageIn.findFirstIn(abody).isEmpty)
-            List(s"$awhere missing <message>") else Nil)
-      }
+      else eachBlock(body, "parallel_agent", where)(missing("agent_name", "message"))
     }
-  }
 
   /** use_batch_agent blocks need agent_name, input_data_source, message. */
-  def validateBatchAgent(content: String): List[String] = {
-    val blocks = BaBlock.findAllMatchIn(content).toList
-    if (blocks.isEmpty)
-      return if (content.contains("<use_batch_agent>"))
-        List("Found unclosed <use_batch_agent> tag")
-      else Nil
-    blocks.zipWithIndex.flatMap { case (m, i) =>
-      val where = s"use_batch_agent block #${i + 1} (position ${m.start})"
-      val body = m.group(1)
-      Seq(
-        "agent_name" -> AgentNameIn, "message" -> MessageIn,
-        "input_data_source" -> "(?s)<input_data_source>(.*?)</input_data_source>".r
-      ).collect {
-        case (tag, re) if re.findFirstIn(body).isEmpty => s"$where missing <$tag>"
-      }.toList
-    }
-  }
+  private def validateBatchAgent(content: String): List[String] =
+    eachBlock(content, "use_batch_agent")(missing("agent_name", "message", "input_data_source"))
 
   /** Full gate: balance plus every block validator. Empty = valid. */
   def validate(content: String): List[String] =

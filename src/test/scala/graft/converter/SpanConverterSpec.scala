@@ -41,6 +41,24 @@ class SpanConverterSpec extends SparkSpec {
     }
   }
 
+  test("tool results pair by name when names carry a quote or a backslash") {
+    Seq("say\"hi", "say\\hi").foreach { odd =>
+      def call(n: String) =
+        s"<tool_use><tool_name>$n</tool_name><parameter><q>x</q></parameter></tool_use>"
+      def result(n: String) =
+        s"<tool_result><tool_name>$n</tool_name><result>r_$n</result></tool_result>"
+      val rec = SpanConverter.recordOf("t", "s", None, Seq(
+        SpanMessage("assistant", Seq("a", odd, "c").map(call).mkString("\n")),
+        SpanMessage("user", "Tool execution results:\n" +
+          Seq(odd, "a", "c").map(result).mkString("\n"))), None)
+      val paired = rec.messages.filter(_.role == "tool")
+        .map(m => m.name.get -> m.tool_call_id.get)
+      assert(paired == Seq(odd -> SpanConverter.callId("t", "s", 1),
+        "a" -> SpanConverter.callId("t", "s", 0), "c" -> SpanConverter.callId("t", "s", 2)),
+        s"name $odd")
+    }
+  }
+
   test("finish_reason reflects output tool calls") {
     import spark.implicits._
     val byReason = records.map(r => (r.finish_reason, r.span_id)).collect()

@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * round-trips"). Raw ScalaCheck Gens driven by a fixed-seed sampler (the
   * scalatest-scalacheck bridge isn't on the offline classpath). */
 class TextPropertySpec extends AnyFunSuite {
+  import TextPropertySpec._
 
   /** Deterministically sample `n` values and assert the property on each. */
   private def forAll[A](g: Gen[A], n: Int = 200)(check: A => Unit): Unit =
@@ -20,26 +21,7 @@ class TextPropertySpec extends AnyFunSuite {
   private def forAll2[A, B](ga: Gen[A], gb: Gen[B])(check: (A, B) => Unit): Unit =
     forAll(Gen.zip(ga, gb))(t => check(t._1, t._2))
 
-  private val name: Gen[String] = for {
-    h <- Gen.alphaLowerChar
-    t <- Gen.listOfN(4, Gen.alphaNumChar)
-  } yield (h :: t).mkString
-
-  private val value: Gen[String] =
-    Gen.listOf(Gen.oneOf(Gen.alphaNumChar, Gen.const(' '))).map(_.mkString.trim)
-
   // ---- validator vs generated tag soups ----------------------------------
-
-  private val balancedXml: Gen[String] = {
-    def node(depth: Int): Gen[String] =
-      if (depth <= 0) value
-      else for {
-        n <- name
-        kids <- Gen.choose(0, 3).flatMap(k => Gen.listOfN(k, node(depth - 1)))
-        txt <- value
-      } yield s"<$n>$txt${kids.mkString}</$n>"
-    Gen.choose(1, 3).flatMap(node)
-  }
 
   test("generated balanced XML always validates") {
     forAll(balancedXml) { xml =>
@@ -71,17 +53,6 @@ class TextPropertySpec extends AnyFunSuite {
 
   // ---- extract/emit round-trips ------------------------------------------
 
-  private val toolCallXml: Gen[(String, Vector[(String, String)])] = for {
-    tool <- name
-    nParams <- Gen.choose(0, 4)
-    params <- Gen.listOfN(nParams, Gen.zip(name, value))
-  } yield {
-    val dedupedParams = params.toMap.toVector.sortBy(_._1) // unique keys
-    val paramXml = dedupedParams.map { case (k, v) => s"<$k>$v</$k>" }.mkString
-    (s"<tool_use><tool_name>$tool</tool_name><parameter>$paramXml</parameter></tool_use>",
-      dedupedParams)
-  }
-
   test("extracted parameters survive the XML round-trip") {
     forAll(toolCallXml) { case (xml, params) =>
       var n = -1
@@ -112,5 +83,38 @@ class TextPropertySpec extends AnyFunSuite {
       val node = mapper.readTree(json)
       assert(node.get(k) != null && node.get(k).asText == v, json)
     }
+  }
+}
+
+/** The generators, shared with `NexTagsSpec`'s differential inputs. */
+object TextPropertySpec {
+  val name: Gen[String] = for {
+    h <- Gen.alphaLowerChar
+    t <- Gen.listOfN(4, Gen.alphaNumChar)
+  } yield (h :: t).mkString
+
+  val value: Gen[String] =
+    Gen.listOf(Gen.oneOf(Gen.alphaNumChar, Gen.const(' '))).map(_.mkString.trim)
+
+  val balancedXml: Gen[String] = {
+    def node(depth: Int): Gen[String] =
+      if (depth <= 0) value
+      else for {
+        n <- name
+        kids <- Gen.choose(0, 3).flatMap(k => Gen.listOfN(k, node(depth - 1)))
+        txt <- value
+      } yield s"<$n>$txt${kids.mkString}</$n>"
+    Gen.choose(1, 3).flatMap(node)
+  }
+
+  val toolCallXml: Gen[(String, Vector[(String, String)])] = for {
+    tool <- name
+    nParams <- Gen.choose(0, 4)
+    params <- Gen.listOfN(nParams, Gen.zip(name, value))
+  } yield {
+    val dedupedParams = params.toMap.toVector.sortBy(_._1) // unique keys
+    val paramXml = dedupedParams.map { case (k, v) => s"<$k>$v</$k>" }.mkString
+    (s"<tool_use><tool_name>$tool</tool_name><parameter>$paramXml</parameter></tool_use>",
+      dedupedParams)
   }
 }
