@@ -95,17 +95,32 @@ object NexXml extends Serializable {
     }
 
   /** Minimal HTML entity unescape (the subset the reference's
-    * `html.unescape` sees in practice; `&amp;` is resolved last). */
+    * `html.unescape` sees in practice; `&amp;` is resolved last). Total:
+    * a numeric reference outside Unicode (above U+10FFFF, however many
+    * digits), a surrogate or `&#0;` becomes U+FFFD, as `html.unescape`
+    * makes it. */
   def htmlUnescape(s: String): String =
     NumericEntity.replaceAllIn(s, m => {
-      val code = Integer.parseInt(m.group(2), if (m.group(1).nonEmpty) 16 else 10)
-      Regex.quoteReplacement(new String(Character.toChars(code)))
+      val code =
+        if (m.group(1) != null) codePointOf(m.group(1), 16)
+        else codePointOf(m.group(2), 10)
+      val ok = code > 0 && !(code >= Character.MIN_SURROGATE && code <= Character.MAX_SURROGATE)
+      Regex.quoteReplacement(if (ok) new String(Character.toChars(code)) else "\uFFFD")
     })
       .replace("&lt;", "<").replace("&gt;", ">")
       .replace("&quot;", "\"").replace("&apos;", "'")
       .replace("&amp;", "&")
 
-  private val NumericEntity: Regex = "&#(x?)([0-9a-fA-F]+);".r
+  private val NumericEntity: Regex = "&#(?:x([0-9a-fA-F]+)|([0-9]+));".r
+
+  /** The code point `digits` spell in `radix`, or -1 past U+10FFFF. */
+  private def codePointOf(digits: String, radix: Int): Int = {
+    var cp = 0; var i = 0
+    while (i < digits.length && cp <= Character.MAX_CODE_POINT) {
+      cp = cp * radix + Character.digit(digits.charAt(i), radix); i += 1
+    }
+    if (cp > Character.MAX_CODE_POINT) -1 else cp
+  }
 
   private val ParamPair: Regex = "(?s)<([^>]+)>(.*?)</\\1>".r
 

@@ -6,8 +6,9 @@ import scala.util.matching.Regex
 /** Structural validator for NexAU-XML assistant content (behavioral
   * reference: `converter/trace/filter_xml_errors.py:63-498`). Returns the
   * list of problems; an empty list means the content passes the
-  * training-data quality gate (P9). Pure function — wrapped as a filter UDF
-  * and as the codegen Catalyst expression `xml_valid`.
+  * training-data quality gate (P9). Pure function — wrapped as the
+  * `xml_valid` UDF and as the codegen Catalyst expression
+  * `xml_valid_native` (graft.plans.XmlValid).
   */
 object XmlValidator extends Serializable {
 

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions.udf
 /** SQL-facing registration of the pure text operators (SURVEY.md §2.10).
   * Each UDF wraps a function from graft.core.text that is unit-tested
   * without Spark; `xml_valid` additionally exists as a codegen Catalyst
-  * expression (graft.plans.XmlValidExpression) registered by
-  * [[graft.plans.GraftExtensions]].
+  * expression (graft.plans.XmlValid, SQL name `xml_valid_native`,
+  * registered by [[graft.plans.GraftExtensions]]) — what q42 builds.
   */
 object TextFunctions extends Serializable {
 

@@ -278,7 +278,9 @@ case class AsOfJoinExec(
 
 /** Public API: `AsOf.join(events, orders, Seq("user_id"), Seq("o_custkey"),
   * "ts", "o_orderdate", tieBreak = Seq("o_orderkey"))`. Children are taken
-  * analyzed, so the custom node enters the optimizer resolved. */
+  * analyzed, so the custom node enters the optimizer resolved. The one
+  * engine caller of [[GraftExtensions.install]]: the planner needs
+  * [[AsOfJoinStrategy]] to execute the node. */
 object AsOf {
   /** @param direction "backward" (default — latest right at or before the
     *                  left time) or "forward" (earliest right at or after)

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, Tables}
+import graft.plans.GraftExtensions.kernel
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -391,7 +392,6 @@ object Advanced {
       "q97_heavy_hitters",
       (spark, dir) => {
         import spark.implicits._
-        graft.plans.GraftExtensions.install(spark)
         val grams = Tables.documents(spark, dir)
           .select(col("doc_id"), col("text"))
           .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
@@ -405,7 +405,7 @@ object Advanced {
         // Checkpointed because two consumers read it (N and the exploded
         // candidate table); it is a single row either way.
         val summary = grams
-          .agg(expr(s"mg_candidates(g, $k)").as("cands"),
+          .agg(kernel("mg_candidates", col("g"), lit(k)).as("cands"),
             count(lit(1)).as("n"))
           .localCheckpoint(eager = true)
         val n = summary.select("n").as[Long].head()

@@ -3,6 +3,7 @@ package graft.queries
 import graft.{GraftQuery, Tables}
 import graft.converter.{SpanConverter, Spans}
 import graft.functions.TextFunctions
+import graft.plans.GraftExtensions.kernel
 import org.apache.spark.sql.functions._
 
 /** The converter DAG exposed through the driver contract. Spans are
@@ -72,7 +73,7 @@ object Converter {
       Spans.synthesize(spark, dir).toDF
         .filter(col("output.content").isNotNull)
         .select(col("trace_id"),
-          expr("xml_valid(output.content)").as("valid"),
+          kernel("xml_valid_native", col("output.content")).as("valid"),
           expr("size(xml_errors(output.content))").as("n_errors"))
         .groupBy("valid")
         .agg(count(lit(1)).as("n_spans"), sum(col("n_errors")).as("total_errors"))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, Tables}
+import graft.plans.GraftExtensions.kernel
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -137,7 +138,6 @@ object Curation {
   private val q81 = GraftQuery(
     "q81_bloom_incremental_dedup",
     (spark, dir) => {
-      graft.plans.GraftExtensions.install(spark)
       val fp = bowFingerprint
       val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       val corpus = docs.filter(col("doc_id") % 10 =!= 7).select(fp.as("fp"))
@@ -147,7 +147,7 @@ object Curation {
         .stat.bloomFilter("h", math.max(corpus.count(), 1L), 0.01)
       val bos = new java.io.ByteArrayOutputStream()
       bf.writeTo(bos)
-      val hit = call_function("bloom_might_contain",
+      val hit = kernel("bloom_might_contain",
         lit(bos.toByteArray), xxhash64(col("fp")))
       val admitted = batch.filter(!hit)
         .unionByName(batch.filter(hit).join(corpus, Seq("fp"), "left_anti")
@@ -780,7 +780,6 @@ object Curation {
 
   /** Open a fresh ingest state over an initial sealed corpus. */
   def ingestStateOf(sealedFps0: DataFrame, capacity: Long): IngestState = {
-    graft.plans.GraftExtensions.install(sealedFps0.sparkSession)
     val sealed0 = sealedFps0.select("fp").localCheckpoint(true)
     IngestState(sealed0, deltaBloomOf(sealed0, capacity), capacity)
   }
@@ -834,7 +833,6 @@ object Curation {
 
   def loadIngestState(spark: org.apache.spark.sql.SparkSession,
       dir: String): IngestState = {
-    graft.plans.GraftExtensions.install(spark)
     val bloom = org.apache.spark.util.sketch.BloomFilter.readFrom(
       new java.io.ByteArrayInputStream(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(dir, "bloom.bin"))))
@@ -857,7 +855,6 @@ object Curation {
     * row-level). */
   def sealStore(table: String, sealedFps0: DataFrame,
       buckets: Int = 64): Unit = {
-    graft.plans.GraftExtensions.install(sealedFps0.sparkSession)
     graft.sources.Bucketing.writeBucketed(
       sealedFps0.select("fp"), table, "fp", buckets)
   }
@@ -993,7 +990,7 @@ object Curation {
     if (bloom.bitSize() / 8 <= BloomLiteralCeiling) {
       val bos = new java.io.ByteArrayOutputStream()
       bloom.writeTo(bos)
-      (call_function("bloom_might_contain", lit(bos.toByteArray),
+      (kernel("bloom_might_contain", lit(bos.toByteArray),
         xxhash64(col("fp"))), () => ())
     } else {
       val bc = spark.sparkContext.broadcast(bloom)

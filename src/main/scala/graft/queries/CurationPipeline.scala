@@ -167,7 +167,6 @@ object CurationPipeline {
       bandStore: Option[String]): Stages = {
     def barrier(df: DataFrame): DataFrame =
       if (materialize) df.localCheckpoint(eager = false) else df
-    graft.plans.GraftExtensions.install(spark)
 
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), col("text"))

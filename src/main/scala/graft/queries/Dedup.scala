@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, Tables}
+import graft.plans.GraftExtensions.kernel
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -41,7 +42,6 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       docs: org.apache.spark.sql.DataFrame,
       shingle: Int = 3) = {
-    graft.plans.GraftExtensions.install(spark)
     shinglesOf(docs
       .select(col("doc_id"), col("text"))
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id")),
@@ -59,7 +59,7 @@ object Dedup {
       // compiled shingle construction (graft.plans.WordShingles) — the
       // array_distinct(transform(sequence(...))) spelling is semantically
       // identical but interpreted
-      .select(col("doc_id"), expr(s"word_shingles(text, $shingle)").as("sh"))
+      .select(col("doc_id"), kernel("word_shingles", col("text"), lit(shingle)).as("sh"))
 
   private def shingleSqlFrom(src: String) =
     s"""s AS (
@@ -96,7 +96,7 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       sh: org.apache.spark.sql.DataFrame,
       hashes: Int = 12) =
-    sh.select(col("doc_id"), expr(s"minhash_sigs(sh, $hashes)").as("sigs"))
+    sh.select(col("doc_id"), kernel("minhash_sigs", col("sh"), lit(hashes)).as("sigs"))
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
 
   /** Band rows (doc_id, band, sig) of a signature frame — the LSH
@@ -150,7 +150,6 @@ object Dedup {
   private[queries] def minhashCandOn(
       spark: org.apache.spark.sql.SparkSession,
       docs: org.apache.spark.sql.DataFrame) = {
-    graft.plans.GraftExtensions.install(spark)
     val sh = shingleOn(spark, docs)
     val sigs = minhashSigsOf(spark, sh)
     val bands = bandRowsOf(sigs)
@@ -262,7 +261,6 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       queryDocs: org.apache.spark.sql.DataFrame,
       corpusDocs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    graft.plans.GraftExtensions.install(spark)
     val shq = shingleOn(spark, queryDocs)
     val shc = shingleOn(spark, corpusDocs)
     val cand = bandRowsOf(minhashSigsOf(spark, shq)).as("x")
@@ -369,17 +367,16 @@ object Dedup {
     * never inside a Filter. */
   private[queries] def winnowStage(
       spark: org.apache.spark.sql.SparkSession, dir: String) = {
-    graft.plans.GraftExtensions.install(spark)
     val (w, k) = (48, 8)
     Tables.documents(spark, dir)
       .filter(length(col("text")) >= w + k - 1)
       .select(col("doc_id"), col("text"))
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-      .withColumn("hs", expr(s"window_hashes(text, $w)"))
+      .withColumn("hs", kernel("window_hashes", col("text"), lit(w)))
       // compiled monotonic-deque selection (graft.plans.WinnowPositions):
       // the transform(slice/array_min) spelling copies two k-slices per
       // window interpreted — 34 s of the sf0.1 runtime.
-      .withColumn("ps", expr(s"winnow_positions(hs, $k)"))
+      .withColumn("ps", kernel("winnow_positions", col("hs"), lit(k)))
   }
 
   /** Shared winnowing-fingerprint stage for q27/q28: one row per SELECTED
@@ -653,10 +650,9 @@ object Dedup {
   private[graft] def gram8On(
       spark: org.apache.spark.sql.SparkSession,
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    graft.plans.GraftExtensions.install(spark)
     df.filter(size(split(col("text"), " ")) >= 8)
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"), explode(expr("word_shingles(text, 8)")).as("gram"))
+      .select(col("doc_id"), explode(kernel("word_shingles", col("text"), lit(8))).as("gram"))
   }
 
   /** DuckDB twin of [[gram8On]] — a (doc_id, gram) relation over `src`;
@@ -979,7 +975,7 @@ object Dedup {
     * CollapseProject). Shared by q31 (word-shingle features) and q92
     * (binary content-block features). */
   private[queries] def simhashFp32(hashes: Column): Column =
-    call_function("simhash_fp32", hashes)
+    kernel("simhash_fp32", hashes)
 
   /** The interpreted higher-order spelling the kernel replaced (round
     * 20): a 32-int array + a 32-int sequence + 32 lambda frames PER
@@ -1001,7 +997,7 @@ object Dedup {
     * graft.plans.HammingBits; the interpreted twin below is the spec's
     * equivalence anchor). */
   private[queries] def hammingBits(a: Column, b: Column, nBits: Int): Column =
-    call_function("hamming_bits", a, b, lit(nBits))
+    kernel("hamming_bits", a, b, lit(nBits))
 
   private[graft] def hammingBitsInterp(a: Column, b: Column,
       nBits: Int): Column =
@@ -1084,13 +1080,13 @@ object Dedup {
     * strings for the surviving handful (see q32). */
   private[queries] def q32HashGrams(
       spark: org.apache.spark.sql.SparkSession, dir: String) = {
-    graft.plans.GraftExtensions.install(spark)
     Tables.documents(spark, dir)
       .filter(length(col("text")) >= 4)
       .select(col("doc_id"), col("lang"), col("text"))
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id"), col("lang"),
-        expr("sorted_hash64(char_ngrams(text, 4, true))").as("hg"))
+        kernel("sorted_hash64",
+          kernel("char_ngrams", col("text"), lit(4), lit(true))).as("hg"))
       .withColumn("ng", size(col("hg")))
   }
 
@@ -1358,7 +1354,7 @@ object Dedup {
       val hashVerify = cand
         .join(g.as("a"), col("a.doc_id") === col("doc_a"))
         .join(g.as("b"), col("b.doc_id") === col("doc_b") &&
-          expr("sorted_long_jaccard_ge(a.hg, b.hg, CAST(0.6 AS DOUBLE))"))
+          kernel("sorted_long_jaccard_ge", col("a.hg"), col("b.hg"), lit(0.6)))
         .select(col("doc_a"), col("doc_b"))
       val surv = hashVerify.localCheckpoint(eager = true)
       val ids = surv.select(col("doc_a").as("doc_id"))
@@ -1371,8 +1367,8 @@ object Dedup {
       val sg = Tables.documents(spark, dir)
         .join(ids, "doc_id")
         .select(col("doc_id"),
-          array_sort(expr("char_ngrams(text, 4, true)")).as("gr"))
-      val inter = expr("sorted_intersect_count(a.gr, b.gr)").cast("double")
+          array_sort(kernel("char_ngrams", col("text"), lit(4), lit(true))).as("gr"))
+      val inter = kernel("sorted_intersect_count", col("a.gr"), col("b.gr")).cast("double")
       val jac = inter / (size(col("a.gr")) + size(col("b.gr")) - inter)
       val result = surv
         .join(sg.as("a"), col("a.doc_id") === col("doc_a"))
@@ -1433,16 +1429,15 @@ object Dedup {
     * cardinality anywhere. */
   private[queries] def lshJaccardStages(
       spark: org.apache.spark.sql.SparkSession, dir: String) = {
-      graft.plans.GraftExtensions.install(spark)
       val g = Tables.documents(spark, dir)
         .filter(length(col("text")) >= 4)
         .select(col("doc_id"), col("lang"), col("text"))
         .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
         .select(col("doc_id"), col("lang"),
-          expr("char_ngrams(text, 4, true)").as("gr"))
+          kernel("char_ngrams", col("text"), lit(4), lit(true)).as("gr"))
         .select(col("doc_id"), col("lang"),
-          expr("sorted_hash64(gr)").as("hg"),
-          expr("minhash_sigs(gr, 12)").as("sigs"))
+          kernel("sorted_hash64", col("gr")).as("hg"),
+          kernel("minhash_sigs", col("gr"), lit(12)).as("sigs"))
         .localCheckpoint(eager = true)
       val bandCols = (0 until 6).map(b =>
         md5(concat(element_at(col("sigs"), 2 * b + 1),

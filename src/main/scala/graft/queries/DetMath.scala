@@ -1,9 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graftbridge.DatasetBridge
 
 import graft.plans.DetLn
+import graft.plans.GraftExtensions.kernel
 
 /** Deterministic natural log — the cross-engine bit-exactness answer for
   * scoring functions that need a transcendental (BM25's idf, q127/q128).
@@ -45,12 +45,9 @@ object DetMath {
     * pull DuckDB into DECIMAL arithmetic with different rounding). */
   private def dlit(d: Double): String = s"CAST('${d.toString}' AS DOUBLE)"
 
-  /** Spark side: one compiled [[DetLn]] node over `x` (DoubleType).
-    * Built straight from the expression, so it needs no function
-    * registration and works on any session; SQL reaches the same node as
-    * `det_ln` once [[graft.plans.GraftExtensions]] is installed. */
-  def lnCol(x: Column): Column =
-    DatasetBridge.column(DetLn(DatasetBridge.expression(x)))
+  /** Spark side: one compiled [[DetLn]] node over `x` (DoubleType) —
+    * the `det_ln` kernel, built directly, so it works on any session. */
+  def lnCol(x: Column): Column = kernel("det_ln", x)
 
   /** DuckDB side: a CTE chain staging the intermediates (inlining them
     * textually would square the expression to ~150 KB). Input: relation

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.GraftQuery
 import graft.multimodal.BinaryOps
+import graft.plans.GraftExtensions.kernel
 import org.apache.spark.sql.functions._
 
 /** Multimodal operators through the driver contract. q50's scalar columns
@@ -154,7 +155,6 @@ object Multimodal {
     "q92_media_phash_neardup",
     (spark, dir) => {
       import graft.queries.Dedup.{hammingBits, simhashFp32}
-      graft.plans.GraftExtensions.install(spark)
       val fps = BinaryOps.synthesize(spark, dir).toDF
         .filter(length(col("payload")) > 0)
         .select(col("media_id"), col("payload"))
@@ -265,12 +265,11 @@ object Multimodal {
     "q94_cdc_chunk_dedup",
     (spark, dir) => {
       import org.apache.spark.sql.expressions.Window
-      graft.plans.GraftExtensions.install(spark)
       graft.Tables.documents(spark, dir)
         .filter(length(col("text")) > 0)
         .select(col("doc_id").as("media_id"), col("text"))
         .repartition(spark.sparkContext.defaultParallelism, col("media_id"))
-        .withColumn("hs", expr("window_hashes(text, 16)"))
+        .withColumn("hs", kernel("window_hashes", col("text"), lit(16)))
         .withColumn("cuts", expr(
           """array_distinct(concat(
                array(0),

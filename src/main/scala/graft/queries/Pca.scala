@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.core.linalg.PowerIteration
+import graft.plans.GraftExtensions.kernel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,11 +33,10 @@ object Pca {
 
   /** One cluster pass + driver eigensolve. */
   def fit(spark: SparkSession, dir: String, k: Int): (Model, Double) = {
-    graft.plans.GraftExtensions.install(spark)
     val packed = Tables.embeddings(spark, dir)
       .select(transform(col("embedding"),
         x => floor(x.cast("double") * 4096).cast("long")).as("qv"))
-      .agg(expr("vec_gram(qv)")).collect().head.getSeq[Long](0).toArray
+      .agg(kernel("vec_gram", col("qv"))).collect().head.getSeq[Long](0).toArray
     val (n, m) = PowerIteration.unpackGram(packed, 4096.0)
     val pairs = PowerIteration.topK(m, k)
     val trace = m.indices.map(i => m(i)(i)).sum

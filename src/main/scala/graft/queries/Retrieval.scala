@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, Tables}
+import graft.plans.GraftExtensions.kernel
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -226,7 +227,6 @@ object Retrieval {
     * bytes through the engine's largest exchange). */
   private[graft] def termWeights(dfreq: DataFrame, nDocs: Column,
       sumDl: Column): DataFrame = {
-    graft.plans.GraftExtensions.install(dfreq.sparkSession)
     dfreq
       .withColumn("x",
         lit(1.0) + ((nDocs - col("df")).cast("double") + lit(0.5)) /
@@ -254,7 +254,7 @@ object Retrieval {
     * (SortedFoldsSpec pins rank fold ≡ term fold ≡ interpreted,
     * bit-for-bit) — and n_terms. */
   private[graft] def scoreFold: Seq[Column] = Seq(
-    call_function("rank_contrib_fold",
+    kernel("rank_contrib_fold",
       collect_list(struct(col("r"), col("c")))).as("score"),
     count(lit(1)).as("n_terms"))
 

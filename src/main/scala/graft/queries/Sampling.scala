@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, Tables}
+import graft.plans.GraftExtensions.kernel
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -545,13 +546,12 @@ object Sampling {
   private val q69 = GraftQuery(
     "q69_importance_score",
     (spark, dir) => {
-      graft.plans.GraftExtensions.install(spark)
       val B = 4096
       val fb = Tables.documents(spark, dir)
         .filter(size(split(col("text"), " ")) >= 2)
         .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
         .select(col("doc_id"), col("source"),
-          explode(expr("word_shingles(text, 2, false)")).as("bg"))
+          explode(kernel("word_shingles", col("text"), lit(2), lit(false))).as("bg"))
         .select(col("doc_id"), col("source"),
           (Rand.u32(md5(concat(lit("dsir:"), col("bg")))) % B).as("bucket"))
         .localCheckpoint(eager = true)

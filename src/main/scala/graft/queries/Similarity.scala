@@ -3,6 +3,7 @@ package graft.queries
 import java.security.MessageDigest
 
 import graft.{GraftQuery, Tables}
+import graft.plans.GraftExtensions.kernel
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,9 +23,8 @@ object Similarity {
   /** Left-fold dot product — Spark side. Compiled (graft.plans.DotFold);
     * the higher-order `aggregate(zip_with(...))` spelling is bit-identical
     * but runs interpreted, which made pairwise cosines the engine's
-    * hotspot at sf0.1. Callers must have run GraftExtensions.install
-    * (normedVectors does). */
-  def dot(a: Column, b: Column): Column = call_function("dot_fold", a, b)
+    * hotspot at sf0.1. */
+  def dot(a: Column, b: Column): Column = kernel("dot_fold", a, b)
 
   /** Left-fold dot product — DuckDB side (same order, same IEEE ops). */
   def dotSql(a: String, b: String): String =
@@ -46,7 +46,6 @@ object Similarity {
     * do not live in a corpus dir (a query batch, an ingest epoch's
     * admitted slice). Expects (vec_id, label, embedding). */
   def normedVectorsOf(spark: SparkSession, embeddings: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.install(spark)
     val v = transform(col("embedding"), x => x.cast("double"))
     embeddings
       .select(col("vec_id"), col("label"), v.as("v"))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, Tables}
+import graft.plans.GraftExtensions.kernel
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -235,13 +236,12 @@ object Text {
   private val q24 = GraftQuery(
     "q24_bpe_tokens",
     (spark, dir) => {
-      graft.plans.GraftExtensions.install(spark)
       val pat = "'s|'t|'re|'ve|'m|'ll|'d| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 ]+"
       val toks = expr(s"regexp_extract_all(text, \"$pat\", 0)")
       // compiled per-char fold (plans/RollingHash) — the interpreted
       // aggregate(transform(sequence(...))) spelling walks every character
       // through a lambda per step
-      val roll = expr("rolling_hash(text)")
+      val roll = kernel("rolling_hash", col("text"))
       Tables.documents(spark, dir)
         .select(
           col("doc_id"),
@@ -280,12 +280,12 @@ object Text {
       // compiled trigram expression: the profile build walks every char of
       // the corpus, and the interpreted transform(sequence(...)) lambda
       // was ~all of q25's runtime (see plans/CharNgrams)
-      graft.plans.GraftExtensions.install(spark)
       val docs = Tables.documents(spark, dir)
         .filter(length(col("text")) >= 3)
         .select(col("doc_id"), col("lang"), col("text"))
       val profile = docs.filter(col("doc_id") % 10 < 8)
-        .select(col("lang"), explode(expr("char_ngrams(text, 3, false)")).as("t"))
+        .select(col("lang"),
+          explode(kernel("char_ngrams", col("text"), lit(3), lit(false))).as("t"))
         .groupBy("lang", "t").agg(count(lit(1)).as("n"))
         .withColumn("rk", row_number().over(
           Window.partitionBy("lang").orderBy(col("n").desc, col("t"))))
@@ -293,7 +293,7 @@ object Text {
         .select(col("lang").as("profile_lang"), col("t"))
       val scores = docs.filter(col("doc_id") % 10 >= 8)
         .select(col("doc_id"), col("lang"),
-          explode(expr("char_ngrams(text, 3, true)")).as("t"))
+          explode(kernel("char_ngrams", col("text"), lit(3), lit(true))).as("t"))
         .join(broadcast(profile), "t")
         .groupBy("doc_id", "lang", "profile_lang")
         .agg(count(lit(1)).as("score"))
@@ -368,7 +368,6 @@ object Text {
   private val q39 = GraftQuery(
     "q39_repetition_filters",
     (spark, dir) => {
-      graft.plans.GraftExtensions.install(spark)
       import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"), length(col("text")).as("tl"))
@@ -376,7 +375,7 @@ object Text {
       def counts(n: Int) = docs
         .filter(size(split(col("text"), " ")) >= n)
         .select(col("doc_id"), col("tl"),
-          explode(expr(s"word_shingles(text, $n, false)")).as("gram"))
+          explode(kernel("word_shingles", col("text"), lit(n), lit(false))).as("gram"))
         .groupBy(col("doc_id"), col("gram"))
         .agg(max(col("tl")).as("tl"), count(lit(1)).as("c"))
       // arg-max by (count, gram length): the most frequent gram, longest
@@ -400,7 +399,7 @@ object Text {
       val occ5 = docs
         .filter(size(split(col("text"), " ")) >= 5)
         .select(col("doc_id"), col("tl"),
-          posexplode(expr("word_shingles(text, 5, false)")).as(Seq("i", "gram")))
+          posexplode(kernel("word_shingles", col("text"), lit(5), lit(false))).as(Seq("i", "gram")))
       val dupGrams = occ5.groupBy("doc_id", "gram")
         .agg(count(lit(1)).as("c")).filter(col("c") > 1)
         .select("doc_id", "gram")
@@ -606,11 +605,10 @@ object Text {
   private val q54 = GraftQuery(
     "q54_boilerplate_grams",
     (spark, dir) => {
-      graft.plans.GraftExtensions.install(spark)
       Tables.documents(spark, dir)
         .filter(size(split(col("text"), " ")) >= 5)
         .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-        .select(explode(expr("word_shingles(text, 5)")).as("gram"))
+        .select(explode(kernel("word_shingles", col("text"), lit(5))).as("gram"))
         .groupBy("gram").agg(count(lit(1)).as("df"))
         .orderBy(col("df").desc, col("gram")).limit(50)
     },
@@ -771,7 +769,6 @@ object Text {
   private val q89 = GraftQuery(
     "q89_lm_familiarity",
     (spark, dir) => {
-      graft.plans.GraftExtensions.install(spark)
       val bigrams = Tables.documents(spark, dir)
         .select(col("doc_id"), split(col("text"), " ").as("toks"))
         .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
@@ -796,7 +793,7 @@ object Text {
           // compiled ordered fold — same sorted order, same IEEE adds as
           // aggregate(array_sort(...)); the interpreted HOF paid a lambda
           // frame per bigram (round-20 optimization, SCALING.md round 20)
-          call_function("sorted_sum_fold", collect_list(col("p"))).as("psum"))
+          kernel("sorted_sum_fold", collect_list(col("p"))).as("psum"))
         .select(col("doc_id"), col("n_bigrams"), col("n_oov"),
           (col("n_oov").cast("double") / col("n_bigrams")).as("oov_rate"),
           (col("psum") / col("n_bigrams")).as("familiarity"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType,
   StructField, StructType}
 
+import graft.plans.GraftExtensions.kernel
 import graft.queries.Dedup
 
 /** PERSISTED MinHash BAND index — the FOURTH persisted family, closing
@@ -255,12 +256,11 @@ object BandIndex {
   def nearDupsFor(spark: SparkSession, table: String,
       corpusDocs: DataFrame, queryDocs: DataFrame): DataFrame = {
     import spark.implicits._
-    graft.plans.GraftExtensions.install(spark)
     val banding @ (shingle, hashes, bands) =
       bandingOf(StoreFamily.open(Family, spark, table))
     val shq = Dedup.shinglesOf(queryDocs.select(col("doc_id"), col("text")),
         shingle)
-      .withColumn("sigs", expr(s"minhash_sigs(sh, $hashes)"))
+      .withColumn("sigs", kernel("minhash_sigs", col("sh"), lit(hashes)))
       .select(col("doc_id"), col("sh"),
         Dedup.bandSigsOf(col("sigs"), bands, hashes / bands).as("bsigs"))
       .collect().toSeq

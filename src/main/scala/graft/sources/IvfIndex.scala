@@ -9,6 +9,7 @@ import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.plans.DotFold
 import graft.queries.Similarity
+import graft.plans.GraftExtensions.kernel
 
 /** PERSISTED IVF index — the third index family, closing the serving
   * symmetry for q37's coarse-quantized ANN the way [[AnnIndex]] closed
@@ -116,7 +117,7 @@ object IvfIndex {
         Similarity.int8Scale(col("qv"))))
       .withColumn("aqnrm", sqrt(Similarity.dot(col("aqv"), col("aqv"))))
     def scoreOf: Column =
-      call_function("dot_fold_i8", col("qv"), col("aqv")) /
+      kernel("dot_fold_i8", col("qv"), col("aqv")) /
         (col("aqnrm") * col("qnrm"))
   }
 
@@ -300,7 +301,6 @@ object IvfIndex {
     * dedup. */
   private def probe(st: Storage, spark: SparkSession, table: String,
       anchors: DataFrame, k: Int, nProbe: Int): DataFrame = {
-    if (st.sq) graft.plans.GraftExtensions.install(spark)
     requireStorage(st, table, StoreFamily.open(Family, spark, table))
     // (query_id, qv, qnrm[, the SQ payload])
     val queries = st.query(anchors

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.plans.GraftExtensions.kernel
+
 /** Streaming benchmark DECONTAMINATION — the stream-side twin of batch
   * q29 (and of the q124 composite's stage 5): documents arriving on a
   * stream are checked for 8-token n-gram overlap against a STATIC
@@ -76,22 +78,20 @@ object DecontamStream {
     * callers who may not have gone through [[benchmarkGrams]]. The
     * distinct is a no-op exchange-wise when the input already is
     * ([[benchmarkGrams]] output is both distinct and materialized). */
-  def verdictsBatch(docs: DataFrame, benchGrams: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    graft.plans.GraftExtensions.install(spark)
+  def verdictsBatch(docs: DataFrame, benchGrams: DataFrame): DataFrame =
     docs
       // collapse same-batch duplicate deliveries; the doc_id exchange is
       // reused by the verdict regroup below (one stream shuffle total)
       .dropDuplicates("doc_id")
       // word_shingles yields [] below 8 tokens; explode_outer keeps the
       // doc as a NULL-gram row so short docs still get a clean verdict
-      .select(col("doc_id"), explode_outer(expr("word_shingles(text, 8)")).as("gram"))
+      .select(col("doc_id"),
+        explode_outer(kernel("word_shingles", col("text"), lit(8))).as("gram"))
       .join(benchGrams.select("gram").distinct().withColumn("hit", lit(1)),
         Seq("gram"), "left")
       .groupBy("doc_id")
       .agg(count(col("hit")).as("n_shared"))
       .withColumn("contaminated", col("n_shared") > 0)
-  }
 
   /** (doc_id, text) stream → per-batch verdict frames delivered to
     * `emit` (the MixStream writer shape).

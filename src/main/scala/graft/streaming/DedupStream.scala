@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.plans.GraftExtensions.kernel
+import graft.queries.Dedup
+
 /** Streaming MinHash near-dup detection — documents arriving on a stream
   * are checked against the accumulated corpus WITHOUT re-scanning it: the
   * stateful streaming twin of batch q30 (SURVEY §2.9 generalization; the
@@ -106,28 +109,19 @@ object DedupStream {
   }
 
   /** Narrow map: (doc_id, text) → 12 minhash signatures. Works on batch
-    * and streaming frames alike (pure deterministic expressions). */
-  def signatures(docs: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.install(docs.sparkSession)
-    val toks = split(col("text"), " ")
-    docs
-      .filter(size(toks) >= 3)
-      .select(col("doc_id"), expr("word_shingles(text, 3)").as("sh"))
-      .select(col("doc_id"), expr("minhash_sigs(sh, 12)").as("sigs"))
-  }
+    * and streaming frames alike (pure deterministic expressions); the
+    * shingles are q30's ([[Dedup.shinglesOf]]). */
+  def signatures(docs: DataFrame): DataFrame =
+    Dedup.shinglesOf(docs, 3)
+      .select(col("doc_id"), kernel("minhash_sigs", col("sh"), lit(12)).as("sigs"))
 
-  /** Explode each signature vector into its 4 banded bucket rows — md5 of
-    * 3 consecutive signatures per band, byte-identical to the batch q30
-    * banding. */
+  /** Explode each signature vector into its 4 banded bucket rows — q30's
+    * band signatures ([[Dedup.bandSigsOf]]: md5 of 3 consecutive
+    * signatures per band). */
   def bandRows(sigs: DataFrame): Dataset[BandRow] = {
     import sigs.sparkSession.implicits._
-    val bandCols = (0 until 4).map(b =>
-      md5(concat(
-        element_at(col("sigs"), 3 * b + 1),
-        element_at(col("sigs"), 3 * b + 2),
-        element_at(col("sigs"), 3 * b + 3))))
     sigs
-      .select(col("doc_id"), col("sigs"), posexplode(array(bandCols: _*)))
+      .select(col("doc_id"), col("sigs"), posexplode(Dedup.bandSigsOf(col("sigs"), 4, 3)))
       .toDF("doc_id", "sigs", "band", "bucket")
       .select(col("band").cast("int").as("band"), col("bucket"),
         col("doc_id"), col("sigs"))

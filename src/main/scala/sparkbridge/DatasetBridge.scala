@@ -24,5 +24,8 @@ object DatasetBridge {
     * session where no extension was installed. */
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
-  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  /** The expression `c` spells, converted now (not deferred to the
+    * Dataset it lands in), so a literal argument reaches a node builder
+    * as a foldable [[org.apache.spark.sql.catalyst.expressions.Literal]]. */
+  def expression(c: Column): Expression = classic.ColumnNodeToExpressionConverter(c.node)
 }

@@ -59,6 +59,16 @@ class SpanConverterSpec extends SparkSpec {
     }
   }
 
+  test("a parameter carrying a numeric entity outside Unicode converts") {
+    val rec = SpanConverter.recordOf("t", "s", None, Seq(SpanMessage("assistant",
+      "<tool_use><tool_name>w</tool_name><parameter><q>a &#x110000; b</q>" +
+        "</parameter></tool_use>")), None)
+    val calls = rec.messages.flatMap(_.tool_calls)
+    assert(calls.size == 1, rec.messages)
+    assert(calls.head.contains("\uFFFD") || calls.head.toLowerCase.contains("\\ufffd"),
+      calls.head)
+  }
+
   test("finish_reason reflects output tool calls") {
     import spark.implicits._
     val byReason = records.map(r => (r.finish_reason, r.span_id)).collect()

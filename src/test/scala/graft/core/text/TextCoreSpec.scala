@@ -33,6 +33,18 @@ class TextCoreSpec extends AnyFunSuite {
     assert(p == Vector("a" -> "1", "b" -> "x & y"))
   }
 
+  test("numeric entities outside Unicode become U+FFFD; decimal takes digits only") {
+    val bad = "\uFFFD"
+    Seq("&#x110000;", "&#99999999999;", "&#xFFFFFFFFFFFF;", "&#0;", "&#x0;",
+        "&#xD800;", "&#57343;").foreach { e =>
+      assert(NexXml.htmlUnescape(s"a${e}b") == s"a${bad}b", e)
+    }
+    assert(NexXml.htmlUnescape("&#1a;") == "&#1a;")
+    assert(NexXml.htmlUnescape("&#x10FFFF;&#0065;&#x1F600;") ==
+      new String(Character.toChars(0x10FFFF)) + "A" + "\uD83D\uDE00")
+    assert(NexXml.parseParams("<q>x &#x110000; y</q>") == Vector("q" -> s"x $bad y"))
+  }
+
   test("plain text falls back to content param") {
     assert(NexXml.parseParams("  hello ") == Vector("content" -> "hello"))
     assert(NexXml.parseParams("   ") == Vector.empty)

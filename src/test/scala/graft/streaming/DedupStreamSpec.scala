@@ -51,6 +51,17 @@ class DedupStreamSpec extends SparkSpec {
     query.stop()
   }
 
+  test("the stream's band rows are the batch LSH band rows") {
+    import spark.implicits._
+    val docs = graft.Tables.documents(spark, sfDir).select("doc_id", "text")
+    val streamed = DedupStream.bandRows(DedupStream.signatures(docs))
+      .select("band", "bucket", "doc_id").as[(Int, String, Long)].collect().sorted
+    val batch = graft.queries.Dedup.bandRowsOn(spark, docs)
+      .select("band", "sig", "doc_id").as[(Int, String, Long)].collect().sorted
+    assert(streamed.nonEmpty)
+    assert(streamed.toSeq == batch.toSeq)
+  }
+
   test("re-delivered documents within the cap do not re-emit pairs") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
